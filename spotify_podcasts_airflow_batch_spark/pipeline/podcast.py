@@ -9,6 +9,13 @@ Here each Airflow task is a plan stage over DataFrames; orchestration
 is just function calls (any scheduler can invoke ``run_daily`` /
 ``run_backfill``). External fetch/upload are pluggable boundaries —
 the engine's job is everything between them, distributed.
+
+``run_daily`` builds the chart plan once: the reference's
+raise-on-mismatch check (``spotify_eps.py:210-212``) is an
+``assert_true`` inside the publishing write's own plan, not a separate
+action that re-runs scan, top-k and enrich before the write runs them
+again. A mismatching row fails the write job, and the commit protocol
+then discards its staging output, so nothing is published.
 """
 
 from __future__ import annotations
@@ -16,6 +23,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,6 +34,8 @@ from spotify_podcasts_airflow_batch_spark.sinks.writers import (
     write_daily_partitioned,
 )
 from spotify_podcasts_airflow_batch_spark.sources.readers import table
+
+MISMATCH_MESSAGE = "enrichment mismatch: joined dimension attributes disagree"
 
 
 @dataclass
@@ -75,21 +85,41 @@ class PodcastPipeline:
         return joined
 
     def assert_no_mismatch(self, enriched: DataFrame) -> int:
-        """The reference raises on any episodeName != name row
-        (spotify_eps.py:210-212). Distributed: one aggregate, raise on
-        a nonzero count. Returns the mismatch count for auditing."""
+        """Audit-only existence probe for the reference's
+        ``episodeName != name`` rows (spotify_eps.py:210-212): 1 if the
+        frame has at least one flagged row, else 0. It raises nothing
+        and is not a count. It runs the whole enrich plan as its own
+        action, so the pipeline does not call it; ``write_daily``
+        enforces the check inside the write instead."""
         n = enriched.where(F.col("__mismatch")).limit(1).count()
         return n
 
     # -- stage 3: daily snapshot write (≍ upload_to_s3 per day)
     def write_daily(self, enriched: DataFrame) -> None:
-        write_daily_partitioned(
-            enriched.drop("__mismatch").withColumnRenamed(
-                "chart_date", "snapshot_date"
-            ),
-            self.charts_path,
-            partition_col="snapshot_date",
+        """Publish the enriched charts, raising ``ValueError`` if any
+        row is flagged ``__mismatch``. The check is an ``assert_true``
+        in the write's own plan, so the frame is evaluated once; a
+        flagged row fails the write job, and dynamic partition
+        overwrite then discards the job's staging output, so no
+        partition is replaced."""
+        guarded = (
+            enriched.where(
+                F.assert_true(~F.col("__mismatch"), MISMATCH_MESSAGE).isNull()
+            )
+            .drop("__mismatch")
+            .withColumnRenamed("chart_date", "snapshot_date")
         )
+        try:
+            write_daily_partitioned(
+                guarded, self.charts_path, partition_col="snapshot_date"
+            )
+        except SparkRuntimeException as e:
+            if (
+                e.getCondition() == "USER_RAISED_EXCEPTION"
+                and MISMATCH_MESSAGE in str(e)
+            ):
+                raise ValueError(MISMATCH_MESSAGE) from e
+            raise
 
     # -- stage 4: union + consolidated CSV (≍ union_parquet_files)
     def consolidate(self) -> str:
@@ -102,12 +132,11 @@ class PodcastPipeline:
 
     # -- orchestration entry points
     def run_daily(self) -> str:
-        charts = self.build_charts()
-        enriched = self.enrich(charts)
-        if self.assert_no_mismatch(enriched):
-            raise ValueError(
-                "enrichment mismatch: joined dimension attributes disagree"
-            )
+        """Chart build → enrich → guarded daily write → consolidated
+        CSV → Kaggle sink, in one pass over the chart plan. A mismatch
+        raises ``ValueError`` from ``write_daily`` before anything is
+        published, and the later stages never run."""
+        enriched = self.enrich(self.build_charts())
         self.write_daily(enriched)
         csv = self.consolidate()
         if self.kaggle_sink is not None:
@@ -117,7 +146,10 @@ class PodcastPipeline:
     def run_backfill(self, start_date: str, end_date: str) -> None:
         """Recompute a date range (≍ spotify_eps_backfill_dag params).
         Dynamic partition overwrite makes re-runs idempotent — only
-        the targeted dates' partitions are replaced."""
+        the targeted dates' partitions are replaced. The mismatch
+        validation runs as in ``run_daily`` (the reference's backfill
+        DAG merges and validates the same way): ``write_daily`` raises
+        ``ValueError`` and replaces no partition, at no extra job."""
         charts = self.build_charts().where(
             F.col("chart_date").between(start_date, end_date)
         )

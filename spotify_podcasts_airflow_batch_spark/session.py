@@ -14,6 +14,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def prefer_sort_merge_join() -> str:
+    """``SPARK_GRAFT_PREFER_SMJ`` as Spark's boolean conf value:
+    ``true``/``false`` in any case (default ``true``); anything else
+    raises here instead of failing later at query planning."""
+    raw = os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true")
+    value = raw.lower()
+    if value not in ("true", "false"):
+        raise ValueError(
+            f"SPARK_GRAFT_PREFER_SMJ must be 'true' or 'false', got {raw!r}"
+        )
+    return value
+
+
 def get_spark(
     app_name: str = "spotify-podcasts-spark",
     shuffle_partitions: int | None = None,
@@ -46,15 +59,13 @@ def get_spark(
         # may pick ShuffledHashJoin where one side builds a per-partition
         # hash table that fits (skipping both sorts). Env-parameterized
         # for A/B measurement; the shipped default stays Spark's
-        # sort-merge preference — see OPTIMIZATION_r11.md for the
-        # round-11 interleaved A/B over the SMJ-bearing headline
-        # queries, and sort-merge's graceful spill is the safer default
-        # for 100 TB fact-fact joins where a skewed build-side
-        # partition would OOM a shuffled-hash build.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
+        # sort-merge preference. No A/B over the SMJ-bearing headline
+        # queries has been recorded yet (VERDICT.md, round 11; the
+        # round's per-query walls are in PERF_r11.json). Sort-merge's
+        # graceful spill is the safer default for 100 TB fact-fact
+        # joins, where a skewed build-side partition would OOM a
+        # shuffled-hash build.
+        .config("spark.sql.join.preferSortMergeJoin", prefer_sort_merge_join())
         # 128 MB input splits — the parquet-side knob that keeps scan
         # tasks right-sized as files grow.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

@@ -343,8 +343,9 @@ def test_bm25_single_text_scan(spark, sf_dir):
     for dl/st/tf/dfc: 4 full-text scans,
     plans/r11/bm25_search_before.txt). The pre-round-11 no-persist
     rationale (a 0.20 s rejection of caching the dl rollup) applied to
-    the old multi-branch shape and is superseded by the interleaved
-    A/B in OPTIMIZATION_r11.md (-8% plus 3 fewer corpus reads)."""
+    the old multi-branch shape and is superseded by the 4→1 corpus
+    scan cut recorded in VERDICT.md (round 11; the round's per-query
+    walls are in PERF_r11.json)."""
     plan = plan_of(spark, sf_dir, "bm25_search")
     assert "InMemoryTableScan" in plan
     # exactly one parquet scan reads the corpus text: the FORMATTED
