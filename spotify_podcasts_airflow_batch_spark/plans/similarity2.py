@@ -12,6 +12,8 @@ recall dashboard, not a unit test.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -937,33 +939,68 @@ def pq_adc_ann_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_sub_dist(v, c, m):
-    # left-associated 8-term squared L2 over subspace m (m is a
-    # Column); mirrors the oracle's generated term order exactly
-    d = None
-    for j in range(_PQ_SUB):
-        idx = m * _PQ_SUB + F.lit(j + 1)
-        t = F.element_at(v, idx).cast("double") - F.element_at(
-            c, idx
-        ).cast("double")
-        d = t * t if d is None else d + t * t
-    return d
+# PQ constants and per-row PQ expressions are Spark SQL text parsed by
+# ONE F.expr call each: built node by node through the Column DSL, the
+# same trees cost one Py4J round trip per node (~1,000 per codebook,
+# ~5,700 per served query). tests/test_pq.py proves with sameSemantics
+# that the text parses to the tree the DSL built (same literal types,
+# same left-associated term order). Lambda variables are pq_-prefixed
+# so they cannot shadow a column.
+
+
+def _sql_literal(v) -> str:
+    """``v`` as a Spark SQL literal typed as ``F.lit(v)`` types it over
+    Py4J: a float is a DOUBLE (``repr`` round-trips exactly, and
+    ``-x.yD`` lexes as a negative literal, so -0.0 survives), an int
+    is INT when it fits in 32 bits, else BIGINT; lists nest as
+    ``array(...)``."""
+    if isinstance(v, list):
+        return "array(" + ", ".join(_sql_literal(x) for x in v) + ")"
+    if isinstance(v, float):
+        if not math.isfinite(v):
+            raise ValueError(f"no SQL literal for {v!r}")
+        return f"{float(v)!r}D"
+    if isinstance(v, int):
+        return str(v) if -(2**31) <= v < 2**31 else f"{v}L"
+    raise TypeError(f"no SQL literal for {type(v).__name__}")
+
+
+def _pq_sub_dist_sql() -> str:
+    """Left-associated 8-term squared L2 between ``embedding`` and the
+    centroid ``pq_c`` over subspace ``pq_m``; mirrors the oracle's
+    term order exactly."""
+    diffs = [
+        f"(CAST(element_at(embedding, pq_m * {_PQ_SUB} + {j}) AS DOUBLE)"
+        f" - CAST(element_at(pq_c, pq_m * {_PQ_SUB} + {j}) AS DOUBLE))"
+        for j in range(1, _PQ_SUB + 1)
+    ]
+    return " + ".join(f"{d} * {d}" for d in diffs)
+
+
+_PQ_DISTS_SQL = f"transform(cbs, pq_c -> {_pq_sub_dist_sql()})"
+# codes[m] = first (lowest-id) argmin over the one-row ``cbs`` codebook
+_PQ_CODES_SQL = (
+    f"transform(sequence(0, {_PQ_M - 1}), pq_m -> "
+    f"array_position({_PQ_DISTS_SQL}, array_min({_PQ_DISTS_SQL})) - 1)"
+)
+# adc[m][c] = round(subspace distance * 1e6) in BIGINT micro-units
+_PQ_ADC_SQL = (
+    f"transform(sequence(0, {_PQ_M - 1}), pq_m -> transform(cbs, pq_c -> "
+    f"CAST(round(({_pq_sub_dist_sql()}) * 1000000.0D, 0) AS BIGINT)))"
+)
+# score_u = Σ_m adc[m][codes[m]]
+_PQ_ADC_SCORE_SQL = (
+    f"aggregate(sequence(0, {_PQ_M - 1}), CAST(0 AS BIGINT), "
+    "(pq_acc, pq_m) -> pq_acc + element_at(element_at(adc, pq_m + 1), "
+    "CAST(element_at(codes, pq_m + 1) AS INT) + 1))"
+)
 
 
 def _pq_codes(emb, cb_row) -> DataFrame:
     """Projection encode: every vector's 8 subspace argmin codes
     against the one-row ``cbs`` codebook relation. Shuffle-free."""
-
-    def argmin_code(v, m):
-        dists = F.transform(F.col("cbs"), lambda c: _pq_sub_dist(v, c, m))
-        return F.array_position(dists, F.array_min(dists)) - 1
-
     return emb.crossJoin(cb_row).select(
-        "vec_id",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-            lambda m: argmin_code(F.col("embedding"), m),
-        ).alias("codes"),
+        "vec_id", F.expr(_PQ_CODES_SQL).alias("codes")
     )
 
 
@@ -972,31 +1009,14 @@ def _pq_adc_table(qdf, cb_row) -> DataFrame:
     ``qdf`` must expose (query_id, embedding)."""
     return F.broadcast(
         qdf.crossJoin(cb_row).select(
-            "query_id",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-                lambda m: F.transform(
-                    F.col("cbs"),
-                    lambda c: F.round(
-                        _pq_sub_dist(F.col("embedding"), c, m) * 1e6, 0
-                    ).cast("long"),
-                ),
-            ).alias("adc"),
+            "query_id", F.expr(_PQ_ADC_SQL).alias("adc")
         )
     )
 
 
 def _pq_adc_score():
     """score_u = Σ_m adc[m][codes[m]] — the exact integer ADC sum."""
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-        F.lit(0).cast("long"),
-        lambda acc, m: acc
-        + F.element_at(
-            F.element_at("adc", m + 1),
-            F.element_at("codes", m + 1).cast("int") + 1,
-        ),
-    )
+    return F.expr(_PQ_ADC_SCORE_SQL)
 
 
 def _pq_adc_topk(emb, emb_1t, cb_row) -> DataFrame:
@@ -1453,20 +1473,18 @@ def pq_sample_distortion(
 def _pq_trained_cb_row(spark: SparkSession, cents) -> DataFrame:
     """One-row codebook relation for the D24 encode machinery: the 16
     trained centroids re-assembled to full 64-dim vectors (subspace m
-    of centroid k = cents[m][k]) as a constant-folded literal array."""
+    of centroid k = cents[m][k]) as a constant-folded literal array.
+    The array is ONE SQL literal (``_sql_literal``): one Py4J round
+    trip, where a Column per value costs one each (~1,000)."""
     full = [
-        F.array(
-            *[
-                F.lit(cents[m][k][j])
-                for m in range(_PQ_M)
-                for j in range(_PQ_SUB)
-            ]
-        )
+        [cents[m][k][j] for m in range(_PQ_M) for j in range(_PQ_SUB)]
         # a corpus below _PQ_K seeds trains (and serves) fewer
         # centroids — see pq_train_codebook's LIMIT-bounded seeding
         for k in range(len(cents[0]))
     ]
-    return F.broadcast(spark.range(1).select(F.array(*full).alias("cbs")))
+    return F.broadcast(
+        spark.range(1).select(F.expr(_sql_literal(full)).alias("cbs"))
+    )
 
 
 @register("pq_trained_recall", oracle=None)  # rows-only: training-path twin
@@ -1953,11 +1971,6 @@ def _ivfpq_encoded(
         e = table(spark, sf_dir, "embeddings", fan_out="force").select(
             "vec_id", "embedding"
         )
-
-    def argmin_code(v, m):
-        dists = F.transform(F.col("cbs"), lambda c: _pq_sub_dist(v, c, m))
-        return F.array_position(dists, F.array_min(dists)) - 1
-
     # coarse cell via the Arrow GEMM kernel (√n cells × 64 dims per
     # row is too hot for the interpreted fold); the embedding passes
     # through the Arrow exchange losslessly, so the float PQ-code
@@ -1965,12 +1978,7 @@ def _ivfpq_encoded(
     # oracle's CASE chain — no float ever crosses an engine boundary
     assigned = ivf_assign_arrow(e, cells, emit="cell+vec")
     return assigned.crossJoin(cb_row).select(
-        "vec_id",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-            lambda m: argmin_code(F.col("embedding"), m),
-        ).alias("codes"),
-        "cell_id",
+        "vec_id", F.expr(_PQ_CODES_SQL).alias("codes"), "cell_id"
     )
 
 
@@ -2834,20 +2842,11 @@ def _rpq_train(spark: SparkSession, sf_dir: str) -> list:
 
 def _rpq_cb_row(spark: SparkSession, cents_u: list) -> DataFrame:
     """One-row broadcast relation rcbs[m][cid][j] of the trained
-    residual codebook constants."""
+    residual codebook constants, parsed from one SQL literal (see
+    ``_pq_trained_cb_row``)."""
     return F.broadcast(
         spark.range(1).select(
-            F.array(
-                *[
-                    F.array(
-                        *[
-                            F.array(*[F.lit(v) for v in cents_u[m][k]])
-                            for k in range(len(cents_u[m]))
-                        ]
-                    )
-                    for m in range(_PQ_M)
-                ]
-            ).alias("rcbs")  # rcbs[m][cid][j]
+            F.expr(_sql_literal(cents_u)).alias("rcbs")
         )
     )
 

@@ -152,10 +152,10 @@ def _ensure_scan_parallelism(
     return df
 
 
-# (groups, rows) per path — footer layout is immutable for the
-# driver-generated inputs, and re-probing per table() call would pay
-# file I/O three times per benched query
-_LAYOUT_CACHE: dict[str, tuple[int, int]] = {}
+# (row groups, rows, uncompressed row-group bytes) per path — footer
+# layout is immutable for the driver-generated inputs, and re-probing
+# per table() call would pay file I/O three times per benched query
+_LAYOUT_CACHE: dict[str, tuple[int, int, int]] = {}
 
 
 def read_parquet_many(

@@ -339,3 +339,51 @@ def test_removed_tombstones_trigger_rebuild(spark, sf_dir):
         tuple(r) for r in ivfpq_incremental_served(spark, sf_dir).collect()
     )
     assert after == before
+
+
+def _py4j_round_trips(spark, monkeypatch, build) -> int:
+    """Py4J commands the driver sends while ``build`` runs, not
+    counting object releases: those fire when Python's garbage
+    collector frees earlier JavaObjects, so their number depends on
+    what ran before. The thread's active session is set first because
+    every API call with one pays extra round trips to record its call
+    site."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = [0]
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent[0] += 1
+        return send(command, *args, **kwargs)
+
+    spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
+    with monkeypatch.context() as m:
+        m.setattr(client, "send_command", counting)
+        build()
+    return sent[0]
+
+
+def test_serve_and_append_py4j_budget(spark, sf_dir, store, monkeypatch):
+    """Building the serve frame and the append's encode frame, before
+    any action on them, stays within a fixed Py4J budget. The PQ
+    codebook and per-row PQ expressions are single SQL expressions
+    (570 round trips per serve, 101 per encode); built one Column node
+    per call they cost over 5,000 each."""
+    ivfpq_incremental_served(spark, sf_dir)  # first-call memo fills
+    serve = _py4j_round_trips(
+        spark, monkeypatch, lambda: ivfpq_incremental_served(spark, sf_dir)
+    )
+    cents, cells = _load_artifacts(store)
+    batch = _live_rows(spark, sf_dir).where(
+        F.col("vec_id") % _INC_WAVES == _INC_WAVES - 1
+    )
+    encode = _py4j_round_trips(
+        spark,
+        monkeypatch,
+        lambda: _ivfpq_encoded(
+            spark, "", cents=cents, cells=cells, emb=batch
+        ),
+    )
+    assert serve <= 1000, serve
+    assert encode <= 200, encode
