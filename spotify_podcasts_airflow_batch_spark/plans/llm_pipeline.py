@@ -1020,27 +1020,26 @@ def kmeans_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     failing, so the guard below raises before either can (ADVICE r5).
     Monotonicity (sse_u[i+1] <= sse_u[i]) is asserted in
     tests/test_pq.py's sibling, tests/test_kmeans_audit.py."""
+    # imported here: a module-level import would register similarity2's
+    # queries ahead of this module's, reordering the catalog
+    from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
+        _D2U_SQL,
+        _ivfpq_xu_of,
+        _means_u_sql,
+    )
+
     # persist: the quantized corpus feeds 4 sequential actions (seed
     # collect + one aggregate per Lloyd step) — without it each action
     # re-scans and re-quantizes (round 10; cleared by the caller's
     # clearCache between bench passes)
     e = table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.round(x * 1e6, 0).cast("long"),
-        ).alias("xu"),
+        "vec_id", _ivfpq_xu_of(F.col("embedding")).alias("xu")
     ).persist()
     init = e.orderBy("vec_id").limit(_KMEANS_K).collect()
     if not init:
         return spark.createDataFrame([], "iter int, sse_u bigint")
     init.sort(key=lambda r: r.vec_id)
     cents_u = [[int(v) for v in r.xu] for r in init]
-    d2u = F.aggregate(
-        F.zip_with("xu", "cu", lambda x, c: (x - c) * (x - c)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     out: list[tuple[int, int]] = []
     for i in range(_KMEANS_ITERS + 1):
         cdf = spark.createDataFrame(
@@ -1049,7 +1048,7 @@ def kmeans_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assigned = (
             e.join(F.broadcast(cdf))
-            .withColumn("__d2u", d2u)
+            .withColumn("__d2u", F.expr(_D2U_SQL))
             .groupBy("vec_id")
             .agg(
                 F.min(
@@ -1086,10 +1085,7 @@ def kmeans_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("d2u").alias("sse_part"),
                 F.count(F.lit(1)).alias("n"),
                 *guard_aggs,
-                *[
-                    F.expr(f"sum(xu[{j}]) div count(1)").alias(f"c{j}")
-                    for j in range(_EMBED_DIMS)
-                ],
+                F.expr(_means_u_sql(_EMBED_DIMS)).alias("cu"),
             ).collect()
             if i == 0:
                 # Overflow guard: Σd2u over the corpus is bounded by
@@ -1112,10 +1108,7 @@ def kmeans_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "corpus size"
                     )
             out.append((i, sum(int(r.sse_part) for r in per_cluster)))
-            got = {
-                r.cluster: [int(r[f"c{j}"]) for j in range(_EMBED_DIMS)]
-                for r in per_cluster
-            }
+            got = {r.cluster: [int(v) for v in r.cu] for r in per_cluster}
             cents_u = [
                 got.get(k, cents_u[k]) for k in range(_KMEANS_K)
             ]

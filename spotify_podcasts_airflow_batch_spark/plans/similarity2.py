@@ -995,6 +995,90 @@ _PQ_ADC_SCORE_SQL = (
     "CAST(element_at(codes, pq_m + 1) AS INT) + 1))"
 )
 
+# The integer-Lloyd core every trainer shares (PQ, residual PQ, IVF
+# cells, kmeans_audit): BIGINT micro-units throughout, so the unrolled
+# SQL twins reproduce each fixed point bit for bit.
+# d2u = Σ (xu - cu)² — exact integer squared L2
+_D2U_SQL = (
+    "aggregate(zip_with(xu, cu, (pq_x, pq_c) -> (pq_x - pq_c) * (pq_x - pq_c)),"
+    " CAST(0 AS BIGINT), (pq_acc, pq_v) -> pq_acc + pq_v)"
+)
+# (m, xu): the quantized vector ``vu`` cut into its _PQ_M subvectors
+_PQ_SUBSPACES_SQL = (
+    f"posexplode(transform(sequence(0, {_PQ_M - 1}), pq_m -> "
+    f"slice(vu, pq_m * {_PQ_SUB} + 1, {_PQ_SUB}))) AS (m, xu)"
+)
+
+
+def _means_u_sql(dims: int) -> str:
+    """Per-group centroid of ``xu``: truncating integer division per
+    dim, the twin of DuckDB's ``//``."""
+    return (
+        "array("
+        + ", ".join(f"sum(xu[{j}]) div count(1)" for j in range(dims))
+        + ")"
+    )
+
+
+def _lloyd_update_u(assigned: DataFrame, keys: list[str], dims: int) -> dict:
+    """One Lloyd update over ``assigned`` (``keys``…, xu): {(key
+    values…): centroid} for each non-empty cluster. Empty clusters are
+    absent, so callers keep their previous centroid."""
+    rows = (
+        assigned.groupBy(*keys)
+        .agg(F.expr(_means_u_sql(dims)).alias("cu"))
+        .collect()
+    )
+    return {tuple(r)[:-1]: [int(v) for v in r.cu] for r in rows}
+
+
+def _pq_cents_df(spark: SparkSession, cents_u: list) -> DataFrame:
+    """(m, cid, cu) rows of a per-subspace codebook cents_u[m][cid]."""
+    return spark.createDataFrame(
+        [(m, k, c) for m, cm in enumerate(cents_u) for k, c in enumerate(cm)],
+        "m int, cid int, cu array<bigint>",
+    )
+
+
+def _pq_lloyd_u(
+    spark: SparkSession, seeds: DataFrame, sample: DataFrame, iters: int
+) -> list:
+    """Per-subspace integer Lloyd over quantized (vec_id, vu) frames:
+    seeds = the _PQ_K lowest vec_ids of ``seeds`` (fewer on a tinier
+    corpus — the SQL twin's LIMIT-bounded seedv), assignment = integer
+    d2u argmin with lowest-cid ties (min(struct(d2u, cid))), update =
+    ``_lloyd_update_u``. Returns cents_u[m][cid][j]; [] without seeds."""
+    init = seeds.orderBy("vec_id").limit(_PQ_K).collect()
+    if not init:
+        return []
+    init.sort(key=lambda r: r.vec_id)
+    cents_u = [
+        [[int(v) for v in r.vu[m * _PQ_SUB : (m + 1) * _PQ_SUB]] for r in init]
+        for m in range(_PQ_M)
+    ]
+    # sample-sized and consumed once per Lloyd iteration — the
+    # persist-pays regime (recomputation repeats the corpus scan +
+    # explode every iteration)
+    sub = sample.select("vec_id", F.expr(_PQ_SUBSPACES_SQL)).persist()
+    for _ in range(iters):
+        assigned = (
+            sub.join(F.broadcast(_pq_cents_df(spark, cents_u)), "m")
+            .withColumn("__d2u", F.expr(_D2U_SQL))
+            .groupBy("vec_id", "m")
+            .agg(
+                F.min(F.struct(F.col("__d2u"), F.col("cid"))).alias("__b"),
+                F.first("xu").alias("xu"),
+            )
+            .select("m", F.col("__b.cid").alias("cid"), "xu")
+        )
+        got = _lloyd_update_u(assigned, ["m", "cid"], _PQ_SUB)
+        cents_u = [
+            [got.get((m, k), c) for k, c in enumerate(cents_u[m])]
+            for m in range(_PQ_M)
+        ]
+    sub.unpersist()
+    return cents_u
+
 
 def _pq_codes(emb, cb_row) -> DataFrame:
     """Projection encode: every vector's 8 subspace argmin codes
@@ -1318,156 +1402,17 @@ def pq_train_codebook(
     always runs on a fixed-size sample — the full corpus only ever
     sees the frozen codebook. Returned floats are cu/1e6, an exact
     double both engines derive identically. ``emb`` overrides the
-    corpus relation (the OPQ path trains on its rotated view)."""
+    corpus relation (the OPQ path trains on its rotated view). The
+    loop itself is ``_pq_lloyd_u``."""
     if emb is None:
         emb = table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
-    sub = (
-        emb.where(F.col("vec_id") % _PQ_TRAIN_MOD == 0)
-        .select(
-            "vec_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-                    lambda m: F.transform(
-                        F.slice(
-                            F.col("embedding").cast("array<double>"),
-                            m * _PQ_SUB + 1,
-                            _PQ_SUB,
-                        ),
-                        lambda x: F.round(x * 1e6, 0).cast("long"),
-                    ),
-                )
-            ).alias("m", "xu"),
-        )
-        # sample-sized and consumed once per Lloyd iteration — the
-        # persist-pays regime (recomputation repeats the corpus scan
-        # + explode every iteration)
-        .persist()
+    vu = emb.select("vec_id", _ivfpq_xu_of(F.col("embedding")).alias("vu"))
+    cents_u = _pq_lloyd_u(
+        spark, vu, vu.where(F.col("vec_id") % _PQ_TRAIN_MOD == 0), iters
     )
-    init = (
-        emb.orderBy("vec_id")
-        .limit(_PQ_K)
-        .select(
-            "vec_id",
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda x: F.round(x * 1e6, 0).cast("long"),
-            ).alias("vu"),
-        )
-        .collect()
-    )
-    init.sort(key=lambda r: r.vec_id)
-    cents_u = [
-        [
-            [int(r.vu[m * _PQ_SUB + j]) for j in range(_PQ_SUB)]
-            for r in init
-        ]
-        for m in range(_PQ_M)
-    ]
-    if not init:
-        # empty embeddings table: no seeds to train from
-        sub.unpersist()
-        return []
-    d2u = F.aggregate(
-        F.zip_with("xu", "cu", lambda x, c: (x - c) * (x - c)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    for _ in range(iters):
-        cdf = spark.createDataFrame(
-            [
-                (m, k, cents_u[m][k])
-                for m in range(_PQ_M)
-                # len(cents_u[m]) == _PQ_K whenever the corpus has at
-                # least _PQ_K seed rows; a tinier corpus seeds (and
-                # keeps) fewer centroids — matching the SQL twin's
-                # LIMIT-bounded seedv (the D44 corpus<k degenerate)
-                for k in range(len(cents_u[m]))
-            ],
-            "m int, cid int, cu array<bigint>",
-        )
-        upd = (
-            sub.join(F.broadcast(cdf), "m")
-            .withColumn("__d2u", d2u)
-            .groupBy("vec_id", "m")
-            .agg(
-                F.min(F.struct(F.col("__d2u"), F.col("cid"))).alias("__b"),
-                F.first("xu").alias("xu"),
-            )
-            .select("m", F.col("__b.cid").alias("cid"), "xu")
-            .groupBy("m", "cid")
-            .agg(
-                *[
-                    # truncating integer division — DuckDB's // twin
-                    F.expr(f"sum(xu[{j}]) div count(1)").alias(f"c{j}")
-                    for j in range(_PQ_SUB)
-                ]
-            )
-            .collect()
-        )
-        got = {
-            (r.m, r.cid): [int(r[f"c{j}"]) for j in range(_PQ_SUB)]
-            for r in upd
-        }
-        cents_u = [
-            [
-                got.get((m, k), cents_u[m][k])
-                for k in range(len(cents_u[m]))
-            ]
-            for m in range(_PQ_M)
-        ]
-    sub.unpersist()
-    return [
-        [
-            [cu / 1e6 for cu in cents_u[m][k]]
-            for k in range(len(cents_u[m]))
-        ]
-        for m in range(_PQ_M)
-    ]
-
-
-def pq_sample_distortion(
-    spark: SparkSession, sf_dir: str, cents: list[list[list[float]]]
-) -> float:
-    """Mean squared quantization error of the training sample under a
-    codebook — the quantity Lloyd iterations monotonically reduce
-    (asserted in tests/test_pq.py)."""
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    sub = emb.where(F.col("vec_id") % _PQ_TRAIN_MOD == 0).select(
-        "vec_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-                lambda m: F.slice(
-                    F.col("embedding").cast("array<double>"),
-                    m * _PQ_SUB + 1,
-                    _PQ_SUB,
-                ),
-            )
-        ).alias("m", "sv"),
-    )
-    cdf = spark.createDataFrame(
-        [(m, k, cents[m][k]) for m in range(_PQ_M) for k in range(_PQ_K)],
-        "m int, cid int, cvec array<double>",
-    )
-    d2 = F.aggregate(
-        F.zip_with("sv", "cvec", lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    row = (
-        sub.join(F.broadcast(cdf), "m")
-        .withColumn("__d2", d2)
-        .groupBy("vec_id", "m")
-        .agg(F.min("__d2").alias("md"))
-        .groupBy("vec_id")
-        .agg(F.sum("md").alias("vd"))
-        .agg(F.avg("vd").alias("d"))
-        .collect()[0]
-    )
-    return float(row.d)
+    return [[[cu / 1e6 for cu in ck] for ck in cm] for cm in cents_u]
 
 
 def _pq_trained_cb_row(spark: SparkSession, cents) -> DataFrame:
@@ -1616,15 +1561,11 @@ def ivf_train_cells(
         emb = table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
-    xu = F.transform(
-        F.col("embedding").cast("array<double>"),
-        lambda x: F.round(x * 1e6, 0).cast("long"),
-    )
     n = emb.count()
     init = (
         emb.orderBy("vec_id")
         .limit(ivf_n_cells(n))
-        .select("vec_id", xu.alias("xu"))
+        .select("vec_id", _ivfpq_xu_of(F.col("embedding")).alias("xu"))
         .collect()
     )
     if not init:
@@ -1642,23 +1583,12 @@ def ivf_train_cells(
         # distances, lowest-cell ties — see ivf_assign_arrow); the
         # interpreted fold was sample × cells × 64 element evals and
         # dominated the ×100 index build
-        upd = (
-            ivf_assign_arrow(sub, cents_u, emit="cell+xu")
-            .groupBy("cell_id")
-            .agg(
-                *[
-                    # truncating integer division — DuckDB's // twin
-                    F.expr(f"sum(xu[{j}]) div count(1)").alias(f"c{j}")
-                    for j in range(_EMBED_DIMS)
-                ]
-            )
-            .collect()
+        got = _lloyd_update_u(
+            ivf_assign_arrow(sub, cents_u, emit="cell+xu"),
+            ["cell_id"],
+            _EMBED_DIMS,
         )
-        got = {
-            r.cell_id: [int(r[f"c{j}"]) for j in range(_EMBED_DIMS)]
-            for r in upd
-        }
-        cents_u = [got.get(k, cents_u[k]) for k in range(len(cents_u))]
+        cents_u = [got.get((k,), c) for k, c in enumerate(cents_u)]
     sub.unpersist()
     return cents_u
 
@@ -2527,16 +2457,10 @@ def ivf_cell_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     e_1t = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
-    def xu_of(col):
-        return F.transform(
-            col.cast("array<double>"),
-            lambda x: F.round(x * 1e6, 0).cast("long"),
-        )
-
     seeded_rows = (
         e_1t.orderBy("vec_id")
         .limit(len(trained))
-        .select("vec_id", xu_of(F.col("embedding")).alias("xu"))
+        .select("vec_id", _ivfpq_xu_of(F.col("embedding")).alias("xu"))
         .collect()
     )
     seeded_rows.sort(key=lambda r: r.vec_id)
@@ -2760,82 +2684,15 @@ def _rpq_train(spark: SparkSession, sf_dir: str) -> list:
         return []
     # training sample filtered at the SCAN (inside the helper — a
     # .where() after the Arrow kernel would not push through)
-    sub = (
-        _rpq_residuals(
-            spark, sf_dir, where=F.col("vec_id") % _PQ_TRAIN_MOD == 0
-        )
-        .select(
-            "vec_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-                    lambda m: F.slice(
-                        F.col("ru"), m * _PQ_SUB + 1, _PQ_SUB
-                    ),
-                )
-            ).alias("m", "xu"),
-        )
-        .persist()
+    sample = _rpq_residuals(
+        spark, sf_dir, where=F.col("vec_id") % _PQ_TRAIN_MOD == 0
     )
-    init = (
-        res.orderBy("vec_id").limit(_PQ_K).select("vec_id", "ru").collect()
+    cents_u = _pq_lloyd_u(
+        spark,
+        res.select("vec_id", F.col("ru").alias("vu")),
+        sample.select("vec_id", F.col("ru").alias("vu")),
+        _PQ_TRAIN_ITERS,
     )
-    init.sort(key=lambda r: r.vec_id)
-    cents_u = [
-        [
-            [int(r.ru[m * _PQ_SUB + j]) for j in range(_PQ_SUB)]
-            for r in init
-        ]
-        for m in range(_PQ_M)
-    ]
-    d2u = F.aggregate(
-        F.zip_with("xu", "cu", lambda x, c: (x - c) * (x - c)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    for _ in range(_PQ_TRAIN_ITERS):
-        cdf = spark.createDataFrame(
-            [
-                (m, k, cents_u[m][k])
-                for m in range(_PQ_M)
-                # len(cents_u[m]) == _PQ_K whenever the corpus has at
-                # least _PQ_K seed rows; a tinier corpus seeds (and
-                # keeps) fewer centroids — matching the SQL twin's
-                # LIMIT-bounded seedv (the D44 corpus<k degenerate)
-                for k in range(len(cents_u[m]))
-            ],
-            "m int, cid int, cu array<bigint>",
-        )
-        upd = (
-            sub.join(F.broadcast(cdf), "m")
-            .withColumn("__d2u", d2u)
-            .groupBy("vec_id", "m")
-            .agg(
-                F.min(F.struct(F.col("__d2u"), F.col("cid"))).alias("__b"),
-                F.first("xu").alias("xu"),
-            )
-            .select("m", F.col("__b.cid").alias("cid"), "xu")
-            .groupBy("m", "cid")
-            .agg(
-                *[
-                    F.expr(f"sum(xu[{j}]) div count(1)").alias(f"c{j}")
-                    for j in range(_PQ_SUB)
-                ]
-            )
-            .collect()
-        )
-        got = {
-            (r.m, r.cid): [int(r[f"c{j}"]) for j in range(_PQ_SUB)]
-            for r in upd
-        }
-        cents_u = [
-            [
-                got.get((m, k), cents_u[m][k])
-                for k in range(len(cents_u[m]))
-            ]
-            for m in range(_PQ_M)
-        ]
-    sub.unpersist()
     _RPQ_CB_CACHE[key] = cents_u
     return cents_u
 
@@ -3480,18 +3337,12 @@ def mips_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e_1t = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
-    def xu_of(col):
-        return F.transform(
-            col.cast("array<double>"),
-            lambda x: F.round(x * 1e6, 0).cast("long"),
-        )
-
     probes = F.broadcast(
         e_1t.orderBy("vec_id")
         .limit(_PQ_NQ)
         .select(
             F.col("vec_id").alias("query_id"),
-            xu_of(F.col("embedding")).alias("__qu"),
+            _ivfpq_xu_of(F.col("embedding")).alias("__qu"),
         )
     )
     dot = F.aggregate(
@@ -3500,7 +3351,7 @@ def mips_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc, v: acc + v,
     )
     scored = (
-        probes.join(e.withColumn("__xu", xu_of(F.col("embedding"))))
+        probes.join(e.withColumn("__xu", _ivfpq_xu_of(F.col("embedding"))))
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", dot.alias("score_u"))
     )
@@ -3683,12 +3534,10 @@ def opq_train_perm(spark: SparkSession, sf_dir: str) -> list[int]:
     Integer second moments (same (xu·xu) // 1e6 expression as the
     oracle's oen CTE), rank desc with lowest-dim ties, snake-deal."""
     emb = table(spark, sf_dir, "embeddings").select("embedding")
-    xu = F.transform(
-        F.col("embedding").cast("array<double>"),
-        lambda x: F.round(x * 1e6, 0).cast("long"),
-    )
     rows = (
-        emb.select(F.posexplode(xu).alias("dim", "xu"))
+        emb.select(
+            F.posexplode(_ivfpq_xu_of(F.col("embedding"))).alias("dim", "xu")
+        )
         .groupBy("dim")
         .agg(F.sum(F.expr("(xu * xu) div 1000000")).alias("eu"))
         .collect()
@@ -3714,10 +3563,8 @@ def _opq_rotated(
     e = table(spark, sf_dir, "embeddings", fan_out=fan_out).select(
         "vec_id", "embedding"
     )
-    return e.select(
-        "vec_id",
-        F.array(*[F.col("embedding")[d] for d in perm]).alias("embedding"),
-    )
+    cols = ", ".join(f"embedding[{d}]" for d in perm)
+    return e.select("vec_id", F.expr(f"array({cols})").alias("embedding"))
 
 
 def opq_train_codebook_cached(spark: SparkSession, sf_dir: str) -> list:
@@ -3749,38 +3596,14 @@ def _pq_sample_distortion_u(
     (vec_id % _PQ_TRAIN_MOD) sample — the quantity the gate compares,
     bit-equal to the oracle's dist_id/dist_rot CTEs."""
     cents_u = _pq_cents_u_of(cents)
-    sub = emb.where(F.col("vec_id") % _PQ_TRAIN_MOD == 0).select(
-        "vec_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-                lambda m: F.transform(
-                    F.slice(
-                        F.col("embedding").cast("array<double>"),
-                        m * _PQ_SUB + 1,
-                        _PQ_SUB,
-                    ),
-                    lambda x: F.round(x * 1e6, 0).cast("long"),
-                ),
-            )
-        ).alias("m", "xu"),
-    )
-    cdf = spark.createDataFrame(
-        [
-            (m, k, cents_u[m][k])
-            for m in range(_PQ_M)
-            for k in range(_PQ_K)
-        ],
-        "m int, cid int, cu array<bigint>",
-    )
-    d2u = F.aggregate(
-        F.zip_with("xu", "cu", lambda x, c: (x - c) * (x - c)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
+    sub = (
+        emb.where(F.col("vec_id") % _PQ_TRAIN_MOD == 0)
+        .select("vec_id", _ivfpq_xu_of(F.col("embedding")).alias("vu"))
+        .select("vec_id", F.expr(_PQ_SUBSPACES_SQL))
     )
     row = (
-        sub.join(F.broadcast(cdf), "m")
-        .withColumn("__d2u", d2u)
+        sub.join(F.broadcast(_pq_cents_df(spark, cents_u)), "m")
+        .withColumn("__d2u", F.expr(_D2U_SQL))
         .groupBy("vec_id", "m")
         .agg(F.min("__d2u").alias("md"))
         .agg(F.coalesce(F.sum("md"), F.lit(0)).alias("du"))

@@ -11,12 +11,22 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     from spotify_podcasts_airflow_batch_spark.session import get_spark
 
-    s = get_spark("tests", shuffle_partitions=8)
+    # The warehouse dir is a static conf, fixed when the JVM starts. A
+    # per-session one keeps pytest processes sharing a checkout from
+    # deleting each other's managed tables in ./spark-warehouse.
+    warehouse = tmp_path_factory.mktemp("spark-warehouse")
+    submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv(
+            "PYSPARK_SUBMIT_ARGS",
+            f"--conf spark.sql.warehouse.dir={warehouse} {submit}",
+        )
+        s = get_spark("tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -17,9 +17,12 @@ from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
 from spotify_podcasts_airflow_batch_spark.plans.similarity4 import (
     _INC_TOMB_MOD,
     _INC_WAVES,
+    _emb,
     _load_artifacts,
+    _wave,
     ann_index_segments,
     ann_staleness_recall,
+    build_base_store,
     incremental_live_index,
     ivfpq_incremental_served,
     ivfpq_incremental_store,
@@ -387,3 +390,19 @@ def test_serve_and_append_py4j_budget(spark, sf_dir, store, monkeypatch):
     )
     assert serve <= 1000, serve
     assert encode <= 200, encode
+
+
+def test_cold_build_py4j_budget(spark, sf_dir, tmp_path, monkeypatch):
+    """The cold store build (PQ and coarse-cell training, encode,
+    write) stays within a fixed Py4J budget. Every trainer runs the
+    shared integer-Lloyd core, whose centroid update is one SQL
+    expression (~1,300 round trips per build); one aliased aggregate
+    per dimension cost over 4,700."""
+    base = _wave(_emb(spark, sf_dir, fan_out="force"), 0)
+    build_base_store(spark, sf_dir, base, str(tmp_path))  # warm the JVM
+    sent = _py4j_round_trips(
+        spark,
+        monkeypatch,
+        lambda: build_base_store(spark, sf_dir, base, str(tmp_path)),
+    )
+    assert sent <= 2000, sent

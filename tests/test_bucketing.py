@@ -18,8 +18,8 @@ from spotify_podcasts_airflow_batch_spark.sources.readers import table
 
 @pytest.fixture(scope="module")
 def bucketed_tables(spark, sf_dir):
-    # warehouse.dir is a static conf — tables land in ./spark-warehouse
-    # (gitignored) and are dropped in teardown
+    # tables land in the session's own warehouse dir (a tmp dir set by
+    # the spark fixture in conftest.py) and are dropped in teardown
     orders = table(spark, sf_dir, "orders")
     lineitem = table(spark, sf_dir, "lineitem")
     write_bucketed(orders, "b_orders", "o_orderkey", 8, sorted_by="o_orderkey")

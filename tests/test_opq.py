@@ -10,6 +10,8 @@ import os
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pyspark.sql.functions as F
+import pytest
 
 from spotify_podcasts_airflow_batch_spark.plans.registry import all_queries
 from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
@@ -130,8 +132,6 @@ def test_opq_serves_identity_rows_when_gate_closed(spark, sf_dir):
     opq_ann must serve BIT-identical rows to pq_adc_ann — the
     cannot-regress property."""
     if opq_gate_cached(spark, sf_dir):
-        import pytest
-
         pytest.skip("gate open on this corpus — covered by the dial")
     qs = all_queries()
     a = sorted(map(tuple, qs["opq_ann"].spark_fn(spark, sf_dir).collect()))
@@ -139,3 +139,19 @@ def test_opq_serves_identity_rows_when_gate_closed(spark, sf_dir):
         map(tuple, qs["pq_adc_ann"].spark_fn(spark, sf_dir).collect())
     )
     assert a == b
+
+
+@pytest.mark.fast
+def test_rotated_view_matches_dsl_tree(spark, sf_dir):
+    """The permuted corpus view, built as one SQL expression, is
+    semantically identical to the per-element Column-DSL array it
+    replaced (one Py4J round trip per element)."""
+    perm = [(d * 29 + 3) % _EMBED_DIMS for d in range(_EMBED_DIMS)]
+    got = _opq_rotated(spark, sf_dir, perm)
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    want = e.select(
+        "vec_id",
+        F.array(*[F.col("embedding")[d] for d in perm]).alias("embedding"),
+    )
+    assert got.schema == want.schema
+    assert got.sameSemantics(want)

@@ -16,27 +16,32 @@ from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
     _PQ_M,
     _PQ_NQ,
     _PQ_SUB,
+    _PQ_TRAIN_ITERS,
     _pq_adc_score,
     _pq_adc_table,
     _pq_codes,
+    _pq_sample_distortion_u,
     _pq_trained_cb_row,
     _rpq_cb_row,
-    pq_sample_distortion,
+    _rpq_train,
+    ivf_train_cells,
     pq_train_codebook,
 )
+from spotify_podcasts_airflow_batch_spark.sources.readers import table
 
 
 def test_lloyd_training_reduces_distortion(spark, sf_dir):
     """k-means guarantees non-increasing quantization error on the
-    training sample; with 6dp centroid pinning the decrease holds up
-    to rounding slack. This is the theorem-backed check that training
-    actually trained (recall improvements are data-dependent; this is
-    not)."""
+    training sample, and the integer micro-unit distortion is exact,
+    so the decrease holds with no slack. This is the theorem-backed
+    check that training actually trained (recall improvements are
+    data-dependent; this is not)."""
+    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     seed = pq_train_codebook(spark, sf_dir, iters=0)
     trained = pq_train_codebook(spark, sf_dir, iters=3)
-    d_seed = pq_sample_distortion(spark, sf_dir, seed)
-    d_trained = pq_sample_distortion(spark, sf_dir, trained)
-    assert d_trained <= d_seed + 1e-6, (d_seed, d_trained)
+    d_seed = _pq_sample_distortion_u(spark, emb, seed)
+    d_trained = _pq_sample_distortion_u(spark, emb, trained)
+    assert d_trained <= d_seed, (d_seed, d_trained)
     # and it should be a real improvement, not a no-op fixed point
     assert d_trained < d_seed * 0.999, (d_seed, d_trained)
 
@@ -107,35 +112,41 @@ def test_codebook_memo_is_keyed_per_dataset(spark, sf_dir):
     )
 
 
-def _py_int_lloyd(vecs: dict[int, list[float]], iters: int):
+def _q(x: float) -> int:
+    """round(x·1e6) half away from zero — the micro-unit quantizer."""
+    import math
+
+    scaled = x * 1e6
+    return int(math.floor(scaled + 0.5)) if scaled >= 0 else int(
+        math.ceil(scaled - 0.5)
+    )
+
+
+def _py_int_lloyd(vecs: dict[int, list], iters: int):
     """Independent pure-Python reimplementation of the integer
     micro-unit Lloyd spec (third implementation besides the Spark plan
     and the unrolled SQL twin — a shared spec bug in those two would
-    still diverge from this one): quantize round-half-away-from-zero,
-    integer squared-distance argmin with lowest-cid ties, centroid
-    update by division TRUNCATING TOWARD ZERO (Python // floors, so
-    negative sums need the explicit adjustment)."""
-    import math
-
+    still diverge from this one): quantize round-half-away-from-zero
+    (float inputs; int inputs are already micro-units), integer
+    squared-distance argmin with lowest-cid ties, centroid update by
+    division TRUNCATING TOWARD ZERO (Python // floors, so negative
+    sums need the explicit adjustment). Returns cents_u[m][cid][j]."""
     M, SUB, K = 8, 8, 16
 
-    def q(x: float) -> int:
-        scaled = x * 1e6
-        return int(math.floor(scaled + 0.5)) if scaled >= 0 else int(
-            math.ceil(scaled - 0.5)
-        )
+    def q(x) -> int:
+        return x if isinstance(x, int) else _q(float(x))
 
     def trunc_div(a: int, b: int) -> int:
         return -((-a) // b) if (a < 0) != (b < 0) else a // b
 
     xu = {
-        vid: [q(float(x)) for x in v]
+        vid: [q(x) for x in v]
         for vid, v in vecs.items()
         if vid % 4 == 0
     }
     seeds = sorted(vecs)[:K]
     cents = [
-        [[q(float(vecs[s][m * SUB + j])) for j in range(SUB)] for s in seeds]
+        [[q(vecs[s][m * SUB + j]) for j in range(SUB)] for s in seeds]
         for m in range(M)
     ]
     for _ in range(iters):
@@ -172,27 +183,45 @@ def _py_int_lloyd(vecs: dict[int, list[float]], iters: int):
                     )
             new.append(row)
         cents = new
-    return [
-        [[cu / 1e6 for cu in cents[m][k]] for k in range(16)]
-        for m in range(8)
-    ]
+    return cents
+
+
+def _embedding_rows(spark, sf_dir) -> dict[int, list[float]]:
+    return {
+        r.vec_id: list(r.embedding)
+        for r in table(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding")
+        .collect()
+    }
 
 
 def test_training_matches_independent_python_reference(spark, sf_dir):
     """pq_train_codebook's fixed point must equal a from-scratch
     Python implementation of the same integer spec — catching a spec
     bug the Spark plan and its SQL twin could share."""
-    from spotify_podcasts_airflow_batch_spark.sources.readers import table
-
-    vecs = {
-        r.vec_id: list(r.embedding)
-        for r in table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .collect()
-    }
     got = pq_train_codebook(spark, sf_dir, iters=2)
-    want = _py_int_lloyd(vecs, iters=2)
-    assert got == want
+    want = _py_int_lloyd(_embedding_rows(spark, sf_dir), iters=2)
+    assert got == [[[cu / 1e6 for cu in ck] for ck in cm] for cm in want]
+
+
+def test_residual_training_matches_independent_python_reference(
+    spark, sf_dir
+):
+    """_rpq_train's residual codebook must equal the Python Lloyd over
+    residuals computed here: each quantized vector minus its coarse
+    cell, the integer-argmin cell with lowest-cell ties."""
+    cells = ivf_train_cells(spark, sf_dir)
+    residuals = {}
+    for vid, v in _embedding_rows(spark, sf_dir).items():
+        xu = [_q(float(x)) for x in v]
+        cell = min(
+            range(len(cells)),
+            key=lambda c: (sum((a - b) ** 2 for a, b in zip(xu, cells[c])), c),
+        )
+        residuals[vid] = [a - b for a, b in zip(xu, cells[cell])]
+    assert _rpq_train(spark, sf_dir) == _py_int_lloyd(
+        residuals, iters=_PQ_TRAIN_ITERS
+    )
 
 
 # ------------------------------------------------------------------
