@@ -33,7 +33,7 @@ from spotify_podcasts_airflow_batch_spark.sinks.writers import (
     write_consolidated_csv,
     write_daily_partitioned,
 )
-from spotify_podcasts_airflow_batch_spark.sources.readers import table
+from spotify_podcasts_airflow_batch_spark.sources.readers import read_parquet, table
 
 MISMATCH_MESSAGE = "enrichment mismatch: joined dimension attributes disagree"
 
@@ -123,9 +123,7 @@ class PodcastPipeline:
 
     # -- stage 4: union + consolidated CSV (≍ union_parquet_files)
     def consolidate(self) -> str:
-        all_days = self.spark.read.option("mergeSchema", "true").parquet(
-            self.charts_path
-        )
+        all_days = read_parquet(self.spark, self.charts_path, merge_schema=True)
         return write_consolidated_csv(
             all_days, self.union_path, single_file=True
         )

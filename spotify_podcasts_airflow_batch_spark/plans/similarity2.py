@@ -23,7 +23,7 @@ from spotify_podcasts_airflow_batch_spark.operators.similarity import (
     knn_lsh,
 )
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
-from spotify_podcasts_airflow_batch_spark.sources.readers import table
+from spotify_podcasts_airflow_batch_spark.sources.readers import read_parquet, table
 
 _SEMDEDUP_TAU = 0.3
 _EMBED_DIMS = 64
@@ -925,7 +925,7 @@ def pq_adc_ann_served(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "query_id bigint, rank int, vec_id bigint, adc_dist double"
         )
     cb_row = _pq_trained_cb_row(spark, cents)
-    codes = spark.read.parquet(pq_codes_index_path(spark, sf_dir))
+    codes = read_parquet(spark, pq_codes_index_path(spark, sf_dir))
     emb_1t = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
@@ -2136,7 +2136,7 @@ def ivfpq_ann_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id bigint, rank int, vec_id bigint, adc_dist double"
         )
-    encoded = spark.read.parquet(ivfpq_index_path(spark, sf_dir))
+    encoded = read_parquet(spark, ivfpq_index_path(spark, sf_dir))
     return _ivfpq_serve(spark, sf_dir, encoded)
 
 
@@ -2251,7 +2251,7 @@ def ivfpq_exact_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             [],
             "query_id bigint, rank int, vec_id bigint, exact_dist double",
         )
-    encoded = spark.read.parquet(ivfpq_index_path(spark, sf_dir))
+    encoded = read_parquet(spark, ivfpq_index_path(spark, sf_dir))
     short = _ivfpq_serve(spark, sf_dir, encoded, k=_RERANK_SHORT).select(
         "query_id", "vec_id"
     )
@@ -2943,7 +2943,7 @@ def ivfpq_residual_ann_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id bigint, rank int, vec_id bigint, adc_dist double"
         )
-    encoded = spark.read.parquet(rpq_index_path(spark, sf_dir))
+    encoded = read_parquet(spark, rpq_index_path(spark, sf_dir))
     return _rpq_serve(spark, sf_dir, encoded, static_prune=True)
 
 
@@ -3241,7 +3241,7 @@ def sq8_ann_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact production ships — and every run after scans codes only:
     no bounds rollup over the raw corpus, no re-encode. Identical rows
     to D31 under the identical oracle."""
-    encoded = spark.read.parquet(sq8_index_path(spark, sf_dir))
+    encoded = read_parquet(spark, sq8_index_path(spark, sf_dir))
     return _sq8_serve(spark, sf_dir, encoded)
 
 

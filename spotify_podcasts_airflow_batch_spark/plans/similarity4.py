@@ -67,7 +67,7 @@ from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
     ivf_train_cells,
     pq_train_codebook,
 )
-from spotify_podcasts_airflow_batch_spark.sources.readers import table
+from spotify_podcasts_airflow_batch_spark.sources.readers import read_parquet, table
 
 _INC_WAVES = 3  # day-0 base + two daily append batches
 _INC_TOMB_MOD = 7  # tombstone base rows with vec_id % 7 == 0
@@ -262,8 +262,8 @@ def incremental_live_index(
     store that outgrew the threshold (it should have compacted —
     see ``maybe_compact_store``) falls back to an unhinted anti-join
     and lets AQE pick the strategy."""
-    seg = spark.read.parquet(os.path.join(root, "segments"))
-    tomb = spark.read.parquet(os.path.join(root, "tombstones"))
+    seg = read_parquet(spark, os.path.join(root, "segments"))
+    tomb = read_parquet(spark, os.path.join(root, "tombstones"))
     tomb_bytes = _dir_parquet_bytes(os.path.join(root, "tombstones"))
     if tomb_bytes <= tomb_broadcast_max_bytes:
         tomb = F.broadcast(tomb)
@@ -355,8 +355,8 @@ def maybe_compact_store(
     store. Serving paths that adopt the returned root keep the
     anti-join side fingerprint-sized, which is what keeps the
     broadcast hint in ``incremental_live_index`` valid."""
-    seg_n = spark.read.parquet(os.path.join(root, "segments")).count()
-    tomb_n = spark.read.parquet(os.path.join(root, "tombstones")).count()
+    seg_n = read_parquet(spark, os.path.join(root, "segments")).count()
+    tomb_n = read_parquet(spark, os.path.join(root, "tombstones")).count()
     if seg_n == 0 or tomb_n <= tomb_frac * seg_n:
         return root
     return compact_store(spark, root, out_root)
@@ -845,8 +845,8 @@ def ann_index_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "epoch int, n_rows bigint, n_cells bigint, "
             "n_tombstoned bigint, n_live bigint",
         )
-    seg = spark.read.parquet(os.path.join(root, "segments"))
-    tomb = spark.read.parquet(os.path.join(root, "tombstones")).select(
+    seg = read_parquet(spark, os.path.join(root, "segments"))
+    tomb = read_parquet(spark, os.path.join(root, "tombstones")).select(
         "vec_id", F.lit(1).alias("__t")
     )
     return (
@@ -888,8 +888,8 @@ def inc_occupancy_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "epoch int, n_live bigint, cells_used bigint, "
             "occ_max bigint, occ_avg bigint, cells_ideal bigint",
         )
-    seg = spark.read.parquet(os.path.join(root, "segments"))
-    tomb = spark.read.parquet(os.path.join(root, "tombstones"))
+    seg = read_parquet(spark, os.path.join(root, "segments"))
+    tomb = read_parquet(spark, os.path.join(root, "tombstones"))
     live = seg.join(F.broadcast(tomb), "vec_id", "anti").select(
         F.col("epoch").cast("int").alias("epoch"), "cell_id"
     )

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
 from spotify_podcasts_airflow_batch_spark.sources.readers import (
+    read_parquet,
     table,
     table_fingerprint,
 )
@@ -117,7 +118,7 @@ def stream_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = os.path.join(root, "state")
     if not os.path.isdir(state):
         return spark.createDataFrame([], _STATE_SCHEMA)
-    return spark.read.parquet(state).select(
+    return read_parquet(spark, state).select(
         "user_id",
         F.col("ts").alias("latest_ts"),
         F.col("event_id").alias("latest_event_id"),
@@ -204,7 +205,7 @@ def stream_daily_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id bigint, snapshot_date string, user_id bigint, "
             "event_type string, value4 double",
         )
-    return spark.read.parquet(daily).select(
+    return read_parquet(spark, daily).select(
         "event_id",
         F.col("snapshot_date").cast("string").alias("snapshot_date"),
         "user_id",
@@ -339,7 +340,7 @@ def stream_closed_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "session_end timestamp, n_events bigint, "
             "session_value_micros bigint, closed_by string",
         )
-    return spark.read.parquet(out).select(
+    return read_parquet(spark, out).select(
         "user_id",
         "session_start",
         "session_end",
@@ -445,7 +446,7 @@ def stream_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id bigint, user_id bigint, event_type string, "
             "value4 double, c_name string, n_name string",
         )
-    return spark.read.parquet(out).select(
+    return read_parquet(spark, out).select(
         "event_id",
         "user_id",
         "event_type",

@@ -26,7 +26,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spotify_podcasts_airflow_batch_spark.sources.readers import list_data_files
+from spotify_podcasts_airflow_batch_spark.sources.readers import (
+    list_data_files,
+    read_parquet,
+)
 
 _STATE_FILE = "agg_state"
 _PROCESSED = "processed_files.json"
@@ -78,15 +81,15 @@ def refresh_incremental_agg(
     if not new_files:
         if not have_state:
             raise ValueError(f"no data under {data_path}")
-        return spark.read.parquet(state_path)
+        return read_parquet(spark, state_path)
 
-    delta = _partial(spark.read.parquet(*new_files), key_cols, value_cols)
+    delta = _partial(read_parquet(spark, *new_files), key_cols, value_cols)
     if have_state:
-        merged = _merge(spark.read.parquet(state_path), delta, key_cols)
+        merged = _merge(read_parquet(spark, state_path), delta, key_cols)
     else:
         merged = delta
     merged = merged.localCheckpoint()  # cut lineage before overwrite read-from-self
     merged.write.mode("overwrite").parquet(state_path)
     with open(processed_path, "w") as f:
         json.dump(sorted(processed | set(new_files)), f)
-    return spark.read.parquet(state_path)
+    return read_parquet(spark, state_path)

@@ -32,7 +32,10 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spotify_podcasts_airflow_batch_spark.sources.readers import list_data_files
+from spotify_podcasts_airflow_batch_spark.sources.readers import (
+    list_data_files,
+    read_parquet,
+)
 
 _EPOCH_NAIVE = datetime(1970, 1, 1)
 _EPOCH_UTC = datetime(1970, 1, 1, tzinfo=timezone.utc)
@@ -158,7 +161,7 @@ def pruned_read(
     files = prune_files(manifest, col, lo, hi)
     if not files:
         raise ValueError("no files survive the predicate; empty scan")
-    return spark.read.parquet(*files)
+    return read_parquet(spark, *files)
 
 
 def write_manifest(manifest: DataFrame, path: str) -> None:
@@ -176,7 +179,7 @@ def refresh_manifest(
     O(new files), matching a table-format commit."""
     current = list_data_files(data_path)
     if os.path.isdir(manifest_path) and list_data_files(manifest_path):
-        old = spark.read.parquet(manifest_path)
+        old = read_parquet(spark, manifest_path)
         known = {r.path for r in old.select("path").collect()}
         new_files = [p for p in current if p not in known]
         if not new_files:
@@ -244,7 +247,7 @@ def commit_version(
         )
         return 1
     latest = versions[-1]
-    old = spark.read.parquet(_version_path(manifest_dir, latest))
+    old = read_parquet(spark, _version_path(manifest_dir, latest))
     known = {r.path for r in old.select("path").collect()}
     new_files = sorted(current - known)
     gone = known - current
@@ -276,7 +279,7 @@ def read_manifest_version(
         version = versions[-1]
     if version not in versions:
         raise ValueError(f"version {version} not in {versions}")
-    return spark.read.parquet(_version_path(manifest_dir, version))
+    return read_parquet(spark, _version_path(manifest_dir, version))
 
 
 def snapshot_read(
@@ -299,7 +302,7 @@ def snapshot_read(
         files = [r.path for r in manifest.select("path").collect()]
     if not files:
         raise ValueError("empty snapshot")
-    return spark.read.parquet(*files)
+    return read_parquet(spark, *files)
 
 
 def optimize_table(
@@ -319,7 +322,7 @@ def optimize_table(
     Returns the new version number."""
     manifest = read_manifest_version(spark, manifest_dir)
     old_files = [r.path for r in manifest.select("path").collect()]
-    df = spark.read.parquet(*old_files)
+    df = read_parquet(spark, *old_files)
     df.repartition(target_files).write.mode("append").parquet(data_path)
     for p in old_files:
         os.remove(p)

@@ -23,6 +23,8 @@ import shutil
 
 from pyspark.sql import DataFrame
 
+from spotify_podcasts_airflow_batch_spark.sources.readers import read_parquet
+
 
 def write_daily_partitioned(
     df: DataFrame,
@@ -113,7 +115,7 @@ def compact_partitions(
         for p in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
     )
     n = max(1, math.ceil(total / target_file_bytes))
-    spark.read.parquet(path).repartition(n).write.mode("overwrite").parquet(
+    read_parquet(spark, path).repartition(n).write.mode("overwrite").parquet(
         out_path
     )
     return len(glob.glob(os.path.join(out_path, "*.parquet")))

@@ -1,16 +1,18 @@
 from spotify_podcasts_airflow_batch_spark.sources.readers import (
     TABLES,
     list_data_files,
+    parquet_schema,
     read_csv,
     read_json,
-    read_parquet_many,
+    read_parquet,
     table,
 )
 
 __all__ = [
     "TABLES",
     "table",
-    "read_parquet_many",
+    "read_parquet",
+    "parquet_schema",
     "read_csv",
     "read_json",
     "list_data_files",

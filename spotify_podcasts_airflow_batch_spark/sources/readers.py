@@ -6,15 +6,35 @@ The reference lists S3 keys with ``S3Hook.list_keys`` and downloads +
 declarative multi-file scan: file listing is distributed, column
 pruning and predicate pushdown reach each footer, and nothing flows
 through the driver.
+
+Every batch parquet read goes through ``read_parquet``, which hands
+Spark the schema ``parquet_schema`` reads from the footer on the
+driver: a schemaless ``spark.read.parquet`` first runs a one-task Spark
+job just to infer what one footer already says.
 """
 
 from __future__ import annotations
 
 import glob
+import itertools
+import json
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    DataType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 TABLES = (
     "region",
@@ -38,11 +58,11 @@ def table(
 ) -> DataFrame:
     """Read one driver-generated table (``{sf_dir}/{name}.parquet``).
 
-    The events table carries parquet TIMESTAMP(NANOS), which Spark
-    cannot read natively; ``nanosAsLong`` (a runtime SQL conf) reads it
-    as int64 nanoseconds and we convert with exact integer division to
-    microseconds — the same truncation DuckDB applies, so both engines
-    see identical values.
+    The events table may carry parquet TIMESTAMP(NANOS), which Spark
+    cannot read natively; its footer decides. ``nanosAsLong`` (a
+    runtime SQL conf) reads nanos as int64 nanoseconds and we convert
+    with exact integer division to microseconds — the same truncation
+    DuckDB applies, so both engines see identical values.
 
     Timestamps without a timezone (isAdjustedToUTC=false) must read as
     plain TIMESTAMP, not TIMESTAMP_NTZ: with ``inferTimestampNTZ``
@@ -67,10 +87,9 @@ def table(
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    from pyspark.sql.types import LongType
-
-    if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
+    schema = parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    if name == "events" and isinstance(schema["ts"].dataType, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     if name in _CPU_HEAVY_TABLES:
         df = _ensure_scan_parallelism(
@@ -158,17 +177,252 @@ def _ensure_scan_parallelism(
 _LAYOUT_CACHE: dict[str, tuple[int, int, int]] = {}
 
 
-def read_parquet_many(
-    spark: SparkSession, paths: list[str], merge_schema: bool = True
+def read_parquet(
+    spark: SparkSession, *paths: str, merge_schema: bool = False
 ) -> DataFrame:
-    """Scan many parquet files/dirs as one DataFrame.
+    """Scan parquet files/dirs as one DataFrame, with the schema
+    ``parquet_schema`` reads from their footers, so no inference job
+    runs.
 
     Replaces the reference's driver-side download-and-concat loop; with
-    ``mergeSchema`` the union tolerates schema drift across daily
+    ``merge_schema`` the union tolerates schema drift across daily
     snapshots (old snapshots missing later-added columns read as null).
     """
-    reader = spark.read.option("mergeSchema", str(merge_schema).lower())
-    return reader.parquet(*paths)
+    return spark.read.schema(
+        parquet_schema(spark, *paths, merge=merge_schema)
+    ).parquet(*paths)
+
+
+def parquet_schema(
+    spark: SparkSession, *paths: str, merge: bool = False
+) -> StructType:
+    """The schema a schemaless ``spark.read.parquet(*paths)`` infers
+    (``merge``: Spark's ``mergeSchema`` option), read from parquet
+    footers on the driver with pyarrow, without a Spark job.
+
+    As in Spark, a plain read takes the first data file in path order
+    and a merge unions every file's fields in that order. A
+    Spark-written footer holds the schema Spark stored as JSON; any
+    other is mapped from its arrow schema under the session's
+    timestamp confs. Partition columns are left out: Spark infers them
+    from the directory names on the driver either way.
+
+    Where footers cannot give Spark's answer exactly, this returns
+    Spark's own inference (partition columns included) or raises its
+    error: a non-local or globbed path, no data file, summary files, a
+    type Spark maps its own way (INT96, unsigned ints, nanos without
+    ``nanosAsLong``), conflicting footers, or a merge over more files
+    than ``spark.sql.sources.parallelPartitionDiscovery.threshold``,
+    past which Spark itself stops listing on the driver.
+    """
+    try:
+        return _footer_schema(spark, paths, merge)
+    except _NotFromFooter:
+        return spark.read.option("mergeSchema", merge).parquet(*paths).schema
+
+
+class _NotFromFooter(Exception):
+    """The footers cannot reproduce Spark's inference for this read."""
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# Spark globs a path holding any of these; a scheme means not local
+_GLOB_OR_SCHEME = re.compile(r"[{}\[\]*?\\]|^[A-Za-z][A-Za-z0-9+.-]*:")
+# parquet leaf annotations whose Spark type the arrow type gives
+_MAPPED_LOGICAL = {"NONE", "STRING", "INT", "DECIMAL", "DATE", "TIMESTAMP"}
+_MAPPED_ARROW = (
+    "is_boolean",
+    "is_signed_integer",
+    "is_float32",
+    "is_float64",
+    "is_decimal128",
+    "is_string",
+    "is_large_string",
+    "is_date32",
+)
+
+
+def _footer_schema(spark: SparkSession, paths, merge: bool) -> StructType:
+    if not paths or any(_GLOB_OR_SCHEME.search(p) for p in paths):
+        raise _NotFromFooter
+    confs: dict[str, str] = {}
+
+    def conf(key: str) -> str:
+        if key not in confs:
+            confs[key] = spark.conf.get(key).lower()
+        return confs[key]
+
+    roots = [os.path.abspath(p) for p in paths]
+    if not merge:
+        firsts = [
+            (f, r) for r in roots for f in itertools.islice(_data_files(r), 1)
+        ]
+        if not firsts:
+            raise _NotFromFooter
+        first, root = min(firsts)
+        return _file_schema(root, first, conf)
+    limit = int(conf("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+    every = ((f, r) for r in roots for f in _data_files(r))
+    files = list(itertools.islice(every, limit + 1))
+    if not files or len(files) > limit:
+        raise _NotFromFooter
+    merged: dict[str, StructField] = {}
+    for path, root in sorted(files):
+        for field in _file_schema(root, path, conf):
+            if merged.setdefault(field.name.lower(), field) != field:
+                raise _NotFromFooter
+    return StructType(list(merged.values()))
+
+
+def _data_files(root: str):
+    """The data files Spark reads under ``root``, in path order: ``root``
+    itself if it is a file; else its own files; else, when every
+    subdirectory is a ``key=value`` partition, the files under them.
+    Lazy, so a plain read lists only the directories on the way to its
+    first file."""
+    if os.path.isfile(root) and not _hidden(os.path.basename(root)):
+        yield root
+        return
+    if not os.path.isdir(root):
+        raise _NotFromFooter
+    entries = _listing(root)
+    files = [p for p, is_dir in entries if not is_dir]
+    if files:
+        yield from files
+    elif all("=" in os.path.basename(p) for p, _ in entries):
+        for p, _ in entries:
+            yield from _leaf_files(p)
+    else:
+        raise _NotFromFooter
+
+
+def _leaf_files(directory: str):
+    for path, is_dir in _listing(directory):
+        if is_dir:
+            yield from _leaf_files(path)
+        else:
+            yield path
+
+
+def _listing(directory: str) -> list[tuple[str, bool]]:
+    """(path, is_dir) of what Spark lists in ``directory``, in the
+    order of the file paths under each entry: a directory sorts as its
+    name plus "/"."""
+    entries = []
+    with os.scandir(directory) as it:
+        for e in it:
+            if e.name.startswith(("_metadata", "_common_metadata")):
+                raise _NotFromFooter  # summary files: Spark reads them first
+            if not _hidden(e.name):
+                is_dir = e.is_dir()
+                key = e.name + "/" if is_dir else e.name
+                entries.append((key, e.path, is_dir))
+    return [(path, is_dir) for _, path, is_dir in sorted(entries)]
+
+
+def _hidden(name: str) -> bool:
+    """Spark's ``HadoopFSUtils.shouldFilterOutPathName``: names Spark
+    never reads as data — committer staging (``_temporary``,
+    ``.spark-staging-*``), markers (``_SUCCESS``), checksums and
+    in-flight copies. ``key=value`` partition names are kept."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _file_schema(root: str, path: str, conf) -> StructType:
+    """One footer's schema as Spark reads it (every field nullable, as
+    Spark makes an inferred schema), or ``_NotFromFooter``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        meta = pq.read_metadata(path)
+    except (OSError, pa.ArrowException) as e:
+        raise _NotFromFooter from e
+    stored = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is not None:
+        try:
+            schema = _nullable(StructType.fromJson(json.loads(stored)))
+        except (ValueError, KeyError, TypeError) as e:
+            raise _NotFromFooter from e
+    else:
+        leaves = [meta.schema.column(i) for i in range(meta.num_columns)]
+        if any(
+            c.physical_type == "INT96"
+            or c.logical_type.type not in _MAPPED_LOGICAL
+            for c in leaves
+        ):
+            raise _NotFromFooter
+        schema = StructType(
+            [
+                StructField(f.name, _spark_type(f.type, conf), True)
+                for f in meta.schema.to_arrow_schema()
+            ]
+        )
+    partition_keys = {
+        part.split("=", 1)[0].lower()
+        for part in os.path.relpath(path, root).split(os.sep)[:-1]
+        if "=" in part
+    }
+    if partition_keys & {f.name.lower() for f in schema}:
+        raise _NotFromFooter
+    return schema
+
+
+def _spark_type(at, conf) -> DataType:
+    """Spark's type for an arrow type read from a non-Spark footer,
+    containers nullable (``ParquetToSparkSchemaConverter`` semantics)."""
+    import pyarrow.types as pat
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if pat.is_timestamp(at):
+        if at.unit == "ns":  # TIMESTAMP(NANOS): INT96 was ruled out
+            if conf("spark.sql.legacy.parquet.nanosAsLong") == "true":
+                return LongType()
+            raise _NotFromFooter
+        if at.tz is None and (
+            conf("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+        ):
+            return TimestampNTZType()
+        return TimestampType()
+    if pat.is_list(at) or pat.is_large_list(at):
+        return ArrayType(_spark_type(at.value_type, conf), True)
+    if pat.is_map(at):
+        return MapType(
+            _spark_type(at.key_type, conf),
+            _spark_type(at.item_type, conf),
+            True,
+        )
+    if pat.is_struct(at):
+        return StructType(
+            [StructField(f.name, _spark_type(f.type, conf), True) for f in at]
+        )
+    if pat.is_binary(at) or pat.is_large_binary(at):
+        if conf("spark.sql.parquet.binaryAsString") == "true":
+            return StringType()
+        return BinaryType()
+    if any(getattr(pat, check)(at) for check in _MAPPED_ARROW):
+        return from_arrow_type(at)
+    raise _NotFromFooter
+
+
+def _nullable(dt: DataType) -> DataType:
+    """Spark's ``asNullable``, which every inferred schema gets."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
@@ -189,14 +443,20 @@ def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
 
 def list_data_files(root: str, suffix: str = ".parquet") -> list[str]:
     """Local analogue of ``S3Hook.list_keys(prefix=...)`` — enumerate
-    data files under a prefix. On a cluster this is the object-store
-    listing; Spark's own parallel listing is preferred (pass the
-    directory straight to ``read_parquet_many``)."""
-    return sorted(
-        p
-        for p in glob.glob(os.path.join(root, "**", f"*{suffix}"), recursive=True)
-        if os.path.isfile(p)
-    )
+    data files under a prefix, skipping every path Spark's own listing
+    skips (``_temporary`` committer staging, hidden and ``_`` names;
+    see ``_hidden``). On a cluster this is the object-store listing;
+    Spark's own parallel listing is preferred (pass the directory
+    straight to ``read_parquet``)."""
+    out = []
+    for directory, dirs, files in os.walk(root, followlinks=True):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        out += [
+            os.path.join(directory, f)
+            for f in files
+            if f.endswith(suffix) and not _hidden(f)
+        ]
+    return sorted(out)
 
 
 def read_orc(spark: SparkSession, path: str, schema=None) -> DataFrame:

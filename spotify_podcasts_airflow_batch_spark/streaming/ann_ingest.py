@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from spotify_podcasts_airflow_batch_spark.plans.similarity4 import (
     append_batch,
 )
+from spotify_podcasts_airflow_batch_spark.sources.readers import parquet_schema
 
 
 def next_epoch(root: str) -> int:
@@ -85,7 +86,7 @@ def stream_ann_ingest(
                 f"with existing segment epochs (next free: {free}) — "
                 "the dynamic overwrite would clobber them"
             )
-    schema = spark.read.parquet(vec_stream_dir).schema
+    schema = parquet_schema(spark, vec_stream_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)

@@ -34,6 +34,10 @@ from spotify_podcasts_airflow_batch_spark.operators.dedup import (
     _banded,
     minhash_signatures,
 )
+from spotify_podcasts_airflow_batch_spark.sources.readers import (
+    parquet_schema,
+    read_parquet,
+)
 
 
 def banded_signatures(docs: DataFrame) -> DataFrame:
@@ -124,9 +128,9 @@ def stream_incremental_near_dup(
     query (Trigger.AvailableNow — drains what is present, the
     daily-ingest shape; leave it running with a processing-time
     trigger for a live feed)."""
-    # file streams need an explicit schema: sniff it from a one-file
-    # batch read (the sources/readers.py file-stream convention)
-    schema = spark.read.parquet(docs_stream_dir).schema
+    # file streams need an explicit schema: read it from the footer
+    # (the sources/readers.py file-stream convention)
+    schema = parquet_schema(spark, docs_stream_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -147,7 +151,7 @@ def stream_incremental_near_dup(
             return
         sess = batch_df.sparkSession
         hist = (
-            sess.read.parquet(index_path)
+            read_parquet(sess, index_path)
             .join(F.broadcast(batch_df.select("doc_id")), "doc_id", "anti")
         )
         flags = near_dup_flags(batch_df, hist)

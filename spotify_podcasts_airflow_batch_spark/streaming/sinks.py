@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from spotify_podcasts_airflow_batch_spark.sinks.writers import (
     write_daily_partitioned,
 )
+from spotify_podcasts_airflow_batch_spark.sources.readers import read_parquet
 
 
 def stream_to_daily_parquet(
@@ -108,7 +109,7 @@ def stream_upsert_latest(
         if os.path.isdir(out_path) and any(
             f.startswith("__bucket=") for f in os.listdir(out_path)
         ):
-            existing = spark.read.parquet(out_path).filter(
+            existing = read_parquet(spark, out_path).filter(
                 F.col("__bucket").isin(touched)
             )
             merged = (

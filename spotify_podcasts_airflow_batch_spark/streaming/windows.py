@@ -23,6 +23,8 @@ from pyspark.sql.types import (
 
 from pyspark.sql.types import TimestampType
 
+from spotify_podcasts_airflow_batch_spark.sources.readers import parquet_schema
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -45,16 +47,17 @@ def read_events_stream(
 
     A file stream needs a declared schema (no inference at start); the
     one quirk is the event-time column, which historical files may
-    carry as TIMESTAMP(NANOS) — unreadable as a Spark timestamp. A
-    one-file batch sniff decides: nanos files stream as int64 +
-    exact-division to micros, native timestamp files stream as-is.
+    carry as TIMESTAMP(NANOS) — unreadable as a Spark timestamp. The
+    footer schema (``parquet_schema``, no Spark job) decides: nanos
+    files stream as int64 + exact-division to micros, native timestamp
+    files stream as-is.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
         ts_is_nanos = isinstance(
-            spark.read.parquet(directory).schema["ts"].dataType, LongType
+            parquet_schema(spark, directory)["ts"].dataType, LongType
         )
     except Exception:
         # empty/not-yet-populated directory (normal when the stream

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -29,6 +30,20 @@ def spark(tmp_path_factory):
         s = get_spark("tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+def jobs_run(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs, counted under a job
+    group of their own."""
+    sc = spark.sparkContext
+    group = f"jobs_run_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

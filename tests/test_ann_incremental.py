@@ -28,6 +28,7 @@ from spotify_podcasts_airflow_batch_spark.plans.similarity4 import (
     ivfpq_incremental_store,
 )
 from spotify_podcasts_airflow_batch_spark.sources.readers import table
+from tests.conftest import jobs_run
 
 
 @pytest.fixture(scope="module")
@@ -390,6 +391,17 @@ def test_serve_and_append_py4j_budget(spark, sf_dir, store, monkeypatch):
     )
     assert serve <= 1000, serve
     assert encode <= 200, encode
+
+
+def test_served_frame_job_count(spark, sf_dir, store):
+    """On a warm store, building and collecting the served frame runs
+    7 jobs: the segment, tombstone and embedding reads take their
+    schemas from the footers instead of one inference job each."""
+    ivfpq_incremental_served(spark, sf_dir)  # first-call memo fills
+    served = jobs_run(
+        spark, lambda: ivfpq_incremental_served(spark, sf_dir).collect()
+    )
+    assert served == 7
 
 
 def test_cold_build_py4j_budget(spark, sf_dir, tmp_path, monkeypatch):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import functions as F
 
@@ -55,3 +56,29 @@ def test_incremental_agg_matches_full_recompute(spark, sf_dir, tmp_path):
         assert json.load(f) == processed_before
     # every ingested file is accounted for
     assert len(processed_before) == 3
+
+
+def test_refresh_skips_committer_staging(spark, sf_dir, tmp_path):
+    """A part file under a committer's ``_temporary`` directory is not
+    data: Spark's own scan skips it, and so must the refresh's file
+    listing, or the staged rows are counted twice."""
+    ev = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
+    data = str(tmp_path / "ingest")
+    ev.coalesce(1).write.parquet(data)
+    part = next(f for f in os.listdir(data) if f.startswith("part-"))
+    staging = os.path.join(data, "_temporary", "0", "task_0")
+    os.makedirs(staging)
+    shutil.copy(os.path.join(data, part), staging)
+
+    got = refresh_incremental_agg(
+        spark, data, str(tmp_path / "state"), ["event_type"], ["value"]
+    )
+    want = (
+        spark.read.parquet(data)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("value").alias("sum_value"),
+        )
+    )
+    assert _rows(got) == _rows(want)

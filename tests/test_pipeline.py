@@ -16,6 +16,7 @@ from spotify_podcasts_airflow_batch_spark.pipeline.podcast import (
     MISMATCH_MESSAGE,
     PodcastPipeline,
 )
+from tests.conftest import jobs_run
 
 BACKFILL = ("2024-01-05", "2024-01-10")
 
@@ -123,13 +124,14 @@ def test_run_daily_evaluates_chart_plan_once(pipe, spark):
     """run_daily's jobs at sf0.001: broadcast, window top-k stages,
     one guarded write and the consolidation, so the chart plan is built
     once. A standalone mismatch check before the write re-runs that
-    plan and adds 4 jobs (11)."""
-    sc = spark.sparkContext
-    group = "test_run_daily_job_count"
-    sc.setJobGroup(group, "run_daily job count")
-    try:
-        pipe.run_daily()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+    plan and adds 4 jobs; a schemaless read of events, customer or the
+    merged charts adds one schema-inference job each."""
+    assert jobs_run(spark, pipe.run_daily) == 4
+
+
+def test_run_backfill_job_count(pipe, spark):
+    """A backfill builds, enriches and writes its date slice (3 jobs);
+    its events and customer reads take their schemas from the footers
+    rather than from one inference job each."""
+    pipe.run_daily()
+    assert jobs_run(spark, lambda: pipe.run_backfill(*BACKFILL)) == 3

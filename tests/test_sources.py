@@ -5,25 +5,141 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql.types import StructType
+
 from spotify_podcasts_airflow_batch_spark.sources.readers import (
+    TABLES,
     list_data_files,
+    parquet_schema,
     read_csv,
     read_json,
-    read_parquet_many,
+    read_parquet,
     table,
 )
+from tests.conftest import jobs_run
 
 
-def test_read_parquet_many_merges_schema(spark, sf_dir, tmp_path):
+def test_read_parquet_merges_schema(spark, sf_dir, tmp_path):
     o = table(spark, sf_dir, "orders")
     a = str(tmp_path / "day_a")
     b = str(tmp_path / "day_b")
     o.select("o_orderkey", "o_orderstatus", "o_totalprice").write.parquet(a)
     o.select("o_orderkey", "o_orderstatus").write.parquet(b)  # schema drift
-    merged = read_parquet_many(spark, [a, b])
+    merged = read_parquet(spark, a, b, merge_schema=True)
     assert set(merged.columns) == {"o_orderkey", "o_orderstatus", "o_totalprice"}
     assert merged.count() == 2 * o.count()
     assert merged.where("o_totalprice IS NULL").count() == o.count()
+
+
+def _inferred(spark, *paths, merge=False):
+    return spark.read.option("mergeSchema", merge).parquet(*paths).schema
+
+
+def _assert_footer_schema(spark, *paths, merge=False, partitions=()):
+    """parquet_schema gives Spark's inferred schema less its partition
+    columns, without a job; reading with it gives Spark's whole
+    schema."""
+    want = _inferred(spark, *paths, merge=merge)
+
+    def schema():
+        return parquet_schema(spark, *paths, merge=merge)
+
+    assert jobs_run(spark, schema) == 0
+    assert schema() == StructType([f for f in want if f.name not in partitions])
+    assert read_parquet(spark, *paths, merge_schema=merge).schema == want
+
+
+def _assert_spark_fallback(spark, *paths, merge=False):
+    """Spark's own inference job decides the schema."""
+    want = _inferred(spark, *paths, merge=merge)
+
+    def schema():
+        return parquet_schema(spark, *paths, merge=merge)
+
+    assert jobs_run(spark, schema) > 0
+    assert schema() == want
+    assert read_parquet(spark, *paths, merge_schema=merge).schema == want
+
+
+def test_footer_schema_matches_inference(spark, sf_dir, tmp_path):
+    from spotify_podcasts_airflow_batch_spark.pipeline.podcast import (
+        PodcastPipeline,
+    )
+    from spotify_podcasts_airflow_batch_spark.plans.similarity4 import (
+        ivfpq_incremental_store,
+    )
+
+    conf = spark.conf
+    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    for name in TABLES:
+        _assert_footer_schema(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+    store = ivfpq_incremental_store(spark, sf_dir)
+    _assert_footer_schema(
+        spark, os.path.join(store, "segments"), partitions=("epoch", "cell_id")
+    )
+    _assert_footer_schema(spark, os.path.join(store, "tombstones"))
+
+    pipe = PodcastPipeline(spark=spark, sf_dir=sf_dir, out_root=str(tmp_path))
+    pipe.run_daily()
+    _assert_footer_schema(
+        spark, pipe.charts_path, merge=True, partitions=("snapshot_date",)
+    )
+
+    nanos = str(tmp_path / "nanos.parquet")
+    ts = pa.array([1_000_001_000, 2_000_000_999], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), nanos)
+    _assert_footer_schema(spark, nanos)
+
+    micros = str(tmp_path / "micros.parquet")
+    us = pa.array([1_000_001, 2_000_000], pa.timestamp("us"))
+    utc = pa.array([1_000_001, 2_000_000], pa.timestamp("us", tz="UTC"))
+    pq.write_table(pa.table({"naive": us, "utc": utc}), micros)
+    try:
+        for ntz in ("true", "false"):
+            conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", ntz)
+            _assert_footer_schema(spark, micros)
+    finally:
+        conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+
+    # types Spark maps its own way: INT96 timestamps, unsigned ints
+    int96 = str(tmp_path / "int96.parquet")
+    pq.write_table(
+        pa.table({"ts": ts, "u": pa.array([1, 2], pa.uint32())}),
+        int96,
+        use_deprecated_int96_timestamps=True,
+    )
+    _assert_spark_fallback(spark, int96)
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    with pytest.raises(AnalysisException):
+        _inferred(spark, str(empty))
+    with pytest.raises(AnalysisException):
+        parquet_schema(spark, str(empty))
+
+    drift = str(tmp_path / "drift")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    for cols in (["o_orderkey"], ["o_orderkey", "o_totalprice"], ["o_totalprice"]):
+        o.select(*cols).coalesce(1).write.mode("append").parquet(drift)
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    _assert_footer_schema(spark, drift, merge=True)
+    conf.set(threshold, "2")
+    try:
+        _assert_spark_fallback(spark, drift, merge=True)
+    finally:
+        conf.unset(threshold)
+
+
+def test_table_runs_no_job(spark, sf_dir):
+    """Every table() read takes its schema from the footer: building
+    the frames starts no Spark job."""
+    assert jobs_run(spark, lambda: [table(spark, sf_dir, t) for t in TABLES]) == 0
 
 
 def test_csv_round_trip(spark, sf_dir, tmp_path):
