@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spotify_podcasts_airflow_batch_spark.operators.similarity import (
@@ -23,7 +23,11 @@ from spotify_podcasts_airflow_batch_spark.operators.similarity import (
     knn_lsh,
 )
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
-from spotify_podcasts_airflow_batch_spark.sources.readers import read_parquet, table
+from spotify_podcasts_airflow_batch_spark.sources.readers import (
+    read_parquet,
+    table,
+    table_fingerprint,
+)
 
 _SEMDEDUP_TAU = 0.3
 _EMBED_DIMS = 64
@@ -442,7 +446,6 @@ def knn_label_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "nlabel")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy(
         F.desc("n"), F.asc("nlabel")
@@ -608,8 +611,6 @@ def ann_jl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     |probes|x50 rows. Both engines rank the IDENTICAL rounded sketch
     values through the same explicit dot/norm arithmetic — no float
     path is engine-local."""
-    from pyspark.sql import Window
-
     e = table(spark, sf_dir, "embeddings")
     sk = random_projection_jl(spark, sf_dir)
     probes_sk = sk.where(F.col("vec_id") % _PROBE_MOD == 0)
@@ -644,20 +645,11 @@ def ann_jl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries=e.where(F.col("vec_id") % _PROBE_MOD == 0),
         k=_JL_EXACT_K,
     ).select("query_id", "neighbor_id")
-    hits = (
-        exact.join(cand, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
     probes = e.where(F.col("vec_id") % _PROBE_MOD == 0).select(
         F.col("vec_id").alias("query_id")
     )
-    return probes.join(F.broadcast(hits), "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n"), F.lit(0)).alias("n_hits"),
-        F.expr(f"coalesce(n, 0) * 10000 div {_JL_EXACT_K}").alias(
-            "recall_bp"
-        ),
+    return _recall_report(
+        probes, exact, cand, _JL_EXACT_K, id_col="neighbor_id"
     )
 
 
@@ -668,6 +660,8 @@ _PQ_K = 16  # centroids per subspace (4-bit codes)
 _PQ_NQ = 4  # probe queries (smallest vec_ids)
 _PQ_TOPK = 5
 _PQ_SALTS = 32  # first-stage top-k fan-out
+# every PQ/IVF-PQ serving query's result — an empty corpus serves none
+_SERVE_SCHEMA = "query_id bigint, rank int, vec_id bigint, adc_dist double"
 _PQ_TRAIN_MOD = 4  # deterministic training sample: vec_id % 4 == 0
 _PQ_TRAIN_ITERS = 3
 
@@ -878,9 +872,7 @@ def pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = pq_train_codebook_cached(spark, sf_dir)
     if not cents or not cents[0]:
         # empty embeddings table → no codebook, no probes
-        return spark.createDataFrame(
-            [], "query_id bigint, rank int, vec_id bigint, adc_dist double"
-        )
+        return spark.createDataFrame([], _SERVE_SCHEMA)
     cb_row = _pq_trained_cb_row(spark, cents)
     emb = table(spark, sf_dir, "embeddings", fan_out="force").select(
         "vec_id", "embedding"
@@ -888,14 +880,7 @@ def pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_1t = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    return _pq_adc_topk(emb, emb_1t, cb_row).select(
-        "query_id",
-        F.col("rank").cast("int").alias("rank"),
-        "vec_id",
-        (F.round(F.col("score_u") / 1e6, 6) + F.lit(0.0)).alias(
-            "adc_dist"
-        ),
-    )
+    return _served_adc(_pq_adc_topk(emb, emb_1t, cb_row))
 
 
 def pq_codes_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -921,22 +906,13 @@ def pq_adc_ann_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical unrolled-Lloyd oracle."""
     cents = pq_train_codebook_cached(spark, sf_dir)
     if not cents or not cents[0]:
-        return spark.createDataFrame(
-            [], "query_id bigint, rank int, vec_id bigint, adc_dist double"
-        )
+        return spark.createDataFrame([], _SERVE_SCHEMA)
     cb_row = _pq_trained_cb_row(spark, cents)
     codes = read_parquet(spark, pq_codes_index_path(spark, sf_dir))
     emb_1t = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    return _pq_adc_topk_from_codes(codes, emb_1t, cb_row).select(
-        "query_id",
-        F.col("rank").cast("int").alias("rank"),
-        "vec_id",
-        (F.round(F.col("score_u") / 1e6, 6) + F.lit(0.0)).alias(
-            "adc_dist"
-        ),
-    )
+    return _served_adc(_pq_adc_topk_from_codes(codes, emb_1t, cb_row))
 
 
 # PQ constants and per-row PQ expressions are Spark SQL text parsed by
@@ -1103,6 +1079,114 @@ def _pq_adc_score():
     return F.expr(_PQ_ADC_SCORE_SQL)
 
 
+# ------------------------------------------- shared serve-and-grade tail
+def _salted_topk(scored: DataFrame, k: int, *order) -> DataFrame:
+    """Two-stage salted top-k per query over ``scored`` (query_id,
+    vec_id, ...), ranked by ``order`` then vec_id (the tie-pin): keep
+    k rows per (query_id, vec_id mod _PQ_SALTS) salt, then rank the
+    <= salts*k survivors per query and keep k — no task ever holds a
+    query's whole candidate set. Adds ``__srn`` and ``rank``."""
+    salted = Window.partitionBy(
+        "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
+    ).orderBy(*order, "vec_id")
+    final = Window.partitionBy("query_id").orderBy(*order, "vec_id")
+    return (
+        scored.withColumn("__srn", F.row_number().over(salted))
+        .where(F.col("__srn") <= k)
+        .withColumn("rank", F.row_number().over(final))
+        .where(F.col("rank") <= k)
+    )
+
+
+def _served_adc(ranked: DataFrame, units: float = 1e6) -> DataFrame:
+    """The _SERVE_SCHEMA projection of a ranked (query_id, rank,
+    vec_id, score_u) frame: adc_dist = score_u / ``units`` (1e6, or
+    1e12 for residual IVF-PQ's squared micro-units) rounded to 6 dp,
+    with -0.0 canonicalized."""
+    return ranked.select(
+        "query_id",
+        F.col("rank").cast("int").alias("rank"),
+        "vec_id",
+        (F.round(F.col("score_u") / units, 6) + F.lit(0.0)).alias(
+            "adc_dist"
+        ),
+    )
+
+
+def _recall_report(
+    probes: DataFrame,
+    exact: DataFrame,
+    cand: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Per-probe recall@k: the ``cand`` rows that hit the ``exact``
+    top-k on (query_id, ``id_col``), counted per query and left-joined
+    onto every probe, so a query with no hit reports 0 —
+    (query_id, n_hits, recall_bp = n_hits * 10000 div k)."""
+    hits = (
+        exact.join(cand, ["query_id", id_col])
+        .groupBy("query_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    return probes.join(F.broadcast(hits), "query_id", "left").select(
+        "query_id",
+        F.coalesce(F.col("n"), F.lit(0)).alias("n_hits"),
+        F.expr(f"coalesce(n, 0) * 10000 div {k}").alias("recall_bp"),
+    )
+
+
+def _pq_probes(emb_1t: DataFrame, *cols) -> DataFrame:
+    """The flat-PQ probe set: the _PQ_NQ smallest vec_ids as
+    (query_id, *cols)."""
+    return (
+        emb_1t.orderBy("vec_id")
+        .limit(_PQ_NQ)
+        .select(F.col("vec_id").alias("query_id"), *cols)
+    )
+
+
+def _pq_recall(
+    emb_1t: DataFrame, cand: DataFrame, exact: DataFrame | None = None
+) -> DataFrame:
+    """Recall@_PQ_TOPK of ``cand`` over the flat-PQ probes against the
+    exact L2 top-k (``_pq_exact_topk(emb_1t)`` unless given); the
+    query's own row stays in the corpus (see pq_adc_recall)."""
+    if exact is None:
+        exact = _pq_exact_topk(emb_1t)
+    return _recall_report(_pq_probes(emb_1t), exact, cand, _PQ_TOPK)
+
+
+def _ivf_probes(emb_1t: DataFrame, *cols) -> DataFrame:
+    """The IVF-PQ probe set: vec_id % _IVFPQ_MOD == 0 as
+    (query_id, *cols)."""
+    return emb_1t.where(F.col("vec_id") % _IVFPQ_MOD == 0).select(
+        F.col("vec_id").alias("query_id"), *cols
+    )
+
+
+def _ivfpq_recall(
+    spark: SparkSession, sf_dir: str, served: DataFrame, live=None
+) -> DataFrame:
+    """Recall@_IVFPQ_K of the ``served`` rows over the IVF-PQ probes
+    against the exact L2 top-k of the embeddings where ``live`` holds
+    (default: all of them), self-excluded on both sides (the D27
+    vec_id <> query_id discipline): the query is a corpus member and
+    its own cell is always probed, so a self-hit would be guaranteed."""
+    cand = served.select("query_id", "vec_id").where(
+        F.col("vec_id") != F.col("query_id")
+    )
+    emb_1t = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    qdf = _ivf_probes(emb_1t, "embedding")
+    exact = _pq_exact_topk(
+        emb_1t if live is None else emb_1t.where(live),
+        qdf=qdf,
+        k=_IVFPQ_K,
+        exclude_self=True,
+    )
+    return _recall_report(qdf.select("query_id"), exact, cand, _IVFPQ_K)
+
+
 def _pq_adc_topk(emb, emb_1t, cb_row) -> DataFrame:
     """Shared D24/D26 machinery: projection encode against the
     one-row ``cbs`` codebook relation (sampled or trained), integer
@@ -1116,14 +1200,8 @@ def _pq_adc_topk_from_codes(codes, emb_1t, cb_row, qdf=None) -> DataFrame:
     inline-encoded or materialized. ``qdf`` (query_id, embedding)
     overrides the default probe set (the _PQ_NQ smallest vec_ids) —
     the D37b dial passes its wide probe slice."""
-    from pyspark.sql import Window
-
     if qdf is None:
-        qdf = (
-            emb_1t.orderBy("vec_id")
-            .limit(_PQ_NQ)
-            .select(F.col("vec_id").alias("query_id"), "embedding")
-        )
+        qdf = _pq_probes(emb_1t, "embedding")
     q = _pq_adc_table(qdf, cb_row)
 
     scored = codes.crossJoin(q).select(
@@ -1131,16 +1209,8 @@ def _pq_adc_topk_from_codes(codes, emb_1t, cb_row, qdf=None) -> DataFrame:
         "vec_id",
         _pq_adc_score().alias("score_u"),
     )
-    salted = Window.partitionBy(
-        "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
-    ).orderBy("score_u", "vec_id")
-    final = Window.partitionBy("query_id").orderBy("score_u", "vec_id")
-    return (
-        scored.withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= _PQ_TOPK)
-        .withColumn("rank", F.row_number().over(final))
-        .where(F.col("rank") <= _PQ_TOPK)
-        .select("query_id", "rank", "vec_id", "score_u")
+    return _salted_topk(scored, _PQ_TOPK, "score_u").select(
+        "query_id", "rank", "vec_id", "score_u"
     )
 
 
@@ -1155,14 +1225,8 @@ def _pq_exact_topk(
     discipline) — used by the D28b/D29b compound-recall dials so every
     reference neighbor is a real retrieval target, not the
     near-guaranteed self-hit (ADVICE r5)."""
-    from pyspark.sql import Window
-
     if qdf is None:
-        qdf = (
-            emb_1t.orderBy("vec_id")
-            .limit(_PQ_NQ)
-            .select(F.col("vec_id").alias("query_id"), "embedding")
-        )
+        qdf = _pq_probes(emb_1t, "embedding")
     q = F.broadcast(
         qdf.select(
             "query_id",
@@ -1190,17 +1254,7 @@ def _pq_exact_topk(
     )
     if exclude_self:
         scored = scored.where(F.col("vec_id") != F.col("query_id"))
-    salted = Window.partitionBy(
-        "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
-    ).orderBy("d", "vec_id")
-    final = Window.partitionBy("query_id").orderBy("d", "vec_id")
-    return (
-        scored.withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= k)
-        .withColumn("r", F.row_number().over(final))
-        .where(F.col("r") <= k)
-        .select("query_id", "vec_id")
-    )
+    return _salted_topk(scored, k, "d").select("query_id", "vec_id")
 
 
 # ---------------------------------------------------------------- D25
@@ -1265,24 +1319,8 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_1t = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    exact = _pq_exact_topk(emb_1t)
-    cand = pq_adc_ann(spark, sf_dir).select("query_id", "vec_id")
-    hits = (
-        exact.join(cand, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    probes = (
-        emb_1t.orderBy("vec_id")
-        .limit(_PQ_NQ)
-        .select(F.col("vec_id").alias("query_id"))
-    )
-    return probes.join(F.broadcast(hits), "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n"), F.lit(0)).alias("n_hits"),
-        F.expr(f"coalesce(n, 0) * 10000 div {_PQ_TOPK}").alias(
-            "recall_bp"
-        ),
+    return _pq_recall(
+        emb_1t, pq_adc_ann(spark, sf_dir).select("query_id", "vec_id")
     )
 
 
@@ -1316,24 +1354,7 @@ def pq_sampled_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     cand = _pq_adc_topk(emb, emb_1t, cb_row).select("query_id", "vec_id")
-    exact = _pq_exact_topk(emb_1t)
-    hits = (
-        exact.join(cand, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    probes = (
-        emb_1t.orderBy("vec_id")
-        .limit(_PQ_NQ)
-        .select(F.col("vec_id").alias("query_id"))
-    )
-    return probes.join(F.broadcast(hits), "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n"), F.lit(0)).alias("n_hits"),
-        F.expr(f"coalesce(n, 0) * 10000 div {_PQ_TOPK}").alias(
-            "recall_bp"
-        ),
-    )
+    return _pq_recall(emb_1t, cand)
 
 
 # ---------------------------------------------------------------- D26
@@ -1351,30 +1372,10 @@ def pq_sampled_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_CB_CACHE: dict[tuple, list] = {}
 
 
-def _embeddings_fingerprint(sf_dir: str) -> tuple:
-    """(path, mtime_ns, size) of the embeddings parquet file(s) —
-    cheap stat-level identity for the trained-constant memos."""
-    import glob as _glob
-    import os as _os
-
-    root = _os.path.join(sf_dir, "embeddings.parquet")
-    paths = sorted(_glob.glob(_os.path.join(root, "*.parquet"))) if (
-        _os.path.isdir(root)
-    ) else [root]
-    out = []
-    for p in paths:
-        try:
-            st = _os.stat(p)
-            out.append((p, st.st_mtime_ns, st.st_size))
-        except OSError:
-            out.append((p, 0, 0))
-    return tuple(out)
-
-
 def pq_train_codebook_cached(
     spark: SparkSession, sf_dir: str, iters: int = _PQ_TRAIN_ITERS
 ) -> list[list[list[float]]]:
-    key = (_embeddings_fingerprint(sf_dir), iters)
+    key = (table_fingerprint(sf_dir, "embeddings"), iters)
     if key not in _PQ_CB_CACHE:
         _PQ_CB_CACHE[key] = pq_train_codebook(spark, sf_dir, iters)
     return _PQ_CB_CACHE[key]
@@ -1464,23 +1465,7 @@ def pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = _pq_adc_topk(emb, emb_1t, cb_row).select("query_id", "vec_id")
     exact = _pq_exact_topk(emb_1t).select("query_id", "vec_id")
-    hits = (
-        exact.join(cand, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    probes = (
-        emb_1t.orderBy("vec_id")
-        .limit(_PQ_NQ)
-        .select(F.col("vec_id").alias("query_id"))
-    )
-    return probes.join(F.broadcast(hits), "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n"), F.lit(0)).alias("n_hits"),
-        F.expr(f"coalesce(n, 0) * 10000 div {_PQ_TOPK}").alias(
-            "recall_bp"
-        ),
-    )
+    return _pq_recall(emb_1t, cand, exact)
 
 
 # ---------------------------------------------------------------- D28
@@ -1520,7 +1505,7 @@ _IVF_CC_CACHE: dict[tuple, list] = {}
 def ivf_train_cells_cached(
     spark: SparkSession, sf_dir: str
 ) -> list[list[int]]:
-    key = _embeddings_fingerprint(sf_dir)
+    key = table_fingerprint(sf_dir, "embeddings")
     if key not in _IVF_CC_CACHE:
         _IVF_CC_CACHE[key] = ivf_train_cells(spark, sf_dir)
     return _IVF_CC_CACHE[key]
@@ -1942,17 +1927,13 @@ def _ivfpq_serve(
     serve drops 34.6 → ~12 s, matching D28c's many-files-per-cell
     accidental granularity. Results are identical by construction
     (same rows, same fold, same windows)."""
-    from pyspark.sql import Window
-
     if cents is None:
         cents = pq_train_codebook_cached(spark, sf_dir)
     if cells is None:
         cells = ivf_train_cells_cached(spark, sf_dir)
     cb_row = _pq_trained_cb_row(spark, cents)
     e_1t = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qsel = e_1t.where(F.col("vec_id") % _IVFPQ_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    qsel = _ivf_probes(e_1t, "embedding")
     # probe ranking via the Arrow GEMM kernel: with cells ≈ √n the old
     # posexplode-over-cell-dists fold was queries × cells × 64
     # interpreted evals + a window shuffle — the dominant term of the
@@ -1976,24 +1957,7 @@ def _ivfpq_serve(
     scored = cand.join(adc, "query_id").select(
         "query_id", "vec_id", _pq_adc_score().alias("score_u")
     )
-    salted = Window.partitionBy(
-        "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
-    ).orderBy("score_u", "vec_id")
-    final = Window.partitionBy("query_id").orderBy("score_u", "vec_id")
-    return (
-        scored.withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= k)
-        .withColumn("rank", F.row_number().over(final))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            (F.round(F.col("score_u") / 1e6, 6) + F.lit(0.0)).alias(
-                "adc_dist"
-            ),
-        )
-    )
+    return _served_adc(_salted_topk(scored, k, "score_u"))
 
 
 @register("ivfpq_ann", oracle=_ivfpq_oracle())
@@ -2031,9 +1995,7 @@ def ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     index once and serves from it — identical rows, same oracle.)"""
     cents = pq_train_codebook_cached(spark, sf_dir)
     if not cents or not cents[0]:
-        return spark.createDataFrame(
-            [], "query_id bigint, rank int, vec_id bigint, adc_dist double"
-        )
+        return spark.createDataFrame([], _SERVE_SCHEMA)
     return _ivfpq_serve(spark, sf_dir, _ivfpq_encoded(spark, sf_dir))
 
 
@@ -2077,7 +2039,7 @@ def materialized_index_path(
     import hashlib
     import os
 
-    key = (_embeddings_fingerprint(sf_dir), name)
+    key = (table_fingerprint(sf_dir, "embeddings"), name)
     path = _INDEX_STORE_CACHE.get(key)
     # a partitioned write leaves only _SUCCESS + cell_id=*/ dirs at the
     # top level, so validate on the success marker, not *.parquet
@@ -2133,9 +2095,7 @@ def ivfpq_ann_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     free."""
     cents = pq_train_codebook_cached(spark, sf_dir)
     if not cents or not cents[0]:
-        return spark.createDataFrame(
-            [], "query_id bigint, rank int, vec_id bigint, adc_dist double"
-        )
+        return spark.createDataFrame([], _SERVE_SCHEMA)
     encoded = read_parquet(spark, ivfpq_index_path(spark, sf_dir))
     return _ivfpq_serve(spark, sf_dir, encoded)
 
@@ -2243,8 +2203,6 @@ def ivfpq_exact_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors are touched for 30 rows/query regardless of corpus size;
     the exact distance is the integer micro-unit L2 (BIGINT,
     structural cross-engine equality, 1e-12 units like D29)."""
-    from pyspark.sql import Window
-
     cents = pq_train_codebook_cached(spark, sf_dir)
     if not cents or not cents[0]:
         return spark.createDataFrame(
@@ -2257,10 +2215,7 @@ def ivfpq_exact_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e_1t = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qv = F.broadcast(
-        e_1t.where(F.col("vec_id") % _IVFPQ_MOD == 0).select(
-            F.col("vec_id").alias("query_id"),
-            _ivfpq_xu_of(F.col("embedding")).alias("__qu"),
-        )
+        _ivf_probes(e_1t, _ivfpq_xu_of(F.col("embedding")).alias("__qu"))
     )
     cand = (
         F.broadcast(short)
@@ -2307,31 +2262,7 @@ def ivfpq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     computations per query buy back from code distortion — on this
     corpus at sf0.1 it recovers most of it (see SURVEY §6). Same
     exact reference, same report shape as the other recall dials."""
-    cand = (
-        ivfpq_exact_rerank(spark, sf_dir)
-        .select("query_id", "vec_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-    )
-    emb_1t = table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    qdf = emb_1t.where(F.col("vec_id") % _IVFPQ_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = _pq_exact_topk(emb_1t, qdf=qdf, k=_IVFPQ_K, exclude_self=True)
-    hits = (
-        exact.join(cand, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    probes = qdf.select("query_id")
-    return probes.join(F.broadcast(hits), "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n"), F.lit(0)).alias("n_hits"),
-        F.expr(f"coalesce(n, 0) * 10000 div {_IVFPQ_K}").alias(
-            "recall_bp"
-        ),
-    )
+    return _ivfpq_recall(spark, sf_dir, ivfpq_exact_rerank(spark, sf_dir))
 
 
 @register("ivfpq_recall", oracle=_ivfpq_recall_oracle())
@@ -2351,31 +2282,7 @@ def ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidates come from the SERVED index (D28c) — identical rows to
     inline D28 under the identical oracle, without re-encoding the
     corpus every time the dial is read (VERDICT r6 item 3)."""
-    cand = (
-        ivfpq_ann_served(spark, sf_dir)
-        .select("query_id", "vec_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-    )
-    emb_1t = table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    qdf = emb_1t.where(F.col("vec_id") % _IVFPQ_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = _pq_exact_topk(emb_1t, qdf=qdf, k=_IVFPQ_K, exclude_self=True)
-    hits = (
-        exact.join(cand, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    probes = qdf.select("query_id")
-    return probes.join(F.broadcast(hits), "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n"), F.lit(0)).alias("n_hits"),
-        F.expr(f"coalesce(n, 0) * 10000 div {_IVFPQ_K}").alias(
-            "recall_bp"
-        ),
-    )
+    return _ivfpq_recall(spark, sf_dir, ivfpq_ann_served(spark, sf_dir))
 
 
 # ---------------------------------------------------------------- D30
@@ -2675,7 +2582,7 @@ def _rpq_train(spark: SparkSession, sf_dir: str) -> list:
     """Integer Lloyd over residual subvectors (seeds = the 16 smallest
     vec_ids' residuals), memoized per dataset like the raw codebook.
     Returns cents_u[m][cid][j] BIGINT micro-units."""
-    key = _embeddings_fingerprint(sf_dir)
+    key = table_fingerprint(sf_dir, "embeddings")
     if key in _RPQ_CB_CACHE:
         return _RPQ_CB_CACHE[key]
     res = _rpq_residuals(spark, sf_dir)
@@ -2777,8 +2684,6 @@ def _rpq_serve(
     (|corpus|/mod rows, not the corpus), so serving cost is probe
     count × probed-cell occupancy regardless of where the index came
     from."""
-    from pyspark.sql import Window
-
     rcb_row = _rpq_cb_row(spark, _rpq_train(spark, sf_dir))
     cells_u = ivf_train_cells_cached(spark, sf_dir)
     # probe filter applied at the SCAN, then ONE Arrow pass emits the
@@ -2856,24 +2761,7 @@ def _rpq_serve(
         .join(adc, ["query_id", "cell_id"])
         .select("query_id", "vec_id", _pq_adc_score().alias("score_u"))
     )
-    salted = Window.partitionBy(
-        "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
-    ).orderBy("score_u", "vec_id")
-    final = Window.partitionBy("query_id").orderBy("score_u", "vec_id")
-    return (
-        scored.withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= _IVFPQ_K)
-        .withColumn("rank", F.row_number().over(final))
-        .where(F.col("rank") <= _IVFPQ_K)
-        .select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            (F.round(F.col("score_u") / 1e12, 6) + F.lit(0.0)).alias(
-                "adc_dist"
-            ),
-        )
-    )
+    return _served_adc(_salted_topk(scored, _IVFPQ_K, "score_u"), 1e12)
 
 
 @register("ivfpq_residual_ann", oracle=_rpq_oracle())
@@ -2908,9 +2796,7 @@ def ivfpq_residual_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, same oracle.)"""
     encoded = _rpq_encoded(spark, sf_dir)
     if encoded is None:
-        return spark.createDataFrame(
-            [], "query_id bigint, rank int, vec_id bigint, adc_dist double"
-        )
+        return spark.createDataFrame([], _SERVE_SCHEMA)
     return _rpq_serve(spark, sf_dir, encoded)
 
 
@@ -2940,9 +2826,7 @@ def ivfpq_residual_ann_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     does the cell restriction for free."""
     cells_u = ivf_train_cells_cached(spark, sf_dir)
     if not cells_u:
-        return spark.createDataFrame(
-            [], "query_id bigint, rank int, vec_id bigint, adc_dist double"
-        )
+        return spark.createDataFrame([], _SERVE_SCHEMA)
     encoded = read_parquet(spark, rpq_index_path(spark, sf_dir))
     return _rpq_serve(spark, sf_dir, encoded, static_prune=True)
 
@@ -3000,31 +2884,7 @@ def ivfpq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows to inline D29 under the identical oracle, without
     re-encoding the corpus every time the dial is read (VERDICT r6
     item 3)."""
-    cand = (
-        ivfpq_residual_ann_served(spark, sf_dir)
-        .select("query_id", "vec_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-    )
-    emb_1t = table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    qdf = emb_1t.where(F.col("vec_id") % _IVFPQ_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = _pq_exact_topk(emb_1t, qdf=qdf, k=_IVFPQ_K, exclude_self=True)
-    hits = (
-        exact.join(cand, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    probes = qdf.select("query_id")
-    return probes.join(F.broadcast(hits), "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n"), F.lit(0)).alias("n_hits"),
-        F.expr(f"coalesce(n, 0) * 10000 div {_IVFPQ_K}").alias(
-            "recall_bp"
-        ),
-    )
+    return _ivfpq_recall(spark, sf_dir, ivfpq_residual_ann_served(spark, sf_dir))
 
 
 # ---------------------------------------------------------------- D31
@@ -3180,16 +3040,9 @@ def _sq8_serve(
 ) -> DataFrame:
     """The D31 serving tail over any (vec_id, mns, mxs, codes)
     relation — inline-encoded or materialized."""
-    from pyspark.sql import Window
-
     e_1t = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     probes = F.broadcast(
-        e_1t.orderBy("vec_id")
-        .limit(_PQ_NQ)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            _sq8_xu_of(F.col("embedding")).alias("__qu"),
-        )
+        _pq_probes(e_1t, _sq8_xu_of(F.col("embedding")).alias("__qu"))
     )
     scored = probes.join(encoded).select(
         "query_id",
@@ -3207,21 +3060,11 @@ def _sq8_serve(
             ")".format(d=_EMBED_DIMS - 1)
         ).alias("score_su"),
     )
-    salted = Window.partitionBy(
-        "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
-    ).orderBy("score_su", "vec_id")
-    final = Window.partitionBy("query_id").orderBy("score_su", "vec_id")
-    return (
-        scored.withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= _PQ_TOPK)
-        .withColumn("rank", F.row_number().over(final))
-        .where(F.col("rank") <= _PQ_TOPK)
-        .select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            F.col("score_su").cast("long").alias("score_su"),
-        )
+    return _salted_topk(scored, _PQ_TOPK, "score_su").select(
+        "query_id",
+        F.col("rank").cast("int").alias("rank"),
+        "vec_id",
+        F.col("score_su").cast("long").alias("score_su"),
     )
 
 
@@ -3260,24 +3103,7 @@ def sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_1t = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    exact = _pq_exact_topk(emb_1t)
-    hits = (
-        exact.join(cand, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    probes = (
-        emb_1t.orderBy("vec_id")
-        .limit(_PQ_NQ)
-        .select(F.col("vec_id").alias("query_id"))
-    )
-    return probes.join(F.broadcast(hits), "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n"), F.lit(0)).alias("n_hits"),
-        F.expr(f"coalesce(n, 0) * 10000 div {_PQ_TOPK}").alias(
-            "recall_bp"
-        ),
-    )
+    return _pq_recall(emb_1t, cand)
 
 
 # ---------------------------------------------------------------- D32
@@ -3330,20 +3156,13 @@ def mips_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank with vec_id tie-pins — every ranking key is an exact BIGINT.
     Scale shape: broadcast probe rows against the corpus scan (the
     corpus never shuffles), salted two-stage top-k."""
-    from pyspark.sql import Window
-
     e = table(spark, sf_dir, "embeddings", fan_out="force").select(
         "vec_id", "embedding"
     )
     e_1t = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
     probes = F.broadcast(
-        e_1t.orderBy("vec_id")
-        .limit(_PQ_NQ)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            _ivfpq_xu_of(F.col("embedding")).alias("__qu"),
-        )
+        _pq_probes(e_1t, _ivfpq_xu_of(F.col("embedding")).alias("__qu"))
     )
     dot = F.aggregate(
         F.zip_with("__qu", "__xu", lambda a, b: a * b),
@@ -3355,23 +3174,11 @@ def mips_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", dot.alias("score_u"))
     )
-    salted = Window.partitionBy(
-        "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
-    ).orderBy(F.col("score_u").desc(), "vec_id")
-    final = Window.partitionBy("query_id").orderBy(
-        F.col("score_u").desc(), "vec_id"
-    )
-    return (
-        scored.withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= _PQ_TOPK)
-        .withColumn("rank", F.row_number().over(final))
-        .where(F.col("rank") <= _PQ_TOPK)
-        .select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            F.col("score_u").cast("long").alias("score_u"),
-        )
+    return _salted_topk(scored, _PQ_TOPK, F.col("score_u").desc()).select(
+        "query_id",
+        F.col("rank").cast("int").alias("rank"),
+        "vec_id",
+        F.col("score_u").cast("long").alias("score_u"),
     )
 
 
@@ -3523,7 +3330,7 @@ def _opq_oracle() -> str:
 
 
 def opq_perm_cached(spark: SparkSession, sf_dir: str) -> list[int]:
-    key = _embeddings_fingerprint(sf_dir)
+    key = table_fingerprint(sf_dir, "embeddings")
     if key not in _OPQ_PERM_CACHE:
         _OPQ_PERM_CACHE[key] = opq_train_perm(spark, sf_dir)
     return _OPQ_PERM_CACHE[key]
@@ -3568,7 +3375,7 @@ def _opq_rotated(
 
 
 def opq_train_codebook_cached(spark: SparkSession, sf_dir: str) -> list:
-    key = (_embeddings_fingerprint(sf_dir), "opq")
+    key = (table_fingerprint(sf_dir, "embeddings"), "opq")
     if key not in _OPQ_CB_CACHE:
         perm = opq_perm_cached(spark, sf_dir)
         _OPQ_CB_CACHE[key] = (
@@ -3616,7 +3423,7 @@ def opq_gate_cached(spark: SparkSession, sf_dir: str) -> bool:
     """True iff the trained rotation improves integer training
     distortion by ≥ 1% (du_rot·100 ≤ du_id·99) — the accept test the
     oracle's pick CTE replays."""
-    key = _embeddings_fingerprint(sf_dir)
+    key = table_fingerprint(sf_dir, "embeddings")
     if key not in _OPQ_GATE_CACHE:
         perm = opq_perm_cached(spark, sf_dir)
         if not perm:
@@ -3650,9 +3457,7 @@ def opq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     perm = opq_perm_cached(spark, sf_dir)
     cents_id = pq_train_codebook_cached(spark, sf_dir)
     if not perm or not cents_id or not cents_id[0]:
-        return spark.createDataFrame(
-            [], "query_id bigint, rank int, vec_id bigint, adc_dist double"
-        )
+        return spark.createDataFrame([], _SERVE_SCHEMA)
     if opq_gate_cached(spark, sf_dir):
         cents = opq_train_codebook_cached(spark, sf_dir)
         emb = _opq_rotated(spark, sf_dir, perm, fan_out="force")
@@ -3666,14 +3471,7 @@ def opq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "embedding"
         )
     cb_row = _pq_trained_cb_row(spark, cents)
-    return _pq_adc_topk(emb, emb_1t, cb_row).select(
-        "query_id",
-        F.col("rank").cast("int").alias("rank"),
-        "vec_id",
-        (F.round(F.col("score_u") / 1e6, 6) + F.lit(0.0)).alias(
-            "adc_dist"
-        ),
-    )
+    return _served_adc(_pq_adc_topk(emb, emb_1t, cb_row))
 
 
 def _opq_wide_cand_sql(suffix: str, corpus: str, cbn: str, qn: str) -> str:

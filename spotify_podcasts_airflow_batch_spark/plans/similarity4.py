@@ -56,25 +56,27 @@ from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
     _IVFPQ_K,
     _IVFPQ_MOD,
     _IVFPQ_NPROBE,
-    _embeddings_fingerprint,
+    _SERVE_SCHEMA,
     _index_store_root,
     _ivf_lloyd_sql,
     _ivfpq_encoded,
+    _ivfpq_recall,
     _ivfpq_serve,
-    _pq_exact_topk,
     _pq_lloyd_sql,
     _pq_case_sql,
     ivf_train_cells,
     pq_train_codebook,
 )
-from spotify_podcasts_airflow_batch_spark.sources.readers import read_parquet, table
+from spotify_podcasts_airflow_batch_spark.sources.readers import (
+    read_parquet,
+    table,
+    table_fingerprint,
+)
 
 _INC_WAVES = 3  # day-0 base + two daily append batches
 _INC_TOMB_MOD = 7  # tombstone base rows with vec_id % 7 == 0
 
 _INC_STORE_CACHE: dict[tuple, str] = {}
-
-_SERVE_SCHEMA = "query_id bigint, rank int, vec_id bigint, adc_dist double"
 
 
 def _emb(spark: SparkSession, sf_dir: str, fan_out: str | None = None):
@@ -167,7 +169,7 @@ def ivfpq_incremental_store(spark: SparkSession, sf_dir: str) -> str:
     is deterministic, so the memo can never change a result."""
     import hashlib
 
-    key = (_embeddings_fingerprint(sf_dir), "ivfpq_inc")
+    key = (table_fingerprint(sf_dir, "embeddings"), "ivfpq_inc")
     path = _INC_STORE_CACHE.get(key)
     if path is not None and _store_is_valid(path):
         return path
@@ -460,7 +462,7 @@ def ivfpq_retrained_store(spark: SparkSession, sf_dir: str) -> str:
     never change a result."""
     import hashlib
 
-    key = (_embeddings_fingerprint(sf_dir), "ivfpq_retrained")
+    key = (table_fingerprint(sf_dir, "embeddings"), "ivfpq_retrained")
     vroot = _INC_STORE_CACHE.get(key)
     if vroot is not None:
         cur = read_current_pointer(vroot)
@@ -482,7 +484,7 @@ def ivfpq_retrained_store(spark: SparkSession, sf_dir: str) -> str:
 
 
 def ivfpq_compacted_store(spark: SparkSession, sf_dir: str) -> str:
-    key = (_embeddings_fingerprint(sf_dir), "ivfpq_inc_compact")
+    key = (table_fingerprint(sf_dir, "embeddings"), "ivfpq_inc_compact")
     path = _INC_STORE_CACHE.get(key)
     if path is not None and _store_is_valid(path):
         return path
@@ -783,6 +785,36 @@ def _inc_staleness_oracle(serve_sql: str | None = None) -> str:
 
 
 # ------------------------------------------------------------ queries
+def _serve_store(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
+    """The D28c tail over the live rows of the store at ``root``,
+    scored with its FROZEN quantizers; an empty-corpus store serves no
+    rows."""
+    cents, cells = _load_artifacts(root)
+    if not cents or not cents[0] or not cells:
+        return spark.createDataFrame([], _SERVE_SCHEMA)
+    encoded = incremental_live_index(spark, root)
+    return _ivfpq_serve(
+        spark, sf_dir, encoded, cents=cents, cells=cells, rebalance=True
+    )
+
+
+def _live_recall(spark: SparkSession, sf_dir: str, store, served) -> DataFrame:
+    """Recall@_IVFPQ_K of a store's ``served`` rows against exact L2
+    over the LIVE corpus (the 3-wave corpus minus the tombstoned base
+    rows), self-excluded — the D40/D44b formula; ``store`` locates the
+    store whose artifacts decide the empty-corpus case."""
+    cents, cells = _load_artifacts(store(spark, sf_dir))
+    if not cents or not cents[0] or not cells:
+        return spark.createDataFrame(
+            [], "query_id bigint, n_hits bigint, recall_bp bigint"
+        )
+    live = ~(
+        (F.col("vec_id") % _INC_WAVES == 0)
+        & (F.col("vec_id") % _INC_TOMB_MOD == 0)
+    )
+    return _ivfpq_recall(spark, sf_dir, served(spark, sf_dir), live)
+
+
 @register("ivfpq_incremental_served", oracle=_inc_serve_oracle())
 def ivfpq_incremental_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D39 — IVF-PQ serving from an INCREMENTALLY MAINTAINED index:
@@ -800,14 +832,7 @@ def ivfpq_incremental_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the only maintainable shape: a daily append costs
     |batch| encode work + one partition-local write; the alternative
     (re-encode the corpus) costs O(corpus) per day."""
-    root = ivfpq_incremental_store(spark, sf_dir)
-    cents, cells = _load_artifacts(root)
-    if not cents or not cents[0] or not cells:
-        return spark.createDataFrame([], _SERVE_SCHEMA)
-    encoded = incremental_live_index(spark, root)
-    return _ivfpq_serve(
-        spark, sf_dir, encoded, cents=cents, cells=cells, rebalance=True
-    )
+    return _serve_store(spark, sf_dir, ivfpq_incremental_store(spark, sf_dir))
 
 
 @register("ivfpq_compacted_served", oracle=_inc_serve_oracle())
@@ -820,14 +845,7 @@ def ivfpq_compacted_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     that compaction changed layout, not content. At 100 TB this is
     the weekly job that keeps N daily appends from turning every hot
     cell into N small files."""
-    root = ivfpq_compacted_store(spark, sf_dir)
-    cents, cells = _load_artifacts(root)
-    if not cents or not cents[0] or not cells:
-        return spark.createDataFrame([], _SERVE_SCHEMA)
-    encoded = incremental_live_index(spark, root)
-    return _ivfpq_serve(
-        spark, sf_dir, encoded, cents=cents, cells=cells, rebalance=True
-    )
+    return _serve_store(spark, sf_dir, ivfpq_compacted_store(spark, sf_dir))
 
 
 @register("ann_index_segments", oracle=_inc_segments_oracle())
@@ -927,40 +945,8 @@ def ann_staleness_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrained on the full corpus): the gap is what serving appends on
     stale centroids costs, and D34 ``centroid_drift`` prices when to
     pay the retrain that closes it."""
-    root = ivfpq_incremental_store(spark, sf_dir)
-    cents, cells = _load_artifacts(root)
-    if not cents or not cents[0] or not cells:
-        return spark.createDataFrame(
-            [], "query_id bigint, n_hits bigint, recall_bp bigint"
-        )
-    cand = (
-        ivfpq_incremental_served(spark, sf_dir)
-        .select("query_id", "vec_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-    )
-    emb_1t = _emb(spark, sf_dir)
-    live_1t = emb_1t.where(
-        ~(
-            (F.col("vec_id") % _INC_WAVES == 0)
-            & (F.col("vec_id") % _INC_TOMB_MOD == 0)
-        )
-    )
-    qdf = emb_1t.where(F.col("vec_id") % _IVFPQ_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = _pq_exact_topk(live_1t, qdf=qdf, k=_IVFPQ_K, exclude_self=True)
-    hits = (
-        exact.join(cand, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    probes = qdf.select("query_id")
-    return probes.join(F.broadcast(hits), "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n"), F.lit(0)).alias("n_hits"),
-        F.expr(f"coalesce(n, 0) * 10000 div {_IVFPQ_K}").alias(
-            "recall_bp"
-        ),
+    return _live_recall(
+        spark, sf_dir, ivfpq_incremental_store, ivfpq_incremental_served
     )
 
 
@@ -981,7 +967,7 @@ def ivfpq_streamed_store(spark: SparkSession, sf_dir: str) -> str:
     import hashlib
     import shutil
 
-    key = (_embeddings_fingerprint(sf_dir), "ivfpq_streamed")
+    key = (table_fingerprint(sf_dir, "embeddings"), "ivfpq_streamed")
     path = _INC_STORE_CACHE.get(key)
     if path is not None and _store_is_valid(path):
         return path
@@ -1044,14 +1030,7 @@ def ivfpq_retrained_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the store says is alive. At 100 TB this is the quarterly
     job: O(corpus) re-encode paid once, against the daily O(new)
     appends the frozen artifacts otherwise serve."""
-    root = ivfpq_retrained_store(spark, sf_dir)
-    cents, cells = _load_artifacts(root)
-    if not cents or not cents[0] or not cells:
-        return spark.createDataFrame([], _SERVE_SCHEMA)
-    encoded = incremental_live_index(spark, root)
-    return _ivfpq_serve(
-        spark, sf_dir, encoded, cents=cents, cells=cells, rebalance=True
-    )
+    return _serve_store(spark, sf_dir, ivfpq_retrained_store(spark, sf_dir))
 
 
 @register(
@@ -1067,40 +1046,8 @@ def ivfpq_retrained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two side by side to see what the retrain bought back of the
     staleness gap D40 prices (cells re-fit to the grown corpus, so
     probed cells once again cover the true neighborhoods)."""
-    root = ivfpq_retrained_store(spark, sf_dir)
-    cents, cells = _load_artifacts(root)
-    if not cents or not cents[0] or not cells:
-        return spark.createDataFrame(
-            [], "query_id bigint, n_hits bigint, recall_bp bigint"
-        )
-    cand = (
-        ivfpq_retrained_served(spark, sf_dir)
-        .select("query_id", "vec_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-    )
-    emb_1t = _emb(spark, sf_dir)
-    live_1t = emb_1t.where(
-        ~(
-            (F.col("vec_id") % _INC_WAVES == 0)
-            & (F.col("vec_id") % _INC_TOMB_MOD == 0)
-        )
-    )
-    qdf = emb_1t.where(F.col("vec_id") % _IVFPQ_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = _pq_exact_topk(live_1t, qdf=qdf, k=_IVFPQ_K, exclude_self=True)
-    hits = (
-        exact.join(cand, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    probes = qdf.select("query_id")
-    return probes.join(F.broadcast(hits), "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n"), F.lit(0)).alias("n_hits"),
-        F.expr(f"coalesce(n, 0) * 10000 div {_IVFPQ_K}").alias(
-            "recall_bp"
-        ),
+    return _live_recall(
+        spark, sf_dir, ivfpq_retrained_store, ivfpq_retrained_served
     )
 
 
@@ -1113,11 +1060,4 @@ def ivfpq_streamed_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the store). Shares D39's ONE-SHOT REBUILD oracle verbatim,
     so a green hash row is the cross-engine proof that streamed
     ingest ≡ batch appends ≡ full rebuild."""
-    root = ivfpq_streamed_store(spark, sf_dir)
-    cents, cells = _load_artifacts(root)
-    if not cents or not cents[0] or not cells:
-        return spark.createDataFrame([], _SERVE_SCHEMA)
-    encoded = incremental_live_index(spark, root)
-    return _ivfpq_serve(
-        spark, sf_dir, encoded, cents=cents, cells=cells, rebalance=True
-    )
+    return _serve_store(spark, sf_dir, ivfpq_streamed_store(spark, sf_dir))

@@ -515,11 +515,11 @@ def read_xml(
 def table_fingerprint(sf_dir: str, *names: str) -> tuple:
     """Stat-level identity of one or more dataset tables: (path,
     mtime_ns, size) for every data file of each named table under
-    ``sf_dir`` — the generalized form of similarity2's
-    ``_embeddings_fingerprint``, for memo keys that must cover the
-    exact tables they cache (ADVICE r9: a bucketed lineitem/orders
-    layout keyed on the *embeddings* fingerprint served stale tables
-    when lineitem was regenerated). Cheap: a stat per file, no reads."""
+    ``sf_dir`` — the key of every trained-constant and index-store
+    memo, which must cover the exact tables it caches (ADVICE r9: a
+    bucketed lineitem/orders layout keyed on the *embeddings*
+    fingerprint served stale tables when lineitem was regenerated).
+    Cheap: a stat per file, no reads."""
     out = []
     for name in names:
         root = os.path.join(sf_dir, f"{name}.parquet")

@@ -135,3 +135,29 @@ def test_run_backfill_job_count(pipe, spark):
     rather than from one inference job each."""
     pipe.run_daily()
     assert jobs_run(spark, lambda: pipe.run_backfill(*BACKFILL)) == 3
+
+
+def test_run_daily_matches_duckdb(pipe, sf_dir, tmp_path):
+    """The published charts equal DuckDB's chart — the consolidated CSV
+    and every daily parquet partition, after ``run_daily`` and again
+    after a backfill overwrites a date slice. The oracle and the
+    canonical hashes are the benchmark's own (``perfbench/oracles.py``)."""
+    from perfbench.oracles import (
+        connect,
+        consolidated_csv_hash,
+        daily_parquet_hash,
+        podcast_expected,
+    )
+
+    con = connect(sf_dir, ["events", "customer"], str(tmp_path / "duck"))
+    try:
+        want = podcast_expected(con, pipe.chart_len)
+        assert int(want.split(":")[0]) > 0
+        csv = pipe.run_daily()
+        assert consolidated_csv_hash(con, csv) == want
+        assert daily_parquet_hash(con, pipe.charts_path) == want
+        pipe.run_backfill(*BACKFILL)
+        assert consolidated_csv_hash(con, csv) == want
+        assert daily_parquet_hash(con, pipe.charts_path) == want
+    finally:
+        con.close()

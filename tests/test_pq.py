@@ -1,7 +1,8 @@
 """D24/D25/D26 — product-quantization ANN: Lloyd monotonicity of the
-trained codebook, the recall dial's schema/range contract, and the
+trained codebook, the recall dial's schema/range contract, the
 semantic identity of the SQL-text PQ builders with the Column-DSL
-form they replaced."""
+form they replaced, and of the shared serve/recall tail with the
+inline chains it replaced."""
 
 from __future__ import annotations
 
@@ -9,22 +10,34 @@ import struct
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import Window
 
 from spotify_podcasts_airflow_batch_spark.plans.registry import all_queries
 from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
     _EMBED_DIMS,
+    _IVFPQ_K,
+    _IVFPQ_MOD,
     _PQ_M,
     _PQ_NQ,
+    _PQ_SALTS,
     _PQ_SUB,
+    _PQ_TOPK,
     _PQ_TRAIN_ITERS,
+    _ivf_probes,
     _pq_adc_score,
     _pq_adc_table,
     _pq_codes,
+    _pq_exact_topk,
     _pq_sample_distortion_u,
     _pq_trained_cb_row,
     _rpq_cb_row,
     _rpq_train,
     ivf_train_cells,
+    ivfpq_ann_served,
+    ivfpq_recall,
+    mips_brute,
+    pq_adc_ann,
+    pq_adc_recall,
     pq_train_codebook,
 )
 from spotify_podcasts_airflow_batch_spark.sources.readers import table
@@ -401,3 +414,124 @@ def test_served_frame_matches_dsl_tree(spark, sf_dir, monkeypatch):
     )
     monkeypatch.setattr(similarity2, "_pq_adc_score", _dsl_adc_score)
     _assert_same_tree(got, ivfpq_incremental_served(spark, sf_dir))
+
+
+# ------------------------------------------------------------------
+# Every ANN serve and recall dial goes through one salted top-k
+# (``_salted_topk``) and one recall report (``_recall_report``). The
+# chains below are the hand-rolled copies those helpers replaced, kept
+# as the reference: each query must build the same analyzed tree.
+
+
+def _assert_same_tree_and_hints(got, want):
+    """``sameSemantics`` erases hints (a hint never changes a result),
+    so the broadcast hints the chains place are counted separately."""
+    _assert_same_tree(got, want)
+
+    def hints(df):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return plan.count("strategy=broadcast")
+
+    assert hints(got) == hints(want)
+
+
+def _inline_topk(scored, k, *order, rank="rank"):
+    salted = Window.partitionBy(
+        "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
+    ).orderBy(*order, "vec_id")
+    final = Window.partitionBy("query_id").orderBy(*order, "vec_id")
+    return (
+        scored.withColumn("__srn", F.row_number().over(salted))
+        .where(F.col("__srn") <= k)
+        .withColumn(rank, F.row_number().over(final))
+        .where(F.col(rank) <= k)
+    )
+
+
+def _inline_recall(probes, exact, cand, k):
+    hits = (
+        exact.join(cand, ["query_id", "vec_id"])
+        .groupBy("query_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    return probes.join(F.broadcast(hits), "query_id", "left").select(
+        "query_id",
+        F.coalesce(F.col("n"), F.lit(0)).alias("n_hits"),
+        F.expr(f"coalesce(n, 0) * 10000 div {k}").alias("recall_bp"),
+    )
+
+
+def _inline_pq_adc_recall(spark, sf_dir):
+    emb_1t = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    exact = _pq_exact_topk(emb_1t)
+    cand = pq_adc_ann(spark, sf_dir).select("query_id", "vec_id")
+    probes = (
+        emb_1t.orderBy("vec_id")
+        .limit(_PQ_NQ)
+        .select(F.col("vec_id").alias("query_id"))
+    )
+    return _inline_recall(probes, exact, cand, _PQ_TOPK)
+
+
+def _inline_ivfpq_recall(spark, sf_dir):
+    cand = (
+        ivfpq_ann_served(spark, sf_dir)
+        .select("query_id", "vec_id")
+        .where(F.col("vec_id") != F.col("query_id"))
+    )
+    emb_1t = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    qdf = emb_1t.where(F.col("vec_id") % _IVFPQ_MOD == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    exact = _pq_exact_topk(emb_1t, qdf=qdf, k=_IVFPQ_K, exclude_self=True)
+    return _inline_recall(qdf.select("query_id"), exact, cand, _IVFPQ_K)
+
+
+@pytest.mark.fast
+def test_shared_tails_match_inline_trees(spark, sf_dir, monkeypatch):
+    """Ascending (pq_adc_ann's score_u) and descending (mips_brute)
+    top-k, the exact-L2 reference with self-exclusion, the rebalanced
+    store serve, and one recall dial per k build the trees of the
+    inline chains; the exact reference's old ``r`` rank alias is erased
+    by canonicalization."""
+    from spotify_podcasts_airflow_batch_spark.plans import similarity2
+    from spotify_podcasts_airflow_batch_spark.plans.similarity4 import (
+        ivfpq_incremental_served,
+    )
+
+    emb_1t = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+
+    def exact():
+        return _pq_exact_topk(
+            emb_1t,
+            qdf=_ivf_probes(emb_1t, "embedding"),
+            k=_IVFPQ_K,
+            exclude_self=True,
+        )
+
+    shared = {
+        "pq_adc_ann": pq_adc_ann(spark, sf_dir),
+        "mips_brute": mips_brute(spark, sf_dir),
+        "ivfpq_incremental_served": ivfpq_incremental_served(spark, sf_dir),
+        "pq_adc_recall": pq_adc_recall(spark, sf_dir),
+        "ivfpq_recall": ivfpq_recall(spark, sf_dir),
+    }
+    got_exact = exact()
+
+    monkeypatch.setattr(similarity2, "_salted_topk", _inline_topk)
+    inline = {
+        "pq_adc_ann": pq_adc_ann(spark, sf_dir),
+        "mips_brute": mips_brute(spark, sf_dir),
+        "ivfpq_incremental_served": ivfpq_incremental_served(spark, sf_dir),
+        "pq_adc_recall": _inline_pq_adc_recall(spark, sf_dir),
+        "ivfpq_recall": _inline_ivfpq_recall(spark, sf_dir),
+    }
+    for name, got in shared.items():
+        _assert_same_tree_and_hints(got, inline[name])
+
+    monkeypatch.setattr(
+        similarity2,
+        "_salted_topk",
+        lambda scored, k, *order: _inline_topk(scored, k, *order, rank="r"),
+    )
+    _assert_same_tree_and_hints(got_exact, exact())
