@@ -13,6 +13,7 @@ recall dashboard, not a unit test.
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -24,6 +25,7 @@ from spotify_podcasts_airflow_batch_spark.operators.similarity import (
 )
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
 from spotify_podcasts_airflow_batch_spark.sources.readers import (
+    built_store,
     read_parquet,
     table,
     table_fingerprint,
@@ -1999,33 +2001,14 @@ def ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivfpq_serve(spark, sf_dir, _ivfpq_encoded(spark, sf_dir))
 
 
-# Materialized-index store: paths of written code-table parquets,
-# keyed by (dataset fingerprint, index name) like the trained
-# constants. Writing an index is a pure function of the
-# (immutable-per-fingerprint) data, so the memo can never change a
-# result — only turn the per-run re-encode into the one-off
-# index-build job production actually runs (measured at 200k vectors /
-# 6.5k probe queries: inline re-encode+serve 66 s per run,
-# served-from-codes 24 s per run after a 31 s one-off build — the
-# residual 24 s IS the probed-occupancy scoring, ~3.7 ms/query;
-# SURVEY §6 round-6 scale-up note). All indexes live under ONE root
-# temp dir removed at process exit, and a memoized path is validated
-# before serving (rebuilt on miss) so an externally-removed dir can't
-# serve a dangling read (ADVICE r6).
+# Materialized-index store: the written code-table parquets, one
+# built-once store per (embeddings fingerprint, index name)
+# (readers.built_store). Measured at 200k vectors / 6.5k probe
+# queries: inline re-encode+serve 66 s per run, served-from-codes 24 s
+# per run after a 31 s one-off build — the residual 24 s IS the
+# probed-occupancy scoring, ~3.7 ms/query (SURVEY §6 round-6 scale-up
+# note).
 _INDEX_STORE_CACHE: dict[tuple, str] = {}
-_INDEX_STORE_ROOT: list[str] = []
-
-
-def _index_store_root() -> str:
-    if not _INDEX_STORE_ROOT:
-        import atexit
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="ann_index_store_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _INDEX_STORE_ROOT.append(root)
-    return _INDEX_STORE_ROOT[0]
 
 
 def materialized_index_path(
@@ -2036,25 +2019,23 @@ def materialized_index_path(
     memoized path no longer holds data). ``partition_by`` lays the
     index out hive-partitioned on that column — the 100 TB layout for
     cell-restricted serving (see ivfpq_index_path)."""
-    import hashlib
-    import os
 
-    key = (table_fingerprint(sf_dir, "embeddings"), name)
-    path = _INDEX_STORE_CACHE.get(key)
+    def write(path: str) -> None:
+        w = build().write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(partition_by)
+        w.parquet(path)
+
     # a partitioned write leaves only _SUCCESS + cell_id=*/ dirs at the
     # top level, so validate on the success marker, not *.parquet
-    if path is not None and os.path.isfile(
-        os.path.join(path, "_SUCCESS")
-    ):
-        return path
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    path = os.path.join(_index_store_root(), f"{name}_{digest}")
-    w = build().write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(path)
-    _INDEX_STORE_CACHE[key] = path
-    return path
+    return built_store(
+        _INDEX_STORE_CACHE,
+        sf_dir,
+        "embeddings",
+        name,
+        write,
+        lambda path: os.path.isfile(os.path.join(path, "_SUCCESS")),
+    )
 
 
 def ivfpq_index_path(spark: SparkSession, sf_dir: str) -> str:

@@ -57,7 +57,6 @@ from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
     _IVFPQ_MOD,
     _IVFPQ_NPROBE,
     _SERVE_SCHEMA,
-    _index_store_root,
     _ivf_lloyd_sql,
     _ivfpq_encoded,
     _ivfpq_recall,
@@ -68,9 +67,9 @@ from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
     pq_train_codebook,
 )
 from spotify_podcasts_airflow_batch_spark.sources.readers import (
+    built_store,
     read_parquet,
     table,
-    table_fingerprint,
 )
 
 _INC_WAVES = 3  # day-0 base + two daily append batches
@@ -164,36 +163,44 @@ def tombstone_ids(spark: SparkSession, root: str, ids: DataFrame) -> None:
 def ivfpq_incremental_store(spark: SparkSession, sf_dir: str) -> str:
     """The deterministic 3-wave store over ``sf_dir``'s embeddings
     (base = vec_id % 3 == 0, two appends, base deletes tombstoned) —
-    the fixture every D39/D39b/D40/D41 query serves from. Memoized
-    per dataset fingerprint like the other served indexes; building
-    is deterministic, so the memo can never change a result."""
-    import hashlib
+    the fixture every D39/D39b/D40/D41 query serves from. A
+    built-once store (readers.built_store) like the other served
+    indexes; building is deterministic, so the memo can never change
+    a result."""
 
-    key = (table_fingerprint(sf_dir, "embeddings"), "ivfpq_inc")
-    path = _INC_STORE_CACHE.get(key)
-    if path is not None and _store_is_valid(path):
-        return path
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    root = os.path.join(_index_store_root(), f"ivfpq_inc_{digest}")
+    def build(root: str) -> None:
+        emb = _build_base_with_tombstones(spark, sf_dir, root)
+        if emb is not None:
+            for w in range(1, _INC_WAVES):
+                append_batch(spark, root, _wave(emb, w), epoch=w)
+
+    return built_store(
+        _INC_STORE_CACHE, sf_dir, "embeddings", "ivfpq_inc", build,
+        _store_is_valid,
+    )
+
+
+def _build_base_with_tombstones(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame | None:
+    """Day-0 base build at ``root`` plus the base-wave deletes; returns
+    the corpus the append waves are cut from (None for an empty
+    corpus, whose store is its artifacts alone)."""
     emb = _emb(spark, sf_dir, fan_out="force")
     build_base_store(spark, sf_dir, _wave(emb, 0), root)
     cents, cells = _load_artifacts(root)
-    if cents and cents[0] and cells:
-        # deletes arrive after day 0: tombstone, never rewrite
-        tombstone_ids(
-            spark,
-            root,
-            _wave(emb, 0).where(F.col("vec_id") % _INC_TOMB_MOD == 0),
-        )
-        for w in range(1, _INC_WAVES):
-            append_batch(spark, root, _wave(emb, w), epoch=w)
-    _INC_STORE_CACHE[key] = root
-    return root
+    if not (cents and cents[0] and cells):
+        return None
+    # deletes arrive after day 0: tombstone, never rewrite
+    tombstone_ids(
+        spark, root, _wave(emb, 0).where(F.col("vec_id") % _INC_TOMB_MOD == 0)
+    )
+    return emb
 
 
 def _store_is_valid(root: str) -> bool:
     """Memoized-path validation before serving (the ADVICE r6
-    dangling-read lesson from materialized_index_path): a store is
+    dangling-read lesson from readers.built_store): a store is
     servable when its artifacts exist AND — for a non-empty corpus —
     its segment write committed (_SUCCESS). An externally-removed
     segments dir must trigger a rebuild, not a dangling read."""
@@ -457,52 +464,51 @@ def ivfpq_retrained_store(spark: SparkSession, sf_dir: str) -> str:
     """The D44 fixture: version root holding the incremental store as
     the BLUE version and a live-corpus retrain as the GREEN one, with
     an atomic ``CURRENT`` pointer cutover — returns the store the
-    pointer serves (post-cutover: the retrained one). Memoized like
-    the other served indexes; deterministic build, so the memo can
-    never change a result."""
-    import hashlib
+    pointer serves (post-cutover: the retrained one). A built-once
+    store like the other served indexes; deterministic build, so the
+    memo can never change a result."""
 
-    key = (table_fingerprint(sf_dir, "embeddings"), "ivfpq_retrained")
-    vroot = _INC_STORE_CACHE.get(key)
-    if vroot is not None:
+    def build(vroot: str) -> None:
+        root = ivfpq_incremental_store(spark, sf_dir)
+        # blue: the incremental store keeps serving while retrain builds
+        write_current_pointer(vroot, root)
+        cents, cells = _load_artifacts(root)
+        if cents and cents[0] and cells:
+            new = os.path.join(vroot, "v001")
+            retrain_store(spark, sf_dir, root, new)
+            # green: one atomic pointer swap; blue stays for rollback
+            write_current_pointer(vroot, new)
+
+    def valid(vroot: str) -> bool:
         cur = read_current_pointer(vroot)
-        if cur is not None and _store_is_valid(cur):
-            return cur
-    root = ivfpq_incremental_store(spark, sf_dir)
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    vroot = os.path.join(_index_store_root(), f"ivfpq_ver_{digest}")
-    # blue: the incremental store keeps serving while retrain builds
-    write_current_pointer(vroot, root)
-    cents, cells = _load_artifacts(root)
-    if cents and cents[0] and cells:
-        new = os.path.join(vroot, "v001")
-        retrain_store(spark, sf_dir, root, new)
-        # green: one atomic pointer swap; blue stays for rollback
-        write_current_pointer(vroot, new)
-    _INC_STORE_CACHE[key] = vroot
+        return cur is not None and _store_is_valid(cur)
+
+    vroot = built_store(
+        _INC_STORE_CACHE, sf_dir, "embeddings", "ivfpq_retrained", build,
+        valid,
+    )
     return read_current_pointer(vroot)
 
 
 def ivfpq_compacted_store(spark: SparkSession, sf_dir: str) -> str:
-    key = (table_fingerprint(sf_dir, "embeddings"), "ivfpq_inc_compact")
-    path = _INC_STORE_CACHE.get(key)
-    if path is not None and _store_is_valid(path):
-        return path
-    root = ivfpq_incremental_store(spark, sf_dir)
-    out = root + "_compact"
-    cents, cells = _load_artifacts(root)
-    if cents and cents[0] and cells:
-        compact_store(spark, root, out)
-    else:
-        import shutil
+    def build(out: str) -> None:
+        root = ivfpq_incremental_store(spark, sf_dir)
+        cents, cells = _load_artifacts(root)
+        if cents and cents[0] and cells:
+            compact_store(spark, root, out)
+        else:
+            import shutil
 
-        os.makedirs(out, exist_ok=True)
-        shutil.copyfile(
-            os.path.join(root, "artifacts.json"),
-            os.path.join(out, "artifacts.json"),
-        )
-    _INC_STORE_CACHE[key] = out
-    return out
+            os.makedirs(out, exist_ok=True)
+            shutil.copyfile(
+                os.path.join(root, "artifacts.json"),
+                os.path.join(out, "artifacts.json"),
+            )
+
+    return built_store(
+        _INC_STORE_CACHE, sf_dir, "embeddings", "ivfpq_inc_compact", build,
+        _store_is_valid,
+    )
 
 
 # ------------------------------------------------------------ oracles
@@ -964,25 +970,12 @@ def ivfpq_streamed_store(spark: SparkSession, sf_dir: str) -> str:
     epoch-value-agnostic (the live index unions epoch segments), so
     the result does not depend on micro-batch boundaries."""
     import glob
-    import hashlib
     import shutil
 
-    key = (table_fingerprint(sf_dir, "embeddings"), "ivfpq_streamed")
-    path = _INC_STORE_CACHE.get(key)
-    if path is not None and _store_is_valid(path):
-        return path
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    root = os.path.join(_index_store_root(), f"ivfpq_stream_{digest}")
-    shutil.rmtree(root, ignore_errors=True)
-    emb = _emb(spark, sf_dir, fan_out="force")
-    build_base_store(spark, sf_dir, _wave(emb, 0), root)
-    cents, cells = _load_artifacts(root)
-    if cents and cents[0] and cells:
-        tombstone_ids(
-            spark,
-            root,
-            _wave(emb, 0).where(F.col("vec_id") % _INC_TOMB_MOD == 0),
-        )
+    def build(root: str) -> None:
+        emb = _build_base_with_tombstones(spark, sf_dir, root)
+        if emb is None:
+            return
         in_dir = os.path.join(root, "_incoming")
         os.makedirs(in_dir, exist_ok=True)
         for w in range(1, _INC_WAVES):
@@ -1000,17 +993,21 @@ def ivfpq_streamed_store(spark: SparkSession, sf_dir: str) -> str:
             from spotify_podcasts_airflow_batch_spark.streaming.ann_ingest import (  # noqa: E501 — runtime import breaks the module cycle
                 stream_ann_ingest,
             )
-
-            q = stream_ann_ingest(
-                spark, in_dir, root, os.path.join(root, "_ckpt")
+            from spotify_podcasts_airflow_batch_spark.streaming.windows import (  # noqa: E501
+                drain,
             )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError(
-                    "ivfpq_streamed_store: ingest stream did not drain"
-                )
-    _INC_STORE_CACHE[key] = root
-    return root
+
+            drain(
+                stream_ann_ingest(
+                    spark, in_dir, root, os.path.join(root, "_ckpt")
+                ),
+                "ivfpq_streamed_store: ingest stream",
+            )
+
+    return built_store(
+        _INC_STORE_CACHE, sf_dir, "embeddings", "ivfpq_streamed", build,
+        _store_is_valid,
+    )
 
 
 @register(

@@ -32,12 +32,55 @@ from pyspark.sql import functions as F
 
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
 from spotify_podcasts_airflow_batch_spark.sources.readers import (
+    built_store,
+    list_data_files,
     read_parquet,
     table,
-    table_fingerprint,
 )
 
 _STATE_CACHE: dict[tuple, str] = {}
+
+
+def _stream_store(sf_dir: str, name: str, out: str, build) -> str:
+    """Root of the ``name`` fixture, built once per events fingerprint
+    by ``build(root)``, which drains a stream into ``root/<out>`` — the
+    directory the fixture's query reads. The store is valid while that
+    directory exists. A finished build always leaves it (empty when
+    the stream saw no rows), so an externally-removed output dir
+    rebuilds instead of reading as a stream that saw no rows."""
+
+    def run(root: str) -> None:
+        build(root)
+        os.makedirs(os.path.join(root, out), exist_ok=True)
+
+    return built_store(
+        _STATE_CACHE, sf_dir, "events", name, run,
+        lambda root: os.path.isdir(os.path.join(root, out)),
+    )
+
+
+def _read_out(
+    spark: SparkSession, root: str, out: str, schema: str, *cols
+) -> DataFrame:
+    """``cols`` of the table a fixture drained into ``root/<out>``; an
+    empty ``schema`` frame when the stream wrote no data files."""
+    path = os.path.join(root, out)
+    if not list_data_files(path):
+        return spark.createDataFrame([], schema)
+    return read_parquet(spark, path).select(*cols)
+
+
+def _two_batch_source(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """The events table as two parity-split files under ``root/src``:
+    two micro-batches with interleaved users."""
+    src = os.path.join(root, "src")
+    ev = table(spark, sf_dir, "events")
+    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
+    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    return src
+
 
 _STATE_SCHEMA = (
     "user_id bigint, latest_ts timestamp, latest_event_id bigint, "
@@ -48,48 +91,26 @@ _STATE_SCHEMA = (
 def _latest_state_store(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per dataset fingerprint) the streamed current-state
     table for ``sf_dir``'s events and return its root; ``state/`` under
-    it holds the bucketed table (absent when the stream saw no rows)."""
-    import hashlib
-    import shutil
-
-    from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
-        _index_store_root,
-    )
+    it holds the bucketed table (empty when the stream saw no rows)."""
     from spotify_podcasts_airflow_batch_spark.streaming.sinks import (
         stream_upsert_latest,
     )
     from spotify_podcasts_airflow_batch_spark.streaming.windows import (
+        drain,
         read_events_stream,
     )
 
-    key = (table_fingerprint(sf_dir, "events"), "stream_latest")
-    hit = _STATE_CACHE.get(key)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    root = os.path.join(_index_store_root(), f"stream_state_{digest}")
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    src = os.path.join(root, "src")
-    ev = table(spark, sf_dir, "events")
-    # two parity-split files → two micro-batches with interleaved
-    # users, so batch 2 exercises the UPDATE path of the upsert
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q = stream_upsert_latest(
-        read_events_stream(spark, src, max_files_per_trigger=1),
-        os.path.join(root, "state"),
-        os.path.join(root, "ckpt"),
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(
-            "_latest_state_store: upsert stream did not drain"
+    def build(root: str) -> None:
+        # batch 2 exercises the UPDATE path of the upsert
+        src = _two_batch_source(spark, sf_dir, root)
+        q = stream_upsert_latest(
+            read_events_stream(spark, src, max_files_per_trigger=1),
+            os.path.join(root, "state"),
+            os.path.join(root, "ckpt"),
         )
-    _STATE_CACHE[key] = root
-    return root
+        drain(q, "_latest_state_store: upsert stream")
+
+    return _stream_store(sf_dir, "stream_latest", "state", build)
 
 
 @register(
@@ -114,11 +135,11 @@ def stream_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch answer, cross-engine. At 100 TB the state table is the
     continuously-maintained serving view; per trigger it costs
     O(batch + touched buckets), never O(state)."""
-    root = _latest_state_store(spark, sf_dir)
-    state = os.path.join(root, "state")
-    if not os.path.isdir(state):
-        return spark.createDataFrame([], _STATE_SCHEMA)
-    return read_parquet(spark, state).select(
+    return _read_out(
+        spark,
+        _latest_state_store(spark, sf_dir),
+        "state",
+        _STATE_SCHEMA,
         "user_id",
         F.col("ts").alias("latest_ts"),
         F.col("event_id").alias("latest_event_id"),
@@ -132,45 +153,24 @@ def _daily_table_store(spark: SparkSession, sf_dir: str) -> str:
     partitioned events table — the E6 sink (foreachBatch → the batch
     daily writer, replay-idempotent date-partition overwrites) drained
     over the same two-file micro-batch split as the E14b fixture."""
-    import hashlib
-    import shutil
-
-    from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
-        _index_store_root,
-    )
     from spotify_podcasts_airflow_batch_spark.streaming.sinks import (
         stream_to_daily_parquet,
     )
     from spotify_podcasts_airflow_batch_spark.streaming.windows import (
+        drain,
         read_events_stream,
     )
 
-    key = (table_fingerprint(sf_dir, "events"), "stream_daily")
-    hit = _STATE_CACHE.get(key)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    root = os.path.join(_index_store_root(), f"stream_daily_{digest}")
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    src = os.path.join(root, "src")
-    ev = table(spark, sf_dir, "events")
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q = stream_to_daily_parquet(
-        read_events_stream(spark, src, max_files_per_trigger=1),
-        os.path.join(root, "daily"),
-        os.path.join(root, "ckpt"),
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(
-            "_daily_table_store: daily-sink stream did not drain"
+    def build(root: str) -> None:
+        src = _two_batch_source(spark, sf_dir, root)
+        q = stream_to_daily_parquet(
+            read_events_stream(spark, src, max_files_per_trigger=1),
+            os.path.join(root, "daily"),
+            os.path.join(root, "ckpt"),
         )
-    _STATE_CACHE[key] = root
-    return root
+        drain(q, "_daily_table_store: daily-sink stream")
+
+    return _stream_store(sf_dir, "stream_daily", "daily", build)
 
 
 @register(
@@ -195,17 +195,12 @@ def stream_daily_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     the correct date partition exactly once — the reference's per-day
     S3 prefix (spotify_eps_dag.py daily writes), maintained by a
     stream instead of a cron DAG."""
-    root = _daily_table_store(spark, sf_dir)
-    daily = os.path.join(root, "daily")
-    if not os.path.isdir(daily) or not any(
-        f.startswith("snapshot_date=") for f in os.listdir(daily)
-    ):
-        return spark.createDataFrame(
-            [],
-            "event_id bigint, snapshot_date string, user_id bigint, "
-            "event_type string, value4 double",
-        )
-    return read_parquet(spark, daily).select(
+    return _read_out(
+        spark,
+        _daily_table_store(spark, sf_dir),
+        "daily",
+        "event_id bigint, snapshot_date string, user_id bigint, "
+        "event_type string, value4 double",
         "event_id",
         F.col("snapshot_date").cast("string").alias("snapshot_date"),
         "user_id",
@@ -223,53 +218,39 @@ def _closed_sessions_store(spark: SparkSession, sf_dir: str) -> str:
     streaming/stateful.py): events streamed with a 0-second watermark,
     sessions emitted on gap-close inline or timer-close when the
     watermark passes last_ts + gap, parquet file sink."""
-    import hashlib
     import shutil
 
-    from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
-        _index_store_root,
-    )
     from spotify_podcasts_airflow_batch_spark.streaming.stateful import (
         finalize_sessions,
     )
     from spotify_podcasts_airflow_batch_spark.streaming.windows import (
+        drain,
         read_events_stream,
     )
 
-    key = (table_fingerprint(sf_dir, "events"), "stream_sessions")
-    hit = _STATE_CACHE.get(key)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    root = os.path.join(_index_store_root(), f"stream_sess_{digest}")
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    src = os.path.join(root, "src")
-    os.makedirs(src, exist_ok=True)
-    ev_file = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(ev_file):
-        shutil.copytree(ev_file, os.path.join(src, "events.parquet"))
-    else:
-        shutil.copy(ev_file, os.path.join(src, "events.parquet"))
-    stream = read_events_stream(spark, src).withWatermark(
-        "ts", "0 seconds"
-    )
-    q = (
-        finalize_sessions(stream)
-        .writeStream.format("parquet")
-        .option("path", os.path.join(root, "sessions"))
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(
-            "_closed_sessions_store: session stream did not drain"
+    def build(root: str) -> None:
+        src = os.path.join(root, "src")
+        os.makedirs(src, exist_ok=True)
+        ev_file = os.path.join(sf_dir, "events.parquet")
+        if os.path.isdir(ev_file):
+            shutil.copytree(ev_file, os.path.join(src, "events.parquet"))
+        else:
+            shutil.copy(ev_file, os.path.join(src, "events.parquet"))
+        stream = read_events_stream(spark, src).withWatermark(
+            "ts", "0 seconds"
         )
-    _STATE_CACHE[key] = root
-    return root
+        q = (
+            finalize_sessions(stream)
+            .writeStream.format("parquet")
+            .option("path", os.path.join(root, "sessions"))
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        drain(q, "_closed_sessions_store: session stream")
+
+    return _stream_store(sf_dir, "stream_sessions", "sessions", build)
 
 
 @register(
@@ -329,18 +310,13 @@ def stream_closed_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivation, cross-engine. Session values accumulate as int64
     micro-units inside the pandas state (order-independent — the B9
     convention), which is what makes this hashable at all."""
-    root = _closed_sessions_store(spark, sf_dir)
-    out = os.path.join(root, "sessions")
-    import glob as _glob
-
-    if not _glob.glob(os.path.join(out, "*.parquet")):
-        return spark.createDataFrame(
-            [],
-            "user_id bigint, session_start timestamp, "
-            "session_end timestamp, n_events bigint, "
-            "session_value_micros bigint, closed_by string",
-        )
-    return read_parquet(spark, out).select(
+    return _read_out(
+        spark,
+        _closed_sessions_store(spark, sf_dir),
+        "sessions",
+        "user_id bigint, session_start timestamp, "
+        "session_end timestamp, n_events bigint, "
+        "session_value_micros bigint, closed_by string",
         "user_id",
         "session_start",
         "session_end",
@@ -355,63 +331,44 @@ def _enriched_store(spark: SparkSession, sf_dir: str) -> str:
     table: the events stream broadcast-joined to the static customer →
     nation dimension chain per micro-batch (E4, streaming/enrich.py),
     parquet file sink."""
-    import hashlib
-    import shutil
-
-    from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
-        _index_store_root,
-    )
     from spotify_podcasts_airflow_batch_spark.streaming.enrich import (
         enrich_stream,
     )
     from spotify_podcasts_airflow_batch_spark.streaming.windows import (
+        drain,
         read_events_stream,
     )
 
-    key = (table_fingerprint(sf_dir, "events"), "stream_enrich")
-    hit = _STATE_CACHE.get(key)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    root = os.path.join(_index_store_root(), f"stream_enrich_{digest}")
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    src = os.path.join(root, "src")
-    ev = table(spark, sf_dir, "events")
-    # two micro-batches: the dim side must be re-broadcast per batch
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    dim = (
-        table(spark, sf_dir, "customer")
-        .join(
-            table(spark, sf_dir, "nation"),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-            "left",
+    def build(root: str) -> None:
+        # two micro-batches: the dim side must be re-broadcast per batch
+        src = _two_batch_source(spark, sf_dir, root)
+        dim = (
+            table(spark, sf_dir, "customer")
+            .join(
+                table(spark, sf_dir, "nation"),
+                F.col("c_nationkey") == F.col("n_nationkey"),
+                "left",
+            )
+            .select(
+                F.col("c_custkey").alias("user_id"), "c_name", "n_name"
+            )
         )
-        .select(
-            F.col("c_custkey").alias("user_id"), "c_name", "n_name"
+        q = (
+            enrich_stream(
+                read_events_stream(spark, src, max_files_per_trigger=1),
+                dim,
+                on="user_id",
+            )
+            .writeStream.format("parquet")
+            .option("path", os.path.join(root, "enriched"))
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
         )
-    )
-    q = (
-        enrich_stream(
-            read_events_stream(spark, src, max_files_per_trigger=1),
-            dim,
-            on="user_id",
-        )
-        .writeStream.format("parquet")
-        .option("path", os.path.join(root, "enriched"))
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("_enriched_store: enrich stream did not drain")
-    _STATE_CACHE[key] = root
-    return root
+        drain(q, "_enriched_store: enrich stream")
+
+    return _stream_store(sf_dir, "stream_enrich", "enriched", build)
 
 
 @register(
@@ -436,17 +393,12 @@ def stream_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     no event lost at a batch boundary, no dim row duplicated. At
     100 TB the dim snapshot re-broadcasts per trigger (swappable
     between batches) and the stream side never shuffles."""
-    root = _enriched_store(spark, sf_dir)
-    out = os.path.join(root, "enriched")
-    import glob as _glob
-
-    if not _glob.glob(os.path.join(out, "*.parquet")):
-        return spark.createDataFrame(
-            [],
-            "event_id bigint, user_id bigint, event_type string, "
-            "value4 double, c_name string, n_name string",
-        )
-    return read_parquet(spark, out).select(
+    return _read_out(
+        spark,
+        _enriched_store(spark, sf_dir),
+        "enriched",
+        "event_id bigint, user_id bigint, event_type string, "
+        "value4 double, c_name string, n_name string",
         "event_id",
         "user_id",
         "event_type",

@@ -15,11 +15,15 @@ job just to infer what one footer already says.
 
 from __future__ import annotations
 
+import atexit
 import glob
+import hashlib
 import itertools
 import json
 import os
 import re
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -535,3 +539,44 @@ def table_fingerprint(sf_dir: str, *names: str) -> tuple:
             except OSError:
                 out.append((p, 0, 0))
     return tuple(out)
+
+
+# Built-once stores: directories written from one dataset table — index
+# code tables, incremental stores, drained stream outputs — keyed by
+# (table fingerprint, store name) like the trained constants. A store
+# is a pure function of its (immutable-per-fingerprint) table, so the
+# memo can never change a result: it turns a per-query rebuild into
+# the one-off build production runs. Every store lives under ONE temp
+# root removed at process exit, and a memoized root is re-validated
+# before it is served (rebuilt on miss), so an externally-removed dir
+# can't serve a dangling read (ADVICE r6).
+_STORE_ROOT: list[str] = []
+
+
+def store_root() -> str:
+    if not _STORE_ROOT:
+        root = tempfile.mkdtemp(prefix="built_store_")
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _STORE_ROOT.append(root)
+    return _STORE_ROOT[0]
+
+
+def built_store(
+    memo: dict, sf_dir: str, table_name: str, name: str, build, valid
+) -> str:
+    """Root of the ``name`` store derived from ``sf_dir``'s
+    ``table_name``: the root memoized in ``memo`` while ``valid(root)``
+    holds, else a fresh build — the root is cleared, ``build(root)``
+    writes it, and only then is the memo entry recorded. Each caller
+    passes its own memo dict, so clearing one family's memo leaves the
+    others' stores served."""
+    key = (table_fingerprint(sf_dir, table_name), name)
+    root = memo.get(key)
+    if root is not None and valid(root):
+        return root
+    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
+    root = os.path.join(store_root(), f"{name}_{digest}")
+    shutil.rmtree(root, ignore_errors=True)
+    build(root)
+    memo[key] = root
+    return root

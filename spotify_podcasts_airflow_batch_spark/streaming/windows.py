@@ -131,3 +131,12 @@ def run_stream_to_memory(
         .trigger(availableNow=True)
         .start()
     )
+
+
+def drain(query, what: str) -> None:
+    """Block until an availableNow ``query`` has processed everything
+    pending; a query still running after 600 s is stopped and raises,
+    naming ``what`` (the fixture and its stream)."""
+    if not query.awaitTermination(600):
+        query.stop()
+        raise RuntimeError(f"{what} did not drain")

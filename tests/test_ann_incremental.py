@@ -212,8 +212,8 @@ def test_incremental_serve_prunes_partitions(spark, sf_dir):
 
 def test_removed_segments_trigger_rebuild(spark, sf_dir):
     """An externally-removed segments dir must rebuild, not serve a
-    dangling read (the materialized_index_path / ADVICE r6 lesson
-    applied to the incremental store)."""
+    dangling read (the readers.built_store / ADVICE r6 lesson applied
+    to the incremental store)."""
     import shutil
 
     root = ivfpq_incremental_store(spark, sf_dir)

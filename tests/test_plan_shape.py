@@ -508,8 +508,8 @@ def test_served_ann_paths_scan_the_materialized_index(spark, sf_dir):
     index store — a parquet scan outside the testdata dir — instead of
     re-encoding the corpus (whose encode projection would put the
     trained-codebook argmin on the embeddings scan)."""
-    from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
-        _index_store_root,
+    from spotify_podcasts_airflow_batch_spark.sources.readers import (
+        store_root,
     )
 
     for name in (
@@ -518,7 +518,7 @@ def test_served_ann_paths_scan_the_materialized_index(spark, sf_dir):
         "ivfpq_residual_ann_served",
     ):
         plan = plan_of(spark, sf_dir, name)
-        assert _index_store_root() in plan, name
+        assert store_root() in plan, name
         # serving joins stay broadcast; no corpus-sized sort-merge
         assert "SortMergeJoin" not in plan, name
         assert "CartesianProduct" not in plan, name

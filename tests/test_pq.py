@@ -324,8 +324,17 @@ def _dsl_adc_score():
 
 
 def _assert_same_tree(got, want):
+    """Same schema and analyzed tree. ``sameSemantics`` erases hints (a
+    hint never changes a result), so the broadcast hints are counted
+    separately: a builder that drops an ``F.broadcast`` fails here."""
     assert got.schema == want.schema
     assert got.sameSemantics(want)
+
+    def hints(df):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return plan.count("strategy=broadcast")
+
+    assert hints(got) == hints(want)
 
 
 @pytest.mark.fast
@@ -423,18 +432,6 @@ def test_served_frame_matches_dsl_tree(spark, sf_dir, monkeypatch):
 # as the reference: each query must build the same analyzed tree.
 
 
-def _assert_same_tree_and_hints(got, want):
-    """``sameSemantics`` erases hints (a hint never changes a result),
-    so the broadcast hints the chains place are counted separately."""
-    _assert_same_tree(got, want)
-
-    def hints(df):
-        plan = df._jdf.queryExecution().analyzed().toString()
-        return plan.count("strategy=broadcast")
-
-    assert hints(got) == hints(want)
-
-
 def _inline_topk(scored, k, *order, rank="rank"):
     salted = Window.partitionBy(
         "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
@@ -527,11 +524,11 @@ def test_shared_tails_match_inline_trees(spark, sf_dir, monkeypatch):
         "ivfpq_recall": _inline_ivfpq_recall(spark, sf_dir),
     }
     for name, got in shared.items():
-        _assert_same_tree_and_hints(got, inline[name])
+        _assert_same_tree(got, inline[name])
 
     monkeypatch.setattr(
         similarity2,
         "_salted_topk",
         lambda scored, k, *order: _inline_topk(scored, k, *order, rank="r"),
     )
-    _assert_same_tree_and_hints(got_exact, exact())
+    _assert_same_tree(got_exact, exact())

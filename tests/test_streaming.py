@@ -159,3 +159,51 @@ def test_stream_commits_versioned_table(spark, sf_dir, tmp_path):
     assert 0 < v1_rows < total
     assert snapshot_read(spark, mdir, 1).count() == v1_rows
     assert snapshot_read(spark, mdir).count() == total
+
+
+_STREAM_FIXTURES = [
+    ("stream_latest_state", "_latest_state_store", "state"),
+    ("stream_daily_table", "_daily_table_store", "daily"),
+    ("stream_closed_sessions", "_closed_sessions_store", "sessions"),
+    ("stream_enriched_events", "_enriched_store", "enriched"),
+]
+
+
+@pytest.mark.parametrize("name, store, out", _STREAM_FIXTURES)
+def test_removed_stream_output_triggers_rebuild(
+    spark, sf_dir, name, store, out
+):
+    """An externally-removed output dir of a memoized stream fixture
+    must rebuild, not read as a stream that saw no rows."""
+    from spotify_podcasts_airflow_batch_spark.plans import stream_state
+
+    fn = all_queries()[name].spark_fn
+    before = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
+    assert before, name
+    root = getattr(stream_state, store)(spark, sf_dir)
+    shutil.rmtree(os.path.join(root, out))
+    after = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
+    assert after == before
+
+
+@pytest.mark.parametrize("name, store, out", _STREAM_FIXTURES)
+def test_empty_stream_fixture_is_built_once(
+    spark, sf_dir, tmp_path, name, store, out
+):
+    """A fixture drained from empty tables is a valid store: the second
+    call serves the memo without running a job."""
+    import pyarrow.parquet as pq
+
+    from spotify_podcasts_airflow_batch_spark.plans import stream_state
+    from tests.conftest import jobs_run
+
+    for t in ("events", "customer", "nation"):
+        schema = pq.read_schema(os.path.join(sf_dir, f"{t}.parquet"))
+        pq.write_table(
+            schema.empty_table(), str(tmp_path / f"{t}.parquet")
+        )
+    build = getattr(stream_state, store)
+    root = build(spark, str(tmp_path))
+    assert os.path.isdir(os.path.join(root, out))
+    assert jobs_run(spark, lambda: build(spark, str(tmp_path))) == 0
+    assert all_queries()[name].spark_fn(spark, str(tmp_path)).count() == 0
