@@ -72,6 +72,14 @@ def md5_hash31(col: Column) -> Column:
     )
 
 
+def split_bucket(doc_id: Column) -> Column:
+    """Train/val/test bucket 0-99 of a document: md5_31('split:' || id)
+    mod 100. A pure function of the id, so membership is stable under
+    re-partitioning and re-runs; the oracles compute it as
+    ``oracle_hash31("'split:' || CAST(doc_id AS VARCHAR)") % 100``."""
+    return md5_hash31(F.concat(F.lit("split:"), doc_id.cast("string"))) % 100
+
+
 def universal_hash(h31: Column, a: int, b: int) -> Column:
     return (F.lit(a) * h31 + F.lit(b)) % F.lit(MERSENNE_31)
 

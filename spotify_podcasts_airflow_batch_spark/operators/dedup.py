@@ -21,6 +21,8 @@ bit-for-bit by the DuckDB oracles in plans/text.py.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -33,6 +35,9 @@ from spotify_podcasts_airflow_batch_spark.functions.hashing import (
 from spotify_podcasts_airflow_batch_spark.functions.text import (
     tokens,
     word_shingles,
+)
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    salted_topk_per_group,
 )
 
 NUM_MINHASHES = 16
@@ -211,14 +216,15 @@ def _banded(
 
 
 def _cap_buckets(
-    banded: DataFrame, id_col: str, max_bucket: int
+    banded: DataFrame,
+    id_col: str,
+    max_bucket: int,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Keep the ``max_bucket`` members of every (band_id, band_hash)
-    bucket with the smallest per-bucket universal hash (id tiebreak),
-    via the salted two-stage window so a hot bucket never lands in one
-    task. Deterministic and SQL-reproducible."""
-    from pyspark.sql import Window
-
+    """Keep the ``max_bucket`` members of every (*``group_cols``,
+    band_id, band_hash) bucket with the smallest per-bucket universal
+    hash (id tiebreak), via ``salted_topk_per_group`` so a hot bucket
+    never lands in one task. Deterministic and SQL-reproducible."""
     hk = md5_hash31(
         F.concat(
             F.lit("lshcap:"),
@@ -229,22 +235,15 @@ def _cap_buckets(
             F.col(id_col).cast("string"),
         )
     )
-    salted = Window.partitionBy(
-        "band_id",
-        "band_hash",
-        F.pmod(F.col(id_col), F.lit(_LSH_CAP_SALTS)),
-    ).orderBy("__hk", id_col)
-    final = Window.partitionBy("band_id", "band_hash").orderBy(
-        "__hk", id_col
-    )
-    return (
-        banded.withColumn("__hk", hk)
-        .withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= max_bucket)
-        .withColumn("__rn", F.row_number().over(final))
-        .where(F.col("__rn") <= max_bucket)
-        .drop("__hk", "__srn", "__rn")
-    )
+    return salted_topk_per_group(
+        banded.withColumn("__hk", hk),
+        [*group_cols, "band_id", "band_hash"],
+        ["__hk", id_col],
+        max_bucket,
+        F.col(id_col),
+        _LSH_CAP_SALTS,
+        "__rn",
+    ).drop("__hk", "__srn", "__rn")
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

@@ -21,8 +21,8 @@ from pyspark.sql import functions as F
 def topk_per_group(
     df: DataFrame,
     group_cols: Sequence[str],
-    order_by: Sequence[Column],
-    k: int,
+    order_by: Sequence[Column | str],
+    k: int | Column,
     rank_col: str = "rank",
 ) -> DataFrame:
     """Top-k rows per group with a dense, deterministic position column.
@@ -30,7 +30,8 @@ def topk_per_group(
     ``order_by`` must define a total order (include a unique tiebreaker)
     so results are reproducible run-to-run — the driver-side enumerate
     in the reference was deterministic only because the API returned a
-    pre-sorted list.
+    pre-sorted list. ``k`` is an int or a per-row Column (a per-group
+    quota joined onto the rows).
     """
     w = Window.partitionBy(*group_cols).orderBy(*order_by)
     return (
@@ -42,7 +43,7 @@ def topk_per_group(
 def latest_per_key(
     df: DataFrame,
     key_cols: Sequence[str],
-    order_by: Sequence[Column],
+    order_by: Sequence[Column | str],
 ) -> DataFrame:
     """Keep the single most-recent row per key (daily-updated-dataset
     semantics — the reference republishes the full consolidated CSV to
@@ -54,6 +55,39 @@ def latest_per_key(
         df.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
         .drop("__rn")
+    )
+
+
+def salted_topk_per_group(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    order_by: Sequence[Column | str],
+    k: int | Column,
+    salt_source: Column,
+    salts: int,
+    rank_col: str = "rank",
+) -> DataFrame:
+    """Skew-safe ``topk_per_group``: keep ``k`` rows per (group,
+    ``salt_source`` mod ``salts``) first, then rank the <= salts·k
+    survivors per group and keep ``k`` — no task ever sorts a hot
+    group's whole row set. Exact for ANY input when ``order_by`` is a
+    total order: every row of a group's global top-k is within the
+    top-k of its own salt, so the union of per-salt top-ks holds it
+    (the partition-local-then-merge top-k). ``salt_source`` must be
+    deterministic per row (an id column, not rand()) so re-runs and
+    retries keep the same membership. Adds ``__srn`` (the per-salt
+    position) and ``rank_col``."""
+    salted = Window.partitionBy(
+        *group_cols, F.pmod(salt_source, F.lit(salts))
+    ).orderBy(*order_by)
+    return topk_per_group(
+        df.withColumn("__srn", F.row_number().over(salted)).where(
+            F.col("__srn") <= k
+        ),
+        group_cols,
+        order_by,
+        k,
+        rank_col,
     )
 
 
@@ -72,12 +106,9 @@ def capped_top_q(
     Shape (SURVEY §2 C39): groups within quota are identified by a
     cheap count aggregate and pass through on a broadcast anti join —
     they never enter a window. Over-quota groups are first cut to a
-    per-salt top-Q (salt = ``salt_source`` mod ``salts``), so the
-    final per-group sort sees ≤ salts·quota rows per group regardless
-    of how hot the group is; the global top-Q is always contained in
-    the union of per-salt top-Qs, so the two-stage cut is exact.
-    ``salt_source`` must be deterministic per row (an id column, not
-    rand()) so re-runs and retries keep the same membership."""
+    per-salt top-Q by ``salted_topk_per_group`` (salt =
+    ``salt_source`` mod ``salts``), so the final per-group sort sees
+    ≤ salts·quota rows per group regardless of how hot the group is."""
     over = (
         df.groupBy(*group_cols)
         .agg(F.count(F.lit(1)).alias("__grp_n"))
@@ -91,18 +122,7 @@ def capped_top_q(
     )
     under_rows = df.join(F.broadcast(over), list(group_cols), "left_anti")
     over_rows = df.join(F.broadcast(over), list(group_cols), "left_semi")
-    salted = Window.partitionBy(
-        *group_cols, F.pmod(salt_source, F.lit(salts))
-    ).orderBy(*order_by)
-    survivors = (
-        over_rows.withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= quota)
-        .drop("__srn")
-    )
-    final = Window.partitionBy(*group_cols).orderBy(*order_by)
-    capped = (
-        survivors.withColumn("__rn", F.row_number().over(final))
-        .where(F.col("__rn") <= quota)
-        .drop("__rn")
-    )
+    capped = salted_topk_per_group(
+        over_rows, group_cols, order_by, quota, salt_source, salts, "__rn"
+    ).drop("__srn", "__rn")
     return under_rows.unionByName(capped)

@@ -15,13 +15,17 @@ share a bucket, so exact-duplicate recall is 1.0 by construction.
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spotify_podcasts_airflow_batch_spark.functions.vectors import (
     dot,
     l2_normalized,
+)
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    topk_per_group,
 )
 
 NUM_PLANES = 8
@@ -137,6 +141,40 @@ def blocked_allpairs_cosine(
 KNN_MAX_QUERIES = 10_000
 
 
+def cosine_topk(
+    scored: DataFrame,
+    k: int,
+    group_cols: Sequence[str] = ("query_id",),
+    cos: Column | str = "cos_raw",
+    rank_col: str = "rank",
+) -> DataFrame:
+    """Top-k neighbors per group of ``scored`` by round(``cos``, 6)
+    descending, neighbor_id ascending: the cross-engine tie-pin every
+    cosine ranking in the repo shares (rounding to 6 dp makes Spark's
+    GEMM/JVM-fold cosines and DuckDB's list_cosine_similarity rank
+    identically; the id makes the order total)."""
+    c = F.col(cos) if isinstance(cos, str) else cos
+    return topk_per_group(
+        scored,
+        group_cols,
+        [F.round(c, 6).desc(), F.col("neighbor_id")],
+        k,
+        rank_col,
+    )
+
+
+def _cosine_rows(scored: DataFrame, k: int, *extra: str) -> DataFrame:
+    """The k-NN operators' output rows: ``cosine_topk`` of (query_id,
+    neighbor_id, *extra, cos_raw) projected to cos_sim at 4 dp."""
+    return cosine_topk(scored, k).select(
+        "query_id",
+        "neighbor_id",
+        *extra,
+        F.round(F.col("cos_raw"), 4).alias("cos_sim"),
+        "rank",
+    )
+
+
 def knn_brute_force(
     corpus: DataFrame,
     queries: DataFrame,
@@ -211,19 +249,7 @@ def knn_brute_force(
     scored = corpus.select(id_col, vec_col).mapInPandas(
         score, schema="query_id long, neighbor_id long, cos_raw double"
     ).where(F.col("neighbor_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos_raw"), 6).desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("cos_raw"), 4).alias("cos_sim"),
-            "rank",
-        )
-    )
+    return _cosine_rows(scored, k)
 
 
 def ivf_centroids(
@@ -255,14 +281,13 @@ def ivf_assign(
     scored = df.crossJoin(cents).withColumn(
         "cell_cos", dot(F.col(vc), F.col("cvec_cent"))
     )
-    w = Window.partitionBy(idc).orderBy(
-        F.round(F.col("cell_cos"), 6).desc(), F.col("cell_id")
-    )
-    return (
-        scored.withColumn("__cr", F.row_number().over(w))
-        .where(F.col("__cr") <= n)
-        .drop("cvec_cent", "cell_cos")
-    )
+    return topk_per_group(
+        scored,
+        [idc],
+        [F.round(F.col("cell_cos"), 6).desc(), F.col("cell_id")],
+        n,
+        "__cr",
+    ).drop("cvec_cent", "cell_cos")
 
 
 def ivf_knn(
@@ -305,19 +330,7 @@ def ivf_knn(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos_raw", dot(F.col("qvec"), F.col("cvec")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos_raw"), 6).desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("cos_raw"), 4).alias("cos_sim"),
-            "rank",
-        )
-    )
+    return _cosine_rows(scored, k)
 
 
 def knn_lsh(
@@ -348,19 +361,7 @@ def knn_lsh(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos_raw", dot(F.col("qvec"), F.col("cvec")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos_raw"), 6).desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("cos_raw"), 4).alias("cos_sim"),
-            "rank",
-        )
-    )
+    return _cosine_rows(scored, k)
 
 
 def sign_signature(vec: Column, thresholds: list[float]) -> tuple[Column, Column]:
@@ -432,26 +433,15 @@ def knn_hamming_rerank(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("hamming", ham)
     )
-    w_ham = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id")
-    )
-    shortlist = (
-        cand.withColumn("__hr", F.row_number().over(w_ham))
-        .where(F.col("__hr") <= rerank)
-        .drop("__hr")
-    )
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos_raw"), 6).desc(), F.col("neighbor_id")
-    )
-    return (
-        shortlist.withColumn("cos_raw", dot(F.col("qvec"), F.col("cvec")))
-        .withColumn("rank", F.row_number().over(w_cos))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "hamming",
-            F.round(F.col("cos_raw"), 4).alias("cos_sim"),
-            "rank",
-        )
+    shortlist = topk_per_group(
+        cand,
+        ["query_id"],
+        [F.col("hamming").asc(), F.col("neighbor_id")],
+        rerank,
+        "__hr",
+    ).drop("__hr")
+    return _cosine_rows(
+        shortlist.withColumn("cos_raw", dot(F.col("qvec"), F.col("cvec"))),
+        k,
+        "hamming",
     )

@@ -31,7 +31,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spotify_podcasts_airflow_batch_spark.functions.hashing import md5_hash31
+from spotify_podcasts_airflow_batch_spark.functions.hashing import split_bucket
 from spotify_podcasts_airflow_batch_spark.functions.text import (
     pii_scrub,
     tokens,
@@ -39,6 +39,7 @@ from spotify_podcasts_airflow_batch_spark.functions.text import (
 from spotify_podcasts_airflow_batch_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
+    normalize_text,
 )
 from spotify_podcasts_airflow_batch_spark.operators.graph import (
     connected_components,
@@ -89,7 +90,7 @@ class CorpusPipeline:
     def exact_dedup(self, docs: DataFrame) -> DataFrame:
         """Keep the min-doc_id representative of each exact-content
         group (one hash aggregate; map-side combinable)."""
-        fp = F.md5(F.lower(F.trim(F.col("text"))))
+        fp = F.md5(normalize_text(F.col("text")))
         w_rep = (
             docs.select("doc_id", fp.alias("__fp"))
             .groupBy("__fp")
@@ -139,10 +140,7 @@ class CorpusPipeline:
     def split(self, docs: DataFrame) -> DataFrame:
         """Deterministic hash split — membership is a pure function of
         doc_id (stable under re-partitioning, engine-portable)."""
-        bucket = (
-            md5_hash31(F.concat(F.lit("split:"), F.col("doc_id").cast("string")))
-            % 100
-        )
+        bucket = split_bucket(F.col("doc_id"))
         lo, hi = self.split_pcts
         return docs.withColumn(
             "split",

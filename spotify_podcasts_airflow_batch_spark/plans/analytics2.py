@@ -7,10 +7,13 @@ declarative DataFrame plans with exact DuckDB mirrors.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spotify_podcasts_airflow_batch_spark.functions.text import tokens
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    topk_per_group,
+)
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
 from spotify_podcasts_airflow_batch_spark.sources.readers import table
 
@@ -78,12 +81,12 @@ def doc_keyterms(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("tf") * idf, 4).alias("score"),
         )
     )
-    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("tok"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= _KEYTERMS_K)
-        .select("doc_id", F.col("tok").alias("term"), "score", "rank")
-    )
+    return topk_per_group(
+        scored,
+        ["doc_id"],
+        [F.col("score").desc(), F.col("tok")],
+        _KEYTERMS_K,
+    ).select("doc_id", F.col("tok").alias("term"), "score", "rank")
 
 
 # Benford expected first-digit frequencies log10(1 + 1/d), frozen as

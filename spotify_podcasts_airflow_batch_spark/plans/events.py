@@ -10,6 +10,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    topk_per_group,
+)
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
 from spotify_podcasts_airflow_batch_spark.sources.readers import table
 
@@ -641,14 +644,12 @@ def windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         window_start(F.col("ts"), 3600).alias("window_start"),
         F.col("event_type"),
     ).agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("window_start").orderBy(
-        F.col("n").desc(), F.col("event_type").asc()
-    )
-    return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("window_start", "event_type", "n", "rank")
-    )
+    return topk_per_group(
+        counts,
+        ["window_start"],
+        [F.col("n").desc(), F.col("event_type").asc()],
+        3,
+    ).select("window_start", "event_type", "n", "rank")
 
 
 @register(

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from spotify_podcasts_airflow_batch_spark.functions.hashing import (
     md5_hash31,
     oracle_hash31,
+    split_bucket,
 )
 from spotify_podcasts_airflow_batch_spark.functions.text import (
     PII_PATTERNS,
@@ -53,10 +54,7 @@ def train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``randomSplit`` changes membership whenever file order changes).
     One codegen projection, no shuffle."""
     d = table(spark, sf_dir, "documents")
-    bucket = (
-        md5_hash31(F.concat(F.lit("split:"), F.col("doc_id").cast("string")))
-        % 100
-    )
+    bucket = split_bucket(F.col("doc_id"))
     return d.select(
         "doc_id",
         bucket.alias("bucket"),

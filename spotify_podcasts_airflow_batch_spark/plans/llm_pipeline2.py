@@ -21,8 +21,13 @@ from pyspark.sql import functions as F
 from spotify_podcasts_airflow_batch_spark.functions.hashing import (
     md5_hash31,
     oracle_hash31,
+    split_bucket,
 )
 from spotify_podcasts_airflow_batch_spark.functions.text import tokens
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    capped_top_q,
+    salted_topk_per_group,
+)
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
 from spotify_podcasts_airflow_batch_spark.sources.readers import table
 
@@ -61,10 +66,6 @@ def domain_quota_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     The global top-Q is always contained in the union of per-salt
     top-Qs, so the two-stage cut is exact.
     """
-    from spotify_podcasts_airflow_batch_spark.operators.ranking import (
-        capped_top_q,
-    )
-
     # persist: capped_top_q makes three passes over its input (the
     # over-quota group count, the anti join, the semi join) whose
     # lineages end in different exchanges — without it the documents
@@ -484,10 +485,7 @@ def heldout_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").where(
         F.length(F.trim(F.col("text"))) > 0
     )
-    bucket = (
-        md5_hash31(F.concat(F.lit("split:"), F.col("doc_id").cast("string")))
-        % 100
-    )
+    bucket = split_bucket(F.col("doc_id"))
     from spotify_podcasts_airflow_batch_spark.functions.text import tokens
 
     d = d.select("doc_id", "text", bucket.alias("bucket"))
@@ -915,21 +913,19 @@ def stratified_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("strat:"), F.col("doc_id").cast("string"))
     )
     ranked = d.join(F.broadcast(alloc), "source").withColumn("__hk", hk)
-    salted = Window.partitionBy(
-        "source", F.pmod(F.col("doc_id"), F.lit(_STRAT_SALTS))
-    ).orderBy("__hk", "doc_id")
-    final = Window.partitionBy("source").orderBy("__hk", "doc_id")
-    return (
-        ranked.withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= F.col("alloc"))
-        .withColumn("rn", F.row_number().over(final))
-        .where(F.col("rn") <= F.col("alloc"))
-        .select(
-            "doc_id",
-            "source",
-            "lang",
-            F.col("rn").cast("long").alias("sample_rank"),
-        )
+    return salted_topk_per_group(
+        ranked,
+        ["source"],
+        ["__hk", "doc_id"],
+        F.col("alloc"),
+        F.col("doc_id"),
+        _STRAT_SALTS,
+        "rn",
+    ).select(
+        "doc_id",
+        "source",
+        "lang",
+        F.col("rn").cast("long").alias("sample_rank"),
     )
 
 

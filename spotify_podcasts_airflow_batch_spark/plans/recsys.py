@@ -25,6 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    topk_per_group,
+)
 from spotify_podcasts_airflow_batch_spark.plans.registry import register
 from spotify_podcasts_airflow_batch_spark.sources.readers import table
 
@@ -252,8 +255,6 @@ def _iic_capped_plan(spark: SparkSession, sf_dir: str, cap: int) -> DataFrame:
     The hash is per (u, i), so the selection is replica-stable and
     SQL-twin-able (the oracle's ranked CTE is this exact plan);
     marginals rebroadcast onto pair counts as in B59."""
-    from pyspark.sql import Window
-
     from spotify_podcasts_airflow_batch_spark.functions.hashing import (
         md5_hash31,
     )
@@ -281,10 +282,8 @@ def _iic_capped_plan(spark: SparkSession, sf_dir: str, cap: int) -> DataFrame:
             ),
         )
     )
-    w = Window.partitionBy("u").orderBy("__hk", "i")
     baskets = (
-        ui.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= cap)
+        topk_per_group(ui, ["u"], ["__hk", "i"], cap, "__rn")
         .groupBy("u")  # reuses the window's partitioning — no exchange
         .agg(F.array_sort(F.collect_list("i")).alias("items"))
         .persist()  # single materialization feeds pairs + marginals

@@ -250,13 +250,12 @@ def ivf_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-setting top-k then runs as one window partitioned by
     (nprobe, query_id). No corpus self-join anywhere; the report is
     |settings| rows."""
-    from pyspark.sql import Window
-
     from spotify_podcasts_airflow_batch_spark.functions.vectors import (
         dot,
         l2_normalized,
     )
     from spotify_podcasts_airflow_batch_spark.operators.similarity import (
+        cosine_topk,
         ivf_assign,
         ivf_centroids,
         knn_brute_force,
@@ -319,14 +318,9 @@ def ivf_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(settings))
         .where(F.col("cr") <= F.col("nprobe"))
     )
-    wk = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.round(F.col("cos_raw"), 6).desc(), F.col("neighbor_id")
-    )
-    cand = (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= _IVF_SWEEP_K)
-        .select("nprobe", "query_id", "neighbor_id")
-    )
+    cand = cosine_topk(
+        scored, _IVF_SWEEP_K, group_cols=("nprobe", "query_id")
+    ).select("nprobe", "query_id", "neighbor_id")
     hits = cand.join(exact, ["query_id", "neighbor_id"]).groupBy(
         "nprobe"
     ).agg(F.count(F.lit(1)).alias("n_hits"))

@@ -18,8 +18,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    salted_topk_per_group,
+    topk_per_group,
+)
 from spotify_podcasts_airflow_batch_spark.operators.similarity import (
     blocked_allpairs_cosine,
+    cosine_topk,
     knn_brute_force,
     knn_lsh,
 )
@@ -632,16 +637,12 @@ def ann_jl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos_sk = F.when(
         (qn > 0) & (cn > 0), dot / (F.sqrt(qn) * F.sqrt(cn))
     ).otherwise(F.lit(-2.0))
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(cos_sk, 6).desc(), F.col("neighbor_id")
-    )
-    cand = (
-        F.broadcast(q)
-        .join(c, F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("r", F.row_number().over(w))
-        .where(F.col("r") <= _JL_CAND)
-        .select("query_id", "neighbor_id")
-    )
+    cand = cosine_topk(
+        F.broadcast(q).join(c, F.col("neighbor_id") != F.col("query_id")),
+        _JL_CAND,
+        cos=cos_sk,
+        rank_col="r",
+    ).select("query_id", "neighbor_id")
     exact = knn_brute_force(
         corpus=e,
         queries=e.where(F.col("vec_id") % _PROBE_MOD == 0),
@@ -1083,20 +1084,11 @@ def _pq_adc_score():
 
 # ------------------------------------------- shared serve-and-grade tail
 def _salted_topk(scored: DataFrame, k: int, *order) -> DataFrame:
-    """Two-stage salted top-k per query over ``scored`` (query_id,
-    vec_id, ...), ranked by ``order`` then vec_id (the tie-pin): keep
-    k rows per (query_id, vec_id mod _PQ_SALTS) salt, then rank the
-    <= salts*k survivors per query and keep k — no task ever holds a
-    query's whole candidate set. Adds ``__srn`` and ``rank``."""
-    salted = Window.partitionBy(
-        "query_id", F.pmod(F.col("vec_id"), F.lit(_PQ_SALTS))
-    ).orderBy(*order, "vec_id")
-    final = Window.partitionBy("query_id").orderBy(*order, "vec_id")
-    return (
-        scored.withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= k)
-        .withColumn("rank", F.row_number().over(final))
-        .where(F.col("rank") <= k)
+    """The ANN binding of ``salted_topk_per_group``: per query_id,
+    ranked by ``order`` then vec_id (the tie-pin), salted on vec_id
+    mod _PQ_SALTS. Adds ``__srn`` and ``rank``."""
+    return salted_topk_per_group(
+        scored, ["query_id"], [*order, "vec_id"], k, F.col("vec_id"), _PQ_SALTS
     )
 
 
@@ -2216,18 +2208,13 @@ def ivfpq_exact_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, v: acc + v,
         ).alias("d2u"),
     )
-    final = Window.partitionBy("query_id").orderBy("d2u", "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(final))
-        .where(F.col("rank") <= _IVFPQ_K)
-        .select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            "vec_id",
-            (F.round(F.col("d2u") / 1e12, 6) + F.lit(0.0)).alias(
-                "exact_dist"
-            ),
-        )
+    return topk_per_group(
+        scored, ["query_id"], ["d2u", "vec_id"], _IVFPQ_K
+    ).select(
+        "query_id",
+        F.col("rank").cast("int").alias("rank"),
+        "vec_id",
+        (F.round(F.col("d2u") / 1e12, 6) + F.lit(0.0)).alias("exact_dist"),
     )
 
 

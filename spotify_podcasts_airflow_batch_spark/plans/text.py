@@ -22,6 +22,7 @@ from spotify_podcasts_airflow_batch_spark.functions.text import (
 from spotify_podcasts_airflow_batch_spark.operators.dedup import (
     NUM_MINHASHES,
     SIMHASH_BITS,
+    _cap_buckets,
     exact_dedup_groups,
     jaccard_pairs,
     lsh_candidate_pairs,
@@ -664,7 +665,8 @@ def lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- C61
 _SWEEP_SETTINGS = ((2, 8), (4, 4), (8, 2))  # (bands, rows/band), b*r = 16
 _SWEEP_CAP = 8  # hot-band bucket cap for the capped counters
-# SQL twin of operators/dedup._cap_buckets' per-bucket member hash
+# SQL twin of the per-bucket member hash operators/dedup._cap_buckets
+# ranks by in operators/ranking.salted_topk_per_group
 _CAP_HASH_SQL = (
     "'lshcap:' || CAST(band_id AS VARCHAR) || ':'"
     " || CAST(band_hash AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)"
@@ -781,51 +783,6 @@ def _lsh_sweep_oracle() -> str:
     """
 
 
-def _sweep_cap_buckets(banded: DataFrame, max_bucket: int) -> DataFrame:
-    """operators.dedup._cap_buckets over the combined multi-setting
-    band relation: the window partition keys gain the ``bands``
-    setting column (buckets of different settings never mix), while
-    the per-bucket selection hash stays the byte-identical
-    md5_31('lshcap:'||band_id||':'||band_hash||':'||id) — so each
-    setting's kept members equal the per-setting capped plan's."""
-    from pyspark.sql import Window
-
-    from spotify_podcasts_airflow_batch_spark.functions.hashing import (
-        md5_hash31,
-    )
-    from spotify_podcasts_airflow_batch_spark.operators.dedup import (
-        _LSH_CAP_SALTS,
-    )
-
-    hk = md5_hash31(
-        F.concat(
-            F.lit("lshcap:"),
-            F.col("band_id").cast("string"),
-            F.lit(":"),
-            F.col("band_hash").cast("string"),
-            F.lit(":"),
-            F.col("doc_id").cast("string"),
-        )
-    )
-    salted = Window.partitionBy(
-        "bands",
-        "band_id",
-        "band_hash",
-        F.pmod(F.col("doc_id"), F.lit(_LSH_CAP_SALTS)),
-    ).orderBy("__hk", "doc_id")
-    final = Window.partitionBy("bands", "band_id", "band_hash").orderBy(
-        "__hk", "doc_id"
-    )
-    return (
-        banded.withColumn("__hk", hk)
-        .withColumn("__srn", F.row_number().over(salted))
-        .where(F.col("__srn") <= max_bucket)
-        .withColumn("__rn", F.row_number().over(final))
-        .where(F.col("__rn") <= max_bucket)
-        .drop("__hk", "__srn", "__rn")
-    )
-
-
 @register("lsh_param_sweep", oracle=_lsh_sweep_oracle())
 def lsh_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C61 — the LSH banding dial: candidate volume, precision, and
@@ -911,7 +868,12 @@ def lsh_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     cand = _pairs(banded)
-    candc = _pairs(_sweep_cap_buckets(banded, _SWEEP_CAP))
+    # the capped side: _cap_buckets with the ``bands`` setting added to
+    # the bucket key (buckets of different settings never mix), while
+    # the per-bucket selection hash stays the byte-identical
+    # md5_31('lshcap:'||band_id||':'||band_hash||':'||id) — so each
+    # setting's kept members equal the per-setting capped plan's
+    candc = _pairs(_cap_buckets(banded, "doc_id", _SWEEP_CAP, ("bands",)))
     from spotify_podcasts_airflow_batch_spark.operators.dedup import (
         _shingle_pair_counts,
     )

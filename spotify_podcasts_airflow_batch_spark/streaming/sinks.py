@@ -11,9 +11,12 @@ from an at-least-once stream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spotify_podcasts_airflow_batch_spark.operators.ranking import (
+    latest_per_key,
+)
 from spotify_podcasts_airflow_batch_spark.sinks.writers import (
     write_daily_partitioned,
 )
@@ -93,14 +96,8 @@ def stream_upsert_latest(
             return
         spark = SparkSession.getActiveSession()
         order = [F.col(ts_col).desc(), F.col(tiebreak_col).desc()]
-        w = Window.partitionBy(key_col).orderBy(*order)
-        delta = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-            .withColumn(
-                "__bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(buckets))
-            )
+        delta = latest_per_key(batch_df, [key_col], order).withColumn(
+            "__bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(buckets))
         )
         touched = [
             r["__bucket"] for r in delta.select("__bucket").distinct().collect()
@@ -112,11 +109,8 @@ def stream_upsert_latest(
             existing = read_parquet(spark, out_path).filter(
                 F.col("__bucket").isin(touched)
             )
-            merged = (
-                existing.unionByName(delta)
-                .withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
+            merged = latest_per_key(
+                existing.unionByName(delta), [key_col], order
             )
         (
             merged.localCheckpoint()

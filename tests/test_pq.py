@@ -532,3 +532,166 @@ def test_shared_tails_match_inline_trees(spark, sf_dir, monkeypatch):
         lambda scored, k, *order: _inline_topk(scored, k, *order, rank="r"),
     )
     _assert_same_tree(got_exact, exact())
+
+
+# ------------------------------------------------------------------
+# Every salted two-stage cut and the k-NN cosine tail go through
+# ``operators/ranking`` (``salted_topk_per_group``, ``topk_per_group``).
+# The chains below are the hand-written copies they replaced, kept as
+# the reference: each caller must build the same analyzed tree.
+
+
+def _inline_cap_buckets(banded, id_col, max_bucket):
+    from spotify_podcasts_airflow_batch_spark.functions.hashing import (
+        md5_hash31,
+    )
+    from spotify_podcasts_airflow_batch_spark.operators.dedup import (
+        _LSH_CAP_SALTS,
+    )
+
+    hk = md5_hash31(
+        F.concat(
+            F.lit("lshcap:"),
+            F.col("band_id").cast("string"),
+            F.lit(":"),
+            F.col("band_hash").cast("string"),
+            F.lit(":"),
+            F.col(id_col).cast("string"),
+        )
+    )
+    salted = Window.partitionBy(
+        "band_id",
+        "band_hash",
+        F.pmod(F.col(id_col), F.lit(_LSH_CAP_SALTS)),
+    ).orderBy("__hk", id_col)
+    final = Window.partitionBy("band_id", "band_hash").orderBy(
+        "__hk", id_col
+    )
+    return (
+        banded.withColumn("__hk", hk)
+        .withColumn("__srn", F.row_number().over(salted))
+        .where(F.col("__srn") <= max_bucket)
+        .withColumn("__rn", F.row_number().over(final))
+        .where(F.col("__rn") <= max_bucket)
+        .drop("__hk", "__srn", "__rn")
+    )
+
+
+def _inline_sweep_cap_buckets(banded, max_bucket):
+    from spotify_podcasts_airflow_batch_spark.functions.hashing import (
+        md5_hash31,
+    )
+    from spotify_podcasts_airflow_batch_spark.operators.dedup import (
+        _LSH_CAP_SALTS,
+    )
+
+    hk = md5_hash31(
+        F.concat(
+            F.lit("lshcap:"),
+            F.col("band_id").cast("string"),
+            F.lit(":"),
+            F.col("band_hash").cast("string"),
+            F.lit(":"),
+            F.col("doc_id").cast("string"),
+        )
+    )
+    salted = Window.partitionBy(
+        "bands",
+        "band_id",
+        "band_hash",
+        F.pmod(F.col("doc_id"), F.lit(_LSH_CAP_SALTS)),
+    ).orderBy("__hk", "doc_id")
+    final = Window.partitionBy("bands", "band_id", "band_hash").orderBy(
+        "__hk", "doc_id"
+    )
+    return (
+        banded.withColumn("__hk", hk)
+        .withColumn("__srn", F.row_number().over(salted))
+        .where(F.col("__srn") <= max_bucket)
+        .withColumn("__rn", F.row_number().over(final))
+        .where(F.col("__rn") <= max_bucket)
+        .drop("__hk", "__srn", "__rn")
+    )
+
+
+def _inline_strat_cut(ranked):
+    from spotify_podcasts_airflow_batch_spark.plans.llm_pipeline2 import (
+        _STRAT_SALTS,
+    )
+
+    salted = Window.partitionBy(
+        "source", F.pmod(F.col("doc_id"), F.lit(_STRAT_SALTS))
+    ).orderBy("__hk", "doc_id")
+    final = Window.partitionBy("source").orderBy("__hk", "doc_id")
+    return (
+        ranked.withColumn("__srn", F.row_number().over(salted))
+        .where(F.col("__srn") <= F.col("alloc"))
+        .withColumn("rn", F.row_number().over(final))
+        .where(F.col("rn") <= F.col("alloc"))
+    )
+
+
+def _inline_knn_tail(scored, k, *extra):
+    w = Window.partitionBy("query_id").orderBy(
+        F.round(F.col("cos_raw"), 6).desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            *extra,
+            F.round(F.col("cos_raw"), 4).alias("cos_sim"),
+            "rank",
+        )
+    )
+
+
+@pytest.mark.fast
+def test_shared_topk_matches_inline_trees(spark, sf_dir, monkeypatch):
+    """The LSH bucket cap (``lsh_candidate_pairs(max_bucket=...)``),
+    lsh_param_sweep's per-setting cap (``_cap_buckets`` with ``bands``
+    in the bucket key), the stratified per-source cut with its Column
+    quota (``stratified_sample_exact``) and knn_brute_force's cosine
+    tail (``knn_brute``) build the trees of the inline chains they
+    replaced. (lsh_param_sweep as a whole builds a fresh
+    ``createDataFrame`` relation per call, so its cap is compared on a
+    shared banded frame.)"""
+    from spotify_podcasts_airflow_batch_spark.operators import (
+        dedup,
+        similarity as sim_ops,
+    )
+    from spotify_podcasts_airflow_batch_spark.plans import llm_pipeline2
+
+    queries = all_queries()
+    keys = ("stratified_sample_exact", "knn_brute")
+    sig = dedup.minhash_signatures(
+        table(spark, sf_dir, "documents"), "doc_id", "text"
+    )
+    banded = dedup._banded(
+        sig, "doc_id", dedup.NUM_MINHASHES, dedup.LSH_BANDS
+    ).select(
+        "doc_id", F.lit(dedup.LSH_BANDS).alias("bands"), "band_id", "band_hash"
+    )
+
+    def build(sweep_cap):
+        return {
+            "lsh_candidate_pairs": dedup.lsh_candidate_pairs(
+                sig, "doc_id", max_bucket=8
+            ),
+            "sweep_cap": sweep_cap(),
+            **{k: queries[k].spark_fn(spark, sf_dir) for k in keys},
+        }
+
+    shared = build(lambda: dedup._cap_buckets(banded, "doc_id", 8, ("bands",)))
+    monkeypatch.setattr(dedup, "_cap_buckets", _inline_cap_buckets)
+    monkeypatch.setattr(
+        llm_pipeline2,
+        "salted_topk_per_group",
+        lambda ranked, *args: _inline_strat_cut(ranked),
+    )
+    monkeypatch.setattr(sim_ops, "_cosine_rows", _inline_knn_tail)
+    inline = build(lambda: _inline_sweep_cap_buckets(banded, 8))
+    for name, got in shared.items():
+        _assert_same_tree(got, inline[name])

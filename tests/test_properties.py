@@ -6,7 +6,7 @@ example is adversarially generated."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 SETTINGS = dict(
@@ -116,39 +116,63 @@ _grp_rows = st.lists(
 )
 
 
-@given(rows=_grp_rows, quota=st.integers(min_value=1, max_value=5))
+# explicit cases pinned on top of the random ones: one hot group of
+# equal scores (every tie broken by id) under each salt count, and a
+# per-group Column k next to an int k
+_hot_ties = [(0, 4)] * 14 + [(1, 4)] * 3 + [(2, 7), (2, 4)]
+
+
+@given(
+    rows=_grp_rows,
+    quota=st.integers(min_value=1, max_value=5),
+    salts=st.sampled_from((1, 3, 4, 32)),
+    column_k=st.booleans(),
+)
+@example(rows=_hot_ties, quota=2, salts=1, column_k=False)
+@example(rows=_hot_ties, quota=3, salts=4, column_k=True)
+@example(rows=_hot_ties, quota=2, salts=32, column_k=True)
 @settings(**SETTINGS)
-def test_capped_top_q_equals_plain_window(spark, rows, quota):
-    """C39's salted two-stage quota cap is exactly a row_number window
-    + filter for ANY input: groups at/below/above quota, heavy ties in
-    the score, single-group skew, empty input."""
+def test_capped_top_q_equals_plain_window(spark, rows, quota, salts, column_k):
+    """C39's quota cap and the shared salted two-stage cut under it
+    (``salted_topk_per_group``) are exactly a row_number window +
+    filter for ANY input: groups at/below/above quota, heavy ties in
+    the score broken by id, single-group skew, empty input, 1 to 32
+    salts, and a per-group Column ``k`` (``quota + g``) as well as
+    an int."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from spotify_podcasts_airflow_batch_spark.operators.ranking import (
         capped_top_q,
+        salted_topk_per_group,
     )
 
     df = spark.createDataFrame(
         [(g, s, i) for i, (g, s) in enumerate(rows)], "g long, s long, id long"
-    )
+    ).withColumn("k", F.col("g") + quota)
     order = [F.col("s").desc(), F.col("id")]
-    got = sorted(
-        (r.g, r.s, r.id)
-        for r in capped_top_q(
-            df, group_cols=("g",), order_by=order, quota=quota,
-            salt_source=F.col("id"), salts=3,
-        ).collect()
-    )
+    k = F.col("k") if column_k else quota
     w = Window.partitionBy("g").orderBy(*order)
-    want = sorted(
-        (r.g, r.s, r.id)
-        for r in df.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= quota)
-        .drop("rn")
-        .collect()
+
+    def plain(cut):
+        return sorted(
+            (r.g, r.s, r.id, r.rn)
+            for r in df.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") <= cut)
+            .collect()
+        )
+
+    capped = capped_top_q(
+        df, group_cols=("g",), order_by=order, quota=quota,
+        salt_source=F.col("id"), salts=salts,
     )
-    assert got == want
+    assert sorted((r.g, r.s, r.id) for r in capped.collect()) == [
+        t[:3] for t in plain(quota)
+    ]
+    salted = salted_topk_per_group(
+        df, ["g"], order, k, F.col("id"), salts, rank_col="rn"
+    )
+    assert sorted((r.g, r.s, r.id, r.rn) for r in salted.collect()) == plain(k)
 
 
 _events = st.lists(
