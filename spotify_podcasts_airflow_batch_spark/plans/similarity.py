@@ -673,7 +673,7 @@ _TRI_EDGES = """
 @register(
     "trade_triangles",
     oracle=f"""
-    WITH ed AS ({_TRI_EDGES}),
+    WITH ed AS MATERIALIZED ({_TRI_EDGES}),
     tri AS (
         SELECT e1.a AS x, e1.b AS y, e2.b AS z
         FROM ed e1

@@ -1750,6 +1750,14 @@ def ivf_assign_arrow(
                     codegen limits at √n cells)
       "cell+xu"  → (id, cell_id, xu array<bigint>)     [top must be 1;
                     the quantized vector, for Lloyd update sums]
+
+    At small sizes the kernel's wall is mostly a fixed per-task cost:
+    the Python worker's per-task setup plus the Arrow round trip, about
+    0.09 s on a 4-core host with the package's ``worker_daemon`` and
+    0.24 s without it (``tools/pyworker_overhead.py``). The event log's
+    ``exec_cpu_s`` counts JVM threads only, so it never shows this: the
+    1k-vector probe ranking of ``ivfpq_incremental_served`` ran 199 ms
+    on 12 ms of JVM CPU without the daemon.
     """
     import numpy as np
     import pandas as pd

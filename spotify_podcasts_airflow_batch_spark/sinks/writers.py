@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 
@@ -53,13 +52,18 @@ def write_consolidated_csv(
     """Union-consolidated CSV (≍ top-podcasts-union/top_podcasts.csv).
 
     ``single_file`` coalesces to one task — only for dataset-export
-    sized results (the Kaggle upload case), never for fact data."""
+    sized results (the Kaggle upload case), never for fact data. The
+    one part file is renamed to ``consolidated.csv`` (its checksum file
+    dropped), so the directory still reads as the chart, each row once."""
     out = df.coalesce(1) if single_file else df
     out.write.mode("overwrite").option("header", "true").csv(path)
     if single_file:
-        part = glob.glob(os.path.join(path, "part-*.csv"))[0]
+        (part,) = glob.glob(os.path.join(path, "part-*.csv"))
         final = os.path.join(path, "consolidated.csv")
-        shutil.copyfile(part, final)
+        os.replace(part, final)
+        crc = os.path.join(path, f".{os.path.basename(part)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
         return final
     return path
 

@@ -39,6 +39,20 @@ def test_run_daily_end_to_end(pipe, spark):
     assert len(parts) >= 25  # ~30 days of events
 
 
+def test_union_directory_holds_each_chart_row_once(pipe, spark):
+    """A reader of the whole ``top-podcasts-union/`` directory gets the
+    published chart, each row once: the part file was moved to
+    ``consolidated.csv``, not copied beside it."""
+    csv = pipe.run_daily()
+    data_files = [
+        f for f in os.listdir(os.path.dirname(csv)) if not f.startswith((".", "_"))
+    ]
+    assert data_files == ["consolidated.csv"]
+    rows = spark.read.option("header", "true").csv(os.path.dirname(csv))
+    chart = spark.read.parquet(pipe.charts_path)
+    assert rows.count() == rows.distinct().count() == chart.count() > 0
+
+
 def test_backfill_is_idempotent(pipe, spark):
     pipe.run_daily()
     before = spark.read.parquet(pipe.charts_path).count()
