@@ -15,6 +15,23 @@ task, which the guard cuts to a few ``stat`` calls while the archives are
 unchanged. The package root is appended to the workers' ``PYTHONPATH``,
 so the daemon (and any kernel pickled by reference to a package module)
 imports whatever the JVM's working directory is.
+
+``file://`` paths go through ``graft.NioLocalFileSystem``
+(``jvm/NioLocalFileSystem.java``, built into ``jvm/nio-local-fs.jar`` by
+``tools/build_jar.py``). Without ``libhadoop``, Hadoop's local
+filesystem sets each permission by forking a ``chmod`` process, and it
+does so for every directory and every file it creates, checksum files
+included: about 100 processes for one ``run_daily``. The class is
+Hadoop's checksummed ``LocalFileSystem`` whose chmod is the ``chmod(2)``
+system call; checksums and modes are unchanged. Without the setting,
+``file://`` resolves to Hive's ``ProxyLocalFileSystem`` (registered by
+Spark's Hive jar): the same forking filesystem, with a ``rename`` that
+never replaces an existing file, which the class keeps. The jar goes on
+``spark.driver.defaultExtraClassPath``, which Spark's launcher appends
+after a caller's ``spark.driver.extraClassPath``, so both take effect.
+Only the driver JVM gets the jar: this covers local-master sessions,
+whose executors run in the driver; a cluster's executors would also
+need it on their class path.
 """
 
 from __future__ import annotations
@@ -24,6 +41,10 @@ import os
 from pyspark.sql import SparkSession
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+LOCAL_FS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-local-fs.jar"
+)
+LOCAL_FS_CLASS = "graft.NioLocalFileSystem"
 
 
 def prefer_sort_merge_join() -> str:
@@ -44,6 +65,10 @@ def get_spark(
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    if not os.path.isfile(LOCAL_FS_JAR):
+        raise FileNotFoundError(
+            f"{LOCAL_FS_JAR} is missing; build it with tools/build_jar.py"
+        )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -94,6 +119,8 @@ def get_spark(
             "spark.python.daemon.module",
             "spotify_podcasts_airflow_batch_spark.worker_daemon",
         )
+        .config("spark.driver.defaultExtraClassPath", LOCAL_FS_JAR)
+        .config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
     )
     spark = builder.getOrCreate()
     # Every Python function ships ``sc.environment`` (seeded from all
