@@ -15,7 +15,7 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spotify_podcasts_airflow_batch_spark.operators.ranking import (
@@ -854,8 +854,8 @@ def pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Training contracts to 8x16x8 values driver-side; the full-corpus
     encode then sees the frozen centroids as ONE constant-folded
-    literal codebook row — at 100 TB the training sample is fixed-size
-    and the corpus only ever meets the broadcast constant. Encoding is
+    literal codebook column — at 100 TB the training sample is
+    fixed-size and the corpus only ever meets the constant. Encoding is
     a PURE PROJECTION: every subspace argmin evaluates JVM-side over
     expression-generated fold distances, and NOTHING shuffles until
     the final top-k. ADC cells quantize to BIGINT micro-units so each
@@ -876,14 +876,14 @@ def pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not cents or not cents[0]:
         # empty embeddings table → no codebook, no probes
         return spark.createDataFrame([], _SERVE_SCHEMA)
-    cb_row = _pq_trained_cb_row(spark, cents)
+    cbs = _pq_trained_cbs(cents)
     emb = table(spark, sf_dir, "embeddings", fan_out="force").select(
         "vec_id", "embedding"
     )
     emb_1t = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    return _served_adc(_pq_adc_topk(emb, emb_1t, cb_row))
+    return _served_adc(_pq_adc_topk(emb, emb_1t, cbs))
 
 
 def pq_codes_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -892,7 +892,7 @@ def pq_codes_index_path(spark: SparkSession, sf_dir: str) -> str:
         emb = table(spark, sf_dir, "embeddings", fan_out="force").select(
             "vec_id", "embedding"
         )
-        return _pq_codes(emb, _pq_trained_cb_row(spark, cents))
+        return _pq_codes(emb, _pq_trained_cbs(cents))
 
     return materialized_index_path(spark, sf_dir, "pqcodes", build)
 
@@ -910,12 +910,12 @@ def pq_adc_ann_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = pq_train_codebook_cached(spark, sf_dir)
     if not cents or not cents[0]:
         return spark.createDataFrame([], _SERVE_SCHEMA)
-    cb_row = _pq_trained_cb_row(spark, cents)
+    cbs = _pq_trained_cbs(cents)
     codes = read_parquet(spark, pq_codes_index_path(spark, sf_dir))
     emb_1t = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    return _served_adc(_pq_adc_topk_from_codes(codes, emb_1t, cb_row))
+    return _served_adc(_pq_adc_topk_from_codes(codes, emb_1t, cbs))
 
 
 # PQ constants and per-row PQ expressions are Spark SQL text parsed by
@@ -956,11 +956,15 @@ def _pq_sub_dist_sql() -> str:
     return " + ".join(f"{d} * {d}" for d in diffs)
 
 
-_PQ_DISTS_SQL = f"transform(cbs, pq_c -> {_pq_sub_dist_sql()})"
-# codes[m] = first (lowest-id) argmin over the one-row ``cbs`` codebook
-_PQ_CODES_SQL = (
+# dists[m][c] = subspace m's distance to centroid c of the ``cbs`` codebook
+_PQ_DISTS_SQL = (
     f"transform(sequence(0, {_PQ_M - 1}), pq_m -> "
-    f"array_position({_PQ_DISTS_SQL}, array_min({_PQ_DISTS_SQL})) - 1)"
+    f"transform(cbs, pq_c -> {_pq_sub_dist_sql()}))"
+)
+# codes[m] = first (lowest-id) argmin of dists[m], each array built once
+_PQ_CODES_SQL = (
+    f"transform({_PQ_DISTS_SQL}, "
+    "pq_d -> array_position(pq_d, array_min(pq_d)) - 1)"
 )
 # adc[m][c] = round(subspace distance * 1e6) in BIGINT micro-units
 _PQ_ADC_SQL = (
@@ -1059,19 +1063,21 @@ def _pq_lloyd_u(
     return cents_u
 
 
-def _pq_codes(emb, cb_row) -> DataFrame:
+def _pq_codes(emb, cbs) -> DataFrame:
     """Projection encode: every vector's 8 subspace argmin codes
-    against the one-row ``cbs`` codebook relation. Shuffle-free."""
-    return emb.crossJoin(cb_row).select(
+    against the codebook column ``cbs`` (full 64-dim centroids).
+    Shuffle-free."""
+    return emb.withColumn("cbs", cbs).select(
         "vec_id", F.expr(_PQ_CODES_SQL).alias("codes")
     )
 
 
-def _pq_adc_table(qdf, cb_row) -> DataFrame:
-    """Per-query 8x16 ADC table in BIGINT micro-units, broadcast.
-    ``qdf`` must expose (query_id, embedding)."""
+def _pq_adc_table(qdf, cbs) -> DataFrame:
+    """Per-query 8x16 ADC table in BIGINT micro-units against the
+    codebook column ``cbs``, broadcast. ``qdf`` must expose (query_id,
+    embedding)."""
     return F.broadcast(
-        qdf.crossJoin(cb_row).select(
+        qdf.withColumn("cbs", cbs).select(
             "query_id", F.expr(_PQ_ADC_SQL).alias("adc")
         )
     )
@@ -1181,22 +1187,22 @@ def _ivfpq_recall(
     return _recall_report(qdf.select("query_id"), exact, cand, _IVFPQ_K)
 
 
-def _pq_adc_topk(emb, emb_1t, cb_row) -> DataFrame:
+def _pq_adc_topk(emb, emb_1t, cbs) -> DataFrame:
     """Shared D24/D26 machinery: projection encode against the
-    one-row ``cbs`` codebook relation (sampled or trained), integer
+    ``cbs`` codebook column (sampled or trained), integer
     ADC scoring, two-stage salted top-k. Returns (query_id, rank,
     vec_id, score_u)."""
-    return _pq_adc_topk_from_codes(_pq_codes(emb, cb_row), emb_1t, cb_row)
+    return _pq_adc_topk_from_codes(_pq_codes(emb, cbs), emb_1t, cbs)
 
 
-def _pq_adc_topk_from_codes(codes, emb_1t, cb_row, qdf=None) -> DataFrame:
+def _pq_adc_topk_from_codes(codes, emb_1t, cbs, qdf=None) -> DataFrame:
     """The D24 serving tail over any (vec_id, codes) relation —
     inline-encoded or materialized. ``qdf`` (query_id, embedding)
     overrides the default probe set (the _PQ_NQ smallest vec_ids) —
     the D37b dial passes its wide probe slice."""
     if qdf is None:
         qdf = _pq_probes(emb_1t, "embedding")
-    q = _pq_adc_table(qdf, cb_row)
+    q = _pq_adc_table(qdf, cbs)
 
     scored = codes.crossJoin(q).select(
         "query_id",
@@ -1334,8 +1340,9 @@ def pq_sampled_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_1t = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    # one-row codebook relation: 16 embeddings in vec_id order
-    cb_row = F.broadcast(
+    # codebook column: the 16 first embeddings in vec_id order, as a
+    # scalar subquery
+    cbs = (
         emb_1t.orderBy("vec_id")
         .limit(_PQ_K)
         .agg(
@@ -1344,10 +1351,11 @@ def pq_sampled_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.collect_list(F.struct("vec_id", "embedding"))
                 ),
                 lambda s: s["embedding"],
-            ).alias("cbs")
+            )
         )
+        .scalar()
     )
-    cand = _pq_adc_topk(emb, emb_1t, cb_row).select("query_id", "vec_id")
+    cand = _pq_adc_topk(emb, emb_1t, cbs).select("query_id", "vec_id")
     return _pq_recall(emb_1t, cand)
 
 
@@ -1410,28 +1418,27 @@ def pq_train_codebook(
     return [[[cu / 1e6 for cu in ck] for ck in cm] for cm in cents_u]
 
 
-def _pq_trained_cb_row(spark: SparkSession, cents) -> DataFrame:
-    """One-row codebook relation for the D24 encode machinery: the 16
-    trained centroids re-assembled to full 64-dim vectors (subspace m
-    of centroid k = cents[m][k]) as a constant-folded literal array.
+def _pq_trained_cbs(cents) -> Column:
+    """Codebook column for the D24 encode machinery: the 16 trained
+    centroids re-assembled to full 64-dim vectors (subspace m of
+    centroid k = cents[m][k]) as a constant-folded literal array.
     The array is ONE SQL literal (``_sql_literal``): one Py4J round
-    trip, where a Column per value costs one each (~1,000)."""
+    trip, where a Column per value costs one each (~1,000). As a
+    literal column it needs no join, so no job broadcasts it."""
     full = [
         [cents[m][k][j] for m in range(_PQ_M) for j in range(_PQ_SUB)]
         # a corpus below _PQ_K seeds trains (and serves) fewer
         # centroids — see pq_train_codebook's LIMIT-bounded seeding
         for k in range(len(cents[0]))
     ]
-    return F.broadcast(
-        spark.range(1).select(F.expr(_sql_literal(full)).alias("cbs"))
-    )
+    return F.expr(_sql_literal(full))
 
 
 @register("pq_trained_recall", oracle=None)  # rows-only: training-path twin
 def pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D26 — recall@5 under the trained PQ codebook via the
     INDEPENDENT training path: exercises ``pq_train_codebook`` +
-    ``_pq_trained_cb_row`` directly rather than going through the
+    ``_pq_trained_cbs`` directly rather than going through the
     registered D24 serving query, so a regression in either half
     shows up as a D25/D26 split. Since round 5 the training loop is
     pure BIGINT micro-units and D24 itself serves the trained
@@ -1450,14 +1457,14 @@ def pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id long, n_hits long, recall_bp long"
         )
-    cb_row = _pq_trained_cb_row(spark, cents)
+    cbs = _pq_trained_cbs(cents)
     emb = table(spark, sf_dir, "embeddings", fan_out="force").select(
         "vec_id", "embedding"
     )
     emb_1t = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    cand = _pq_adc_topk(emb, emb_1t, cb_row).select("query_id", "vec_id")
+    cand = _pq_adc_topk(emb, emb_1t, cbs).select("query_id", "vec_id")
     exact = _pq_exact_topk(emb_1t).select("query_id", "vec_id")
     return _pq_recall(emb_1t, cand, exact)
 
@@ -1720,6 +1727,7 @@ def ivf_assign_arrow(
     vec_col: str = "embedding",
     top: int = 1,
     emit: str = "cell",
+    codebook: list | None = None,
 ) -> DataFrame:
     """Integer-exact coarse-cell assignment as ONE Arrow GEMM pass —
     the √n-cells replacement for the per-row ``zip_with`` fold.
@@ -1740,7 +1748,10 @@ def ivf_assign_arrow(
 
     ``top`` rows per input row, best cells first. ``emit``:
       "cell"     → (id, cell_id)
-      "cell+vec" → (id, vec_col passthrough, cell_id)  [top must be 1]
+      "codes"    → (id, codes array<bigint>, cell_id)  [top must be 1;
+                    needs ``codebook``, the trained PQ centroids
+                    cents[m][k][j]; codes[m] is the first argmin over
+                    subspace m's float distances — see pq_argmin]
       "cell+ru"  → (id, cell_id, ru array<bigint>) — ru = xu −
                     cu[cell], the exact integer residual; with
                     top > 1, one row per probed cell, each with the
@@ -1769,8 +1780,9 @@ def ivf_assign_arrow(
     bound = float(np.abs(C).max(initial=0.0))
     if emit == "cell":
         schema = f"{id_col} long, cell_id int"
-    elif emit == "cell+vec":
-        schema = f"{id_col} long, {vec_col} array<float>, cell_id int"
+    elif emit == "codes":
+        schema = f"{id_col} long, codes array<bigint>, cell_id int"
+        PQ = np.asarray(codebook, dtype=np.float64)  # (m, k, j)
     elif emit == "cell+ru":
         schema = f"{id_col} long, cell_id int, ru array<bigint>"
     elif emit == "cell+xu":
@@ -1778,11 +1790,34 @@ def ivf_assign_arrow(
     else:  # pragma: no cover - programming error
         raise ValueError(f"unknown emit: {emit}")
 
+    def pq_argmin(X, PQ):
+        """Per subspace m, the first (lowest-id) argmin over the PQ
+        centroids of the double distance that ``_pq_sub_dist_sql``
+        folds JVM-side, computed with the same IEEE operations in the
+        same order: widened components, d·d per dim, the _PQ_SUB terms
+        added one at a time left to right. Elementwise numpy ops round
+        exactly as Java's do; a BLAS product, ``einsum`` or
+        ``sum(axis=…)`` (pairwise summation) would reorder the adds and
+        could flip an argmin on a last-ulp tie."""
+        n_m, _, n_sub = PQ.shape
+        codes = np.empty((len(X), n_m), dtype=np.int64)
+        for m in range(n_m):
+            dist = None
+            for j in range(n_sub):
+                d = X[:, m * n_sub + j, None] - PQ[None, m, :, j]
+                dist = d * d if dist is None else dist + d * d
+            codes[:, m] = dist.argmin(axis=1)  # first minimum
+        return codes
+
     def kernel(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            if not np.isfinite(X).all():
+                raise ValueError(
+                    "ivf_assign_arrow: non-finite vector component"
+                )
             s = X * 1e6
             XU = np.where(s >= 0, np.floor(s + 0.5), np.ceil(s - 0.5))
             # exactness guard: the final fused distance
@@ -1806,11 +1841,11 @@ def ivf_assign_arrow(
                     yield pd.DataFrame(
                         {id_col: ids, "cell_id": best.astype(np.int32)}
                     )
-                elif emit == "cell+vec":
+                elif emit == "codes":
                     yield pd.DataFrame(
                         {
                             id_col: ids,
-                            vec_col: pdf[vec_col],
+                            "codes": list(pq_argmin(X, PQ)),
                             "cell_id": best.astype(np.int32),
                         }
                     )
@@ -1858,7 +1893,7 @@ def ivf_assign_arrow(
                         }
                     )
 
-    if emit in ("cell+vec", "cell+xu") and top != 1:
+    if emit in ("codes", "cell+xu") and top != 1:
         raise ValueError(f"{emit} emits the single best cell only")
     return df.select(id_col, vec_col).mapInPandas(kernel, schema)
 
@@ -1872,31 +1907,31 @@ def _ivfpq_encoded(
     emb: DataFrame | None = None,
 ) -> DataFrame:
     """The D28 index relation (vec_id, codes, cell_id): PQ codes +
-    coarse cell in ONE shuffle-free projection against the two
-    broadcast trained constants. ``cents``/``cells``/``emb`` override
-    the artifacts and the slice to encode — the incremental-index
-    append path encodes ONLY its new batch against FROZEN day-0
-    artifacts (plans/similarity4.py); defaults reproduce D28
-    unchanged."""
+    coarse cell from ONE shuffle-free Arrow pass against the two
+    trained constants. ``cents``/``cells``/``emb`` override the
+    artifacts and the slice to encode — the incremental-index append
+    path encodes ONLY its new batch against FROZEN day-0 artifacts
+    (plans/similarity4.py); defaults reproduce D28 unchanged.
+
+    The kernel that assigns the cell also takes each subspace's PQ
+    code, so the vectors never return to the JVM. The codes equal the
+    SQL fold's (``_PQ_CODES_SQL``, which ``_pq_codes`` and the oracle's
+    CASE chain compute): the kernel builds every distance with the same
+    IEEE double operations in the same order (float32 widened to
+    double, d·d, the 8 terms added left to right) and takes the FIRST
+    minimum, so exact ties resolve to the lowest centroid id as
+    ``array_position(d, array_min(d))`` does; non-finite input
+    raises."""
     if cents is None:
         cents = pq_train_codebook_cached(spark, sf_dir)
     if cells is None:
         cells = ivf_train_cells_cached(spark, sf_dir)
-    cb_row = _pq_trained_cb_row(spark, cents)
     e = emb
     if e is None:
         e = table(spark, sf_dir, "embeddings", fan_out="force").select(
             "vec_id", "embedding"
         )
-    # coarse cell via the Arrow GEMM kernel (√n cells × 64 dims per
-    # row is too hot for the interpreted fold); the embedding passes
-    # through the Arrow exchange losslessly, so the float PQ-code
-    # argmin stays JVM-side in the SAME expression order as the
-    # oracle's CASE chain — no float ever crosses an engine boundary
-    assigned = ivf_assign_arrow(e, cells, emit="cell+vec")
-    return assigned.crossJoin(cb_row).select(
-        "vec_id", F.expr(_PQ_CODES_SQL).alias("codes"), "cell_id"
-    )
+    return ivf_assign_arrow(e, cells, emit="codes", codebook=cents)
 
 
 def _ivfpq_serve(
@@ -1933,7 +1968,7 @@ def _ivfpq_serve(
         cents = pq_train_codebook_cached(spark, sf_dir)
     if cells is None:
         cells = ivf_train_cells_cached(spark, sf_dir)
-    cb_row = _pq_trained_cb_row(spark, cents)
+    cbs = _pq_trained_cbs(cents)
     e_1t = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qsel = _ivf_probes(e_1t, "embedding")
     # probe ranking via the Arrow GEMM kernel: with cells ≈ √n the old
@@ -1947,7 +1982,7 @@ def _ivfpq_serve(
         id_col="query_id",
         top=_IVFPQ_NPROBE,
     )
-    adc = _pq_adc_table(qsel, cb_row)
+    adc = _pq_adc_table(qsel, cbs)
     cand = F.broadcast(probe_cells).join(encoded, "cell_id")
     if rebalance:
         # hash onto the salted-window keys while rows are still
@@ -2583,7 +2618,7 @@ def _rpq_train(spark: SparkSession, sf_dir: str) -> list:
 def _rpq_cb_row(spark: SparkSession, cents_u: list) -> DataFrame:
     """One-row broadcast relation rcbs[m][cid][j] of the trained
     residual codebook constants, parsed from one SQL literal (see
-    ``_pq_trained_cb_row``)."""
+    ``_pq_trained_cbs``)."""
     return F.broadcast(
         spark.range(1).select(
             F.expr(_sql_literal(cents_u)).alias("rcbs")
@@ -3446,8 +3481,8 @@ def opq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb_1t = table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
-    cb_row = _pq_trained_cb_row(spark, cents)
-    return _served_adc(_pq_adc_topk(emb, emb_1t, cb_row))
+    cbs = _pq_trained_cbs(cents)
+    return _served_adc(_pq_adc_topk(emb, emb_1t, cbs))
 
 
 def _opq_wide_cand_sql(suffix: str, corpus: str, cbn: str, qn: str) -> str:
@@ -3584,13 +3619,13 @@ def opq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id") % _OPQ_DIAL_MOD == 0
     ).select(F.col("vec_id").alias("query_id"), "embedding")
     exact = _pq_exact_topk(raw_1t, qdf=qdf_raw, k=_PQ_TOPK)
-    cb_id = _pq_trained_cb_row(spark, cents_id)
-    cb_rot = _pq_trained_cb_row(spark, cents_rot)
+    cbs_id = _pq_trained_cbs(cents_id)
+    cbs_rot = _pq_trained_cbs(cents_rot)
     cand_id = _pq_adc_topk_from_codes(
-        _pq_codes(raw_full, cb_id), raw_1t, cb_id, qdf=qdf_raw
+        _pq_codes(raw_full, cbs_id), raw_1t, cbs_id, qdf=qdf_raw
     ).select("query_id", "vec_id")
     cand_rot = _pq_adc_topk_from_codes(
-        _pq_codes(rot_full, cb_rot), rot_1t, cb_rot, qdf=qdf_rot
+        _pq_codes(rot_full, cbs_rot), rot_1t, cbs_rot, qdf=qdf_rot
     ).select("query_id", "vec_id")
     np_df = qdf_raw.agg(F.count(F.lit(1)).alias("n_probes"))
 

@@ -2,19 +2,45 @@
 behind the √n-cells IVF family: distances must equal the pure-integer
 spec (quantize → squared L2 → (d2u, cell_id) argmin) bit-for-bit,
 including quantization half-boundaries, ties, zero vectors, and
-negative components; emits must agree across modes."""
+negative components; emits must agree across modes. The PQ codes it
+emits next to the cell must equal the SQL fold's (``_pq_codes``) on
+the fixture corpus, on vectors placed exactly at centroids and under a
+duplicated centroid (exact ties)."""
 
 from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
+    _PQ_M,
+    _PQ_SUB,
+    _pq_codes,
+    _pq_trained_cbs,
     ivf_assign_arrow,
 )
 
 _DIMS = 64
+
+
+def _fold_codes(df, cents):
+    """vec_id → codes from the JVM SQL fold, the reference."""
+    return {
+        r.vec_id: list(r.codes)
+        for r in _pq_codes(df, _pq_trained_cbs(cents)).collect()
+    }
+
+
+def _kernel_codes(df, cells_u, cents):
+    """vec_id → (codes, cell_id) from the kernel's codes emit."""
+    return {
+        r.vec_id: (list(r.codes), r.cell_id)
+        for r in ivf_assign_arrow(
+            df, cells_u, emit="codes", codebook=cents
+        ).collect()
+    }
 
 
 def _q(x: float) -> int:
@@ -117,10 +143,25 @@ def test_kernel_matches_integer_spec_all_emits(spark):
     for r in ivf_assign_arrow(df, cells_u, emit="cell+xu").collect():
         assert list(r.xu) == [_q(float(x)) for x in f32[r.vec_id]]
 
-    # cell+vec: embedding passes through the Arrow exchange losslessly
-    for r in ivf_assign_arrow(df, cells_u, emit="cell+vec").collect():
-        assert list(r.embedding) == f32[r.vec_id]
-        assert [r.cell_id] == want1[r.vec_id]
+    # codes: the PQ codebook's centroids ARE corpus rows (rows 0, 3,
+    # 5, 7 at distance 0 from a centroid), and centroid 4 duplicates
+    # centroid 1, so every row at row 3 ties exactly between them
+    rows = [f32[vid] for vid in (0, 3, 5, 7, 3)]
+    cents = [
+        [
+            [float(v[m * _PQ_SUB + j]) for j in range(_PQ_SUB)]
+            for v in rows
+        ]
+        for m in range(_PQ_M)
+    ]
+    got = _kernel_codes(df, cells_u, cents)
+    want = _fold_codes(df, cents)
+    assert {vid: codes for vid, (codes, _) in got.items()} == want
+    assert {vid: [cell] for vid, (_, cell) in got.items()} == want1
+    # centroid-located rows code to their own centroid; the duplicate
+    # (id 4) never wins over id 1
+    assert want[0] == [0] * _PQ_M and want[3] == [1] * _PQ_M
+    assert all(4 not in codes for codes in want.values())
 
 
 def test_kernel_matches_jvm_fold_on_fixture_corpus(spark, sf_dir):
@@ -165,3 +206,44 @@ def test_kernel_matches_jvm_fold_on_fixture_corpus(spark, sf_dir):
         .collect()
     }
     assert got == want
+
+
+def test_codes_match_sql_fold_on_fixture_corpus(spark, sf_dir):
+    """The kernel's PQ codes under the trained codebook equal the SQL
+    fold's on the real fixture embeddings, and its cells equal the
+    cell emit's."""
+    from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
+        ivf_train_cells_cached,
+        pq_train_codebook_cached,
+    )
+    from spotify_podcasts_airflow_batch_spark.sources.readers import table
+
+    cents = pq_train_codebook_cached(spark, sf_dir)
+    cells_u = ivf_train_cells_cached(spark, sf_dir)
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    got = _kernel_codes(e, cells_u, cents)
+    assert got
+    assert {vid: codes for vid, (codes, _) in got.items()} == _fold_codes(
+        e, cents
+    )
+    cell = {
+        r.vec_id: r.cell_id
+        for r in ivf_assign_arrow(e, cells_u, emit="cell").collect()
+    }
+    assert {vid: c for vid, (_, c) in got.items()} == cell
+
+
+def test_non_finite_input_raises(spark):
+    """A NaN or infinite component has no exact integer distance and
+    no engine-agreed argmin: the kernel raises instead of emitting."""
+    cells_u = [[0] * _DIMS]
+    cents = [[[0.0] * _PQ_SUB] for _ in range(_PQ_M)]
+    for bad in (float("nan"), float("inf")):
+        df = spark.createDataFrame(
+            [(1, [bad] + [0.0] * (_DIMS - 1))],
+            "vec_id long, embedding array<float>",
+        )
+        with pytest.raises(Exception, match="non-finite"):
+            ivf_assign_arrow(
+                df, cells_u, emit="codes", codebook=cents
+            ).collect()

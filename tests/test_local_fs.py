@@ -16,7 +16,11 @@ import zipfile
 import pytest
 from pyspark.sql import functions as F
 
-from spotify_podcasts_airflow_batch_spark.session import LOCAL_FS_CLASS, LOCAL_FS_JAR
+from spotify_podcasts_airflow_batch_spark.session import (
+    LOCAL_AFS_CLASS,
+    LOCAL_FS_CLASS,
+    LOCAL_FS_JAR,
+)
 from spotify_podcasts_airflow_batch_spark.sinks.writers import write_daily_partitioned
 from tools.build_jar import compile_classes
 from tools.subprocess_census import install_shims, spawns
@@ -46,6 +50,9 @@ def test_file_scheme_is_the_syscall_filesystem(spark):
     local = hadoop.fs.FileSystem.getLocal(conf)  # casts to LocalFileSystem
     assert local.getClass().getName() == LOCAL_FS_CLASS
     assert local.getRaw().getClass().getName() == f"{LOCAL_FS_CLASS}$Raw"
+    # FileContext (streaming checkpoints) resolves file:// on its own
+    context = hadoop.fs.FileContext.getLocalFSFileContext(conf)
+    assert context.getDefaultFileSystem().getClass().getName() == LOCAL_AFS_CLASS
 
 
 def test_written_tree_keeps_hadoop_modes_and_checksums(spark, tmp_path):
@@ -106,12 +113,14 @@ def test_rename_never_replaces_a_file(spark, tmp_path):
 
 
 def test_writes_fork_no_chmod(tmp_path):
-    """A 30-date partitioned write plus the one-file CSV, in a session
+    """A 30-date partitioned write plus the one-file CSV, then a
+    checkpointed parquet-to-parquet ``availableNow`` stream (whose
+    checkpoint goes through Hadoop's ``FileContext``), in a session
     whose caller puts its own entry on ``spark.driver.extraClassPath``
     and whose ``PATH`` starts with a logging ``chmod``: the caller's
-    entry is on the class path, and no write forks ``chmod``. Hadoop's
-    own raw local filesystem, asked for one chmod in the same JVM, goes
-    through the shim."""
+    entry is on the class path, and neither the writes nor the stream
+    fork ``chmod``. Hadoop's own raw local filesystem, asked for one
+    chmod in the same JVM, goes through the shim."""
     shims, log = tmp_path / "shims", tmp_path / "spawns.log"
     install_shims(str(shims), str(log))
     caller = tmp_path / "caller-classpath"
@@ -146,6 +155,17 @@ def test_writes_fork_no_chmod(tmp_path):
             single_file=True,
         )
         written = spawns(log).get("chmod", 0)
+        spark.range(100).write.parquet(os.path.join(out, "stream_in"))
+        stream = (
+            spark.readStream.schema("id long")
+            .parquet(os.path.join(out, "stream_in"))
+            .writeStream.format("parquet")
+            .option("checkpointLocation", os.path.join(out, "checkpoint"))
+            .trigger(availableNow=True)
+            .start(os.path.join(out, "stream_out"))
+        )
+        stream.awaitTermination()
+        streamed = spawns(log).get("chmod", 0) - written
         raw = jvm.org.apache.hadoop.fs.RawLocalFileSystem()
         raw.initialize(jvm.java.net.URI("file:///"), spark.sparkContext._jsc.hadoopConfiguration())
         raw.setPermission(
@@ -154,7 +174,9 @@ def test_writes_fork_no_chmod(tmp_path):
         )
         result = dict(
             written=written,
-            control=spawns(log).get("chmod", 0) - written,
+            streamed=streamed,
+            stream_rows=read_parquet(spark, os.path.join(out, "stream_out")).count(),
+            control=spawns(log).get("chmod", 0) - written - streamed,
             caller=jvm.java.lang.ClassLoader.getSystemResource("caller-marker.txt") is not None,
             dates=len([d for d in os.listdir(os.path.join(out, "daily")) if d.startswith("snapshot_date=")]),
             csv=os.path.basename(csv),
@@ -182,5 +204,11 @@ def test_writes_fork_no_chmod(tmp_path):
     (line,) = [l for l in proc.stdout.splitlines() if l.startswith("RESULT ")]
     result = json.loads(line.removeprefix("RESULT "))
     assert result == dict(
-        written=0, control=1, caller=True, dates=30, csv="consolidated.csv"
+        written=0,
+        streamed=0,
+        stream_rows=100,
+        control=1,
+        caller=True,
+        dates=30,
+        csv="consolidated.csv",
     ), spawns(str(log))

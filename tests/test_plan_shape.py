@@ -444,6 +444,36 @@ def test_ivfpq_index_build_never_shuffles_corpus(spark, sf_dir):
     assert "BroadcastHashJoin" in plan  # probe-list join onto encoded
 
 
+def test_ivfpq_encode_is_one_arrow_pass(spark):
+    """The IVF-PQ encode takes its PQ codes in the Arrow kernel that
+    assigns the cell: no codebook relation joined onto the corpus, and
+    no interpreted higher-order fold in any projection."""
+    from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
+        _EMBED_DIMS,
+        _PQ_M,
+        _PQ_SUB,
+        _ivfpq_encoded,
+    )
+
+    emb = spark.createDataFrame(
+        [(1, [0.5] * _EMBED_DIMS)], "vec_id long, embedding array<float>"
+    )
+    cents = [[[0.0] * _PQ_SUB, [1.0] * _PQ_SUB] for _ in range(_PQ_M)]
+    cells = [[0] * _EMBED_DIMS]
+    plan = (
+        _ivfpq_encoded(spark, "", cents=cents, cells=cells, emb=emb)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "MapInPandas" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    projections = [l for l in plan.splitlines() if "Project" in l]
+    assert not any(
+        re.search(r"\b(transform|aggregate)\(", l) for l in projections
+    ), projections
+
+
 def test_capped_cosine_materializes_baskets_once(spark, sf_dir):
     # B59b persists the basket aggregate; all three consumers (pairs,
     # item-a marginal, item-b marginal) must read the cache, not

@@ -29,7 +29,7 @@ from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
     _pq_codes,
     _pq_exact_topk,
     _pq_sample_distortion_u,
-    _pq_trained_cb_row,
+    _pq_trained_cbs,
     _rpq_cb_row,
     _rpq_train,
     ivf_train_cells,
@@ -256,7 +256,7 @@ def _dsl_sub_dist(v, c, m):
     return d
 
 
-def _dsl_cb_row(spark, cents):
+def _dsl_cbs(cents):
     full = [
         F.array(
             *[
@@ -267,7 +267,7 @@ def _dsl_cb_row(spark, cents):
         )
         for k in range(len(cents[0]))
     ]
-    return F.broadcast(spark.range(1).select(F.array(*full).alias("cbs")))
+    return F.array(*full)
 
 
 def _dsl_rpq_cb_row(spark, cents_u):
@@ -289,13 +289,14 @@ def _dsl_rpq_cb_row(spark, cents_u):
 
 
 def _dsl_codes():
-    def argmin_code(v, m):
-        dists = F.transform(F.col("cbs"), lambda c: _dsl_sub_dist(v, c, m))
-        return F.array_position(dists, F.array_min(dists)) - 1
-
-    return F.transform(
+    dists = F.transform(
         F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-        lambda m: argmin_code(F.col("embedding"), m),
+        lambda m: F.transform(
+            F.col("cbs"), lambda c: _dsl_sub_dist(F.col("embedding"), c, m)
+        ),
+    )
+    return F.transform(
+        dists, lambda d: F.array_position(d, F.array_min(d)) - 1
     )
 
 
@@ -353,14 +354,17 @@ def test_sql_text_builders_match_dsl_trees(spark):
         ]
         for m in range(_PQ_M)
     ]
-    cb = _pq_trained_cb_row(spark, cents)
-    _assert_same_tree(cb, _dsl_cb_row(spark, cents))
+    cb = _pq_trained_cbs(cents)
+    one = spark.range(1)
+    _assert_same_tree(
+        one.select(cb.alias("cbs")), one.select(_dsl_cbs(cents).alias("cbs"))
+    )
     # Literal equality treats -0.0 == 0.0, so pin the bits separately
     want = [
         [cents[m][k][j] for m in range(_PQ_M) for j in range(_PQ_SUB)]
         for k in range(n_k)
     ]
-    got = [list(v) for v in cb.collect()[0].cbs]
+    got = [list(v) for v in one.select(cb.alias("cbs")).collect()[0].cbs]
     assert [[struct.pack(">d", x) for x in r] for r in got] == [
         [struct.pack(">d", x) for x in r] for r in want
     ]
@@ -386,14 +390,15 @@ def test_sql_text_builders_match_dsl_trees(spark):
     )
     codes = _pq_codes(emb, cb)
     _assert_same_tree(
-        codes, emb.crossJoin(cb).select("vec_id", _dsl_codes().alias("codes"))
+        codes,
+        emb.withColumn("cbs", cb).select("vec_id", _dsl_codes().alias("codes")),
     )
     qdf = emb.select(F.col("vec_id").alias("query_id"), "embedding")
     adc = _pq_adc_table(qdf, cb)
     _assert_same_tree(
         adc,
         F.broadcast(
-            qdf.crossJoin(cb).select("query_id", _dsl_adc().alias("adc"))
+            qdf.withColumn("cbs", cb).select("query_id", _dsl_adc().alias("adc"))
         ),
     )
     scored = codes.crossJoin(adc)
@@ -413,12 +418,12 @@ def test_served_frame_matches_dsl_tree(spark, sf_dir, monkeypatch):
     )
 
     got = ivfpq_incremental_served(spark, sf_dir)
-    monkeypatch.setattr(similarity2, "_pq_trained_cb_row", _dsl_cb_row)
+    monkeypatch.setattr(similarity2, "_pq_trained_cbs", _dsl_cbs)
     monkeypatch.setattr(
         similarity2,
         "_pq_adc_table",
-        lambda qdf, cb_row: F.broadcast(
-            qdf.crossJoin(cb_row).select("query_id", _dsl_adc().alias("adc"))
+        lambda qdf, cbs: F.broadcast(
+            qdf.withColumn("cbs", cbs).select("query_id", _dsl_adc().alias("adc"))
         ),
     )
     monkeypatch.setattr(similarity2, "_pq_adc_score", _dsl_adc_score)
