@@ -1752,15 +1752,21 @@ def ivf_assign_arrow(
                     needs ``codebook``, the trained PQ centroids
                     cents[m][k][j]; codes[m] is the first argmin over
                     subspace m's float distances — see pq_argmin]
-      "cell+ru"  → (id, cell_id, ru array<bigint>) — ru = xu −
-                    cu[cell], the exact integer residual; with
-                    top > 1, one row per probed cell, each with the
-                    residual w.r.t. THAT cell (what the serving ADC
-                    needs — keeping the 448×64 centroid constant out
-                    of the JVM expression tree, which blew past
-                    codegen limits at √n cells)
+      "cell+ru"  → (id, cell_id, ru array<bigint>)     [top must be 1;
+                    ru = xu − cu[cell], the exact integer residual]
       "cell+xu"  → (id, cell_id, xu array<bigint>)     [top must be 1;
                     the quantized vector, for Lloyd update sums]
+      "rcodes"   → (id, cell_id, codes array<bigint>)  [top must be 1;
+                    needs ``codebook``, the trained RESIDUAL centroids
+                    rcb[m][k][j] in micro-units; codes[m] is the first
+                    (lowest-cid) argmin of T[m] — the residual encode]
+      "radc"     → (id, cell_id, adc array<array<bigint>>) — one row
+                    per probed cell with adc = T of the residual w.r.t.
+                    THAT cell (the residual serve's ADC table)
+    where T[m][k] = Σ_j (ru[m·_PQ_SUB + j] − rcb[m][k][j])² in int64:
+    the guard below bounds every |xu|, |cu| and |rcb| by b < 2^22.5, so
+    |ru − rcb| ≤ 3b and T ≤ _PQ_SUB·9b² < 2^52: the residual table is
+    exact and its argmin ties are genuine ties.
 
     At small sizes the kernel's wall is mostly a fixed per-task cost:
     the Python worker's per-task setup plus the Arrow round trip, about
@@ -1774,21 +1780,26 @@ def ivf_assign_arrow(
     import pandas as pd
 
     C = np.asarray(cells_u, dtype=np.float64)  # (k, d) exact micro-units
+    CU = C.astype(np.int64)
     k = len(cells_u)
     top_n = min(top, k)
     C2 = (C * C).sum(axis=1)
     bound = float(np.abs(C).max(initial=0.0))
-    if emit == "cell":
-        schema = f"{id_col} long, cell_id int"
-    elif emit == "codes":
-        schema = f"{id_col} long, codes array<bigint>, cell_id int"
+    schema = f"{id_col} long, " + {
+        "cell": "cell_id int",
+        "codes": "codes array<bigint>, cell_id int",
+        "cell+ru": "cell_id int, ru array<bigint>",
+        "cell+xu": "cell_id int, xu array<bigint>",
+        "rcodes": "cell_id int, codes array<bigint>",
+        "radc": "cell_id int, adc array<array<bigint>>",
+    }[emit]
+    if emit not in ("cell", "radc") and top != 1:
+        raise ValueError(f"{emit} emits the single best cell only")
+    if emit == "codes":
         PQ = np.asarray(codebook, dtype=np.float64)  # (m, k, j)
-    elif emit == "cell+ru":
-        schema = f"{id_col} long, cell_id int, ru array<bigint>"
-    elif emit == "cell+xu":
-        schema = f"{id_col} long, cell_id int, xu array<bigint>"
-    else:  # pragma: no cover - programming error
-        raise ValueError(f"unknown emit: {emit}")
+    elif emit in ("rcodes", "radc"):
+        RCB = np.asarray(codebook, dtype=np.int64)  # (m, k, j) micro-units
+        bound = max(bound, float(np.abs(RCB).max(initial=0)))
 
     def pq_argmin(X, PQ):
         """Per subspace m, the first (lowest-id) argmin over the PQ
@@ -1808,6 +1819,12 @@ def ivf_assign_arrow(
                 dist = d * d if dist is None else dist + d * d
             codes[:, m] = dist.argmin(axis=1)  # first minimum
         return codes
+
+    def residual_table(RU):
+        """T[row][m][k], exact int64 (integer sums are order-free)."""
+        n_m, _, n_sub = RCB.shape
+        d = RU.reshape(len(RU), n_m, 1, n_sub) - RCB[None]
+        return (d * d).sum(axis=3)
 
     def kernel(batches):
         for pdf in batches:
@@ -1833,68 +1850,33 @@ def ivf_assign_arrow(
                 )
             X2 = (XU * XU).sum(axis=1)
             D = X2[:, None] - 2.0 * (XU @ C.T) + C2[None, :]
-            ids = pdf[id_col].to_numpy()
             if top_n == 1:
                 # argmin returns the FIRST minimum → lowest cell_id
-                best = D.argmin(axis=1)
-                if emit == "cell":
-                    yield pd.DataFrame(
-                        {id_col: ids, "cell_id": best.astype(np.int32)}
-                    )
-                elif emit == "codes":
-                    yield pd.DataFrame(
-                        {
-                            id_col: ids,
-                            "codes": list(pq_argmin(X, PQ)),
-                            "cell_id": best.astype(np.int32),
-                        }
-                    )
-                elif emit == "cell+ru":
-                    RU = XU.astype(np.int64) - C.astype(np.int64)[best]
-                    yield pd.DataFrame(
-                        {
-                            id_col: ids,
-                            "cell_id": best.astype(np.int32),
-                            "ru": list(RU),
-                        }
-                    )
-                else:  # cell+xu
-                    yield pd.DataFrame(
-                        {
-                            id_col: ids,
-                            "cell_id": best.astype(np.int32),
-                            "xu": list(XU.astype(np.int64)),
-                        }
-                    )
+                order = D.argmin(axis=1)[:, None]
             else:
                 # stable sort on exact-integer doubles → ties keep the
                 # lower cell_id, the oracle's (d2u, cell_id) order
                 order = np.argsort(D, axis=1, kind="stable")[:, :top_n]
-                if emit == "cell":
-                    yield pd.DataFrame(
-                        {
-                            id_col: np.repeat(ids, top_n),
-                            "cell_id": order.ravel().astype(np.int32),
-                        }
-                    )
-                else:  # cell+ru: residual w.r.t. each probed cell
-                    flat = order.ravel()
-                    RU = (
-                        XU.astype(np.int64)[
-                            np.repeat(np.arange(len(ids)), top_n)
-                        ]
-                        - C.astype(np.int64)[flat]
-                    )
-                    yield pd.DataFrame(
-                        {
-                            id_col: np.repeat(ids, top_n),
-                            "cell_id": flat.astype(np.int32),
-                            "ru": list(RU),
-                        }
-                    )
+            rows = np.repeat(np.arange(len(pdf)), order.shape[1])
+            cell = order.ravel()
+            # columns in the schema's order
+            out = {id_col: pdf[id_col].to_numpy()[rows]}
+            if emit == "codes":
+                out["codes"] = list(pq_argmin(X, PQ))
+            out["cell_id"] = cell.astype(np.int32)
+            if emit == "cell+xu":
+                out["xu"] = list(XU.astype(np.int64))
+            elif emit not in ("cell", "codes"):
+                # residual w.r.t. each emitted cell, exact integers
+                RU = XU.astype(np.int64)[rows] - CU[cell]
+                if emit == "cell+ru":
+                    out["ru"] = list(RU)
+                elif emit == "rcodes":
+                    out["codes"] = list(residual_table(RU).argmin(axis=2))
+                else:  # radc
+                    out["adc"] = [list(t) for t in residual_table(RU)]
+            yield pd.DataFrame(out)
 
-    if emit in ("codes", "cell+xu") and top != 1:
-        raise ValueError(f"{emit} emits the single best cell only")
     return df.select(id_col, vec_col).mapInPandas(kernel, schema)
 
 
@@ -2419,7 +2401,10 @@ def ivf_cell_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # integer (ru = xu - cu), which makes the ENTIRE path integer: coarse
 # assignment, residual Lloyd training, encode argmin, ADC cells, and
 # scores — no float exists anywhere, so cross-engine equality is
-# structural, not rounding-managed.
+# structural, not rounding-managed. The trained residual codebook is
+# memoized per dataset here; the encode and the per-(query, probed
+# cell) ADC tables are both taken in the IVF Arrow kernel
+# (ivf_assign_arrow's "rcodes" / "radc" emits) against that constant.
 _RPQ_CB_CACHE: dict[tuple, list] = {}
 
 
@@ -2570,17 +2555,13 @@ def _rpq_oracle() -> str:
     """
 
 
-def _rpq_residuals(
-    spark: SparkSession, sf_dir: str, fan_out=None, where=None
-):
+def _rpq_residuals(spark: SparkSession, sf_dir: str, where=None):
     """(vec_id, cell_id, ru): exact integer residual of every vector
     from its integer-argmin coarse cell, via the Arrow GEMM kernel
-    (shuffle-free map pass). ``where`` filters the SCAN before the
-    Python exchange — a post-kernel filter would not push through
-    mapInPandas, so probe-sized consumers must pass it here."""
-    e = table(spark, sf_dir, "embeddings", fan_out=fan_out).select(
-        "vec_id", "embedding"
-    )
+    (shuffle-free map pass) — the residual trainer's input. ``where``
+    filters the SCAN before the Python exchange — a post-kernel filter
+    would not push through mapInPandas."""
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     if where is not None:
         e = e.where(where)
     cells_u = ivf_train_cells_cached(spark, sf_dir)
@@ -2615,161 +2596,48 @@ def _rpq_train(spark: SparkSession, sf_dir: str) -> list:
     return cents_u
 
 
-def _rpq_cb_row(spark: SparkSession, cents_u: list) -> DataFrame:
-    """One-row broadcast relation rcbs[m][cid][j] of the trained
-    residual codebook constants, parsed from one SQL literal (see
-    ``_pq_trained_cbs``)."""
-    return F.broadcast(
-        spark.range(1).select(
-            F.expr(_sql_literal(cents_u)).alias("rcbs")
-        )
-    )
-
-
-def _rpq_sub_d2u(ru, m, cvec):
-    # integer squared L2 between residual subspace m and a centroid
-    return F.aggregate(
-        F.zip_with(
-            F.slice(ru, m * _PQ_SUB + 1, _PQ_SUB),
-            cvec,
-            lambda x, c: (x - c) * (x - c),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def _rpq_encoded(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The D29 index relation (vec_id, cell_id, codes): residual PQ
-    codes + coarse cell in one shuffle-free map pass. Unlike the RAW
-    PQ encode (whose subspace distances are FLOAT expressions that
-    must stay JVM-side in the oracle's exact evaluation order), the
-    residual path is integer end-to-end — so the code argmin is
-    computed exactly in the same Arrow pass that assigns the cell:
-    d2u products ≤ (4e6)²·8 < 2⁵³ stay exact in float64, argmin's
-    first-minimum rule IS the lowest-cid tie-break. The JVM
-    transform-over-rcbs form cost corpus × 8·16 interpreted 8-term
-    folds (~60 s of the ×100 index build)."""
-    res = _rpq_residuals(spark, sf_dir, fan_out="force")
-    if res is None:
+    """The D29 index relation (vec_id, cell_id, codes): coarse cell and
+    residual PQ codes from ONE shuffle-free Arrow pass. The residual
+    path is integer end-to-end, so the kernel takes each code as the
+    first argmin of the exact int64 residual table — the lowest-cid
+    tie-break the oracle's row_number order pins."""
+    cells_u = ivf_train_cells_cached(spark, sf_dir)
+    if not cells_u:
         return None
-    rcb = _rpq_train(spark, sf_dir)
-    import numpy as np
-    import pandas as pd
-
-    CB = np.asarray(rcb, dtype=np.float64)  # (m, k, sub) micro-units
-
-    def encode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            RU = np.array(pdf["ru"].tolist(), dtype=np.float64).reshape(
-                len(pdf), _PQ_M, 1, _PQ_SUB
-            )
-            D = ((RU - CB[None, :, :, :]) ** 2).sum(axis=3)
-            codes = D.argmin(axis=2).astype(np.int64)  # first-min = low cid
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cell_id": pdf["cell_id"],
-                    "codes": list(codes),
-                }
-            )
-
-    return res.mapInPandas(
-        encode, "vec_id long, cell_id int, codes array<bigint>"
+    e = table(spark, sf_dir, "embeddings", fan_out="force").select(
+        "vec_id", "embedding"
+    )
+    return ivf_assign_arrow(
+        e, cells_u, emit="rcodes", codebook=_rpq_train(spark, sf_dir)
     )
 
 
 def _rpq_serve(
-    spark: SparkSession,
-    sf_dir: str,
-    encoded: DataFrame,
-    static_prune: bool = False,
+    spark: SparkSession, sf_dir: str, encoded: DataFrame
 ) -> DataFrame:
     """The D29 serving tail over any index relation (inline-encoded or
-    materialized): probe-cell ranking over the query residuals'
-    coarse distances, per-(query, probed-cell) integer ADC tables,
-    salted two-stage top-k. Query-side residuals recompute from the
-    raw embeddings with the vec_id probe filter PUSHED INTO THE SCAN
-    (|corpus|/mod rows, not the corpus), so serving cost is probe
-    count × probed-cell occupancy regardless of where the index came
-    from."""
-    rcb_row = _rpq_cb_row(spark, _rpq_train(spark, sf_dir))
-    cells_u = ivf_train_cells_cached(spark, sf_dir)
-    # probe filter applied at the SCAN, then ONE Arrow pass emits the
-    # top-nprobe cells per query WITH the query's exact integer
-    # residual w.r.t. each probed cell (rq = xu − cu[probed]). The
-    # earlier JVM reconstruction re-inlined the cells constant into
-    # the expression tree twice — ~29k literals at √n cells, which
-    # blew past codegen limits and ran interpreted (137 s of the ×100
-    # serving wall); the kernel keeps the centroid matrix a numpy
-    # constant and the JVM sees only (query_id, cell_id, ru) rows.
-    e_q = (
+    materialized). With the vec_id probe filter pushed into the SCAN
+    (|corpus|/mod rows), ONE Arrow pass ranks each query's coarse cells
+    and emits, per top-nprobe cell, the integer ADC table of the
+    query's residual w.r.t. that cell; the centroid and codebook
+    matrices stay numpy constants, never JVM literals. That probe-sized
+    relation is broadcast onto the index's cell_id (its broadcast also
+    drives the index scan's dynamic partition pruning), scored and cut
+    by the salted two-stage top-k."""
+    probe_adc = ivf_assign_arrow(
         table(spark, sf_dir, "embeddings")
         .where(F.col("vec_id") % _IVFPQ_MOD == 0)
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    )
-    # persist: the probe assignment feeds BOTH the ADC-table build
-    # and the probe-cell join below — without it each consumer
-    # re-runs the scan + Arrow kernel round-trip (the before-plan's
-    # duplicated MapInPandas nodes); the relation is probe-sized
-    # (|queries|·nprobe rows), never corpus-sized (round 10)
-    probe_rq = ivf_assign_arrow(
-        e_q,
-        cells_u,
+        .select(F.col("vec_id").alias("query_id"), "embedding"),
+        ivf_train_cells_cached(spark, sf_dir),
         id_col="query_id",
         top=_IVFPQ_NPROBE,
-        emit="cell+ru",
-    ).persist()
-    adc = F.broadcast(
-        probe_rq.crossJoin(rcb_row).select(
-            "query_id",
-            "cell_id",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-                lambda m: F.transform(
-                    F.element_at(F.col("rcbs"), m + 1),
-                    lambda c: _rpq_sub_d2u(F.col("ru"), m, c),
-                ),
-            ).alias("adc"),
-        )
+        emit="radc",
+        codebook=_rpq_train(spark, sf_dir),
     )
-    probe_sel = probe_rq.select("query_id", "cell_id")
-    if static_prune:
-        # Served-store path: restrict the cell-partitioned index scan
-        # to the probed cells with a STATIC partition filter. The
-        # round-10 persist of probe_rq hides its selective probe
-        # filter inside the InMemoryRelation, which stops Catalyst
-        # injecting the dynamicpruning subquery the pre-persist plan
-        # carried — so the cell restriction is collected explicitly
-        # instead (bounded: distinct probed cells ≤ n_cells ≈ √n,
-        # the same size class as the collected codebooks) and pushed
-        # as a planning-time IN-list. Strictly stronger than DPP:
-        # unprobed cell partitions are skipped before execution, no
-        # runtime subquery. Value-identical for the inner join on
-        # cell_id: rows of unprobed cells never match probe_sel.
-        # CALLER NOTE (advice r10): static_prune=True makes plan
-        # CONSTRUCTION eager — this collect runs Spark jobs and
-        # leaves probe_rq materialized in the CacheManager until the
-        # next clearCache, so explain-only callers pay execution.
-        # The bench clears cache per pass, so the collect is always
-        # inside the timed window (no cross-pass reuse). The INSET
-        # stays consistent with the executed probe_sel because
-        # ivf_assign_arrow is deterministic (ties broken on exact
-        # integer distance then cell_id) — pinned by
-        # tests/test_plan_shape.py::test_static_inset_matches_executed_probe_cells.
-        probed = sorted(
-            r.cell_id
-            for r in probe_rq.select("cell_id").distinct().collect()
-        )
-        encoded = encoded.where(
-            F.col("cell_id").isin(probed) if probed else F.lit(False)
-        )
     scored = (
-        F.broadcast(probe_sel)
+        F.broadcast(probe_adc)
         .join(encoded, "cell_id")
-        .join(adc, ["query_id", "cell_id"])
         .select("query_id", "vec_id", _pq_adc_score().alias("score_u"))
     )
     return _served_adc(_salted_topk(scored, _IVFPQ_K, "score_u"), 1e12)
@@ -2799,9 +2667,10 @@ def ivfpq_residual_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     The asymmetric distance is cell-aware: candidate x in cell c is
     scored against the QUERY'S residual w.r.t. c — hence one ADC
     table per (query, probed cell), still |queries|·nprobe·8·16
-    integers, broadcast. Scale shape matches D28: residuals + codes +
-    cells come from one shuffle-free projection per side; serving is
-    broadcast joins + the salted two-stage top-k. (This inline form
+    integers, broadcast. Scale shape matches D28: cells + codes (corpus
+    side) and cells + ADC tables (query side) come from one
+    shuffle-free Arrow pass each; serving is one broadcast join + the
+    salted two-stage top-k. (This inline form
     re-encodes per run; D29c ``ivfpq_residual_ann_served``
     materializes the code table once and serves from it — identical
     rows, same oracle.)"""
@@ -2832,14 +2701,15 @@ def ivfpq_residual_ann_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     run after that scans only the codes; the per-run cost left is the
     query-side residual projection (probe filter pushed into the
     scan, |corpus|/mod rows) plus probed-occupancy ADC scoring.
-    Identical rows to D29 under the identical oracle. At 100 TB the
-    index partitions by cell_id in the lake and partition pruning
-    does the cell restriction for free."""
+    Identical rows to D29 under the identical oracle. The index
+    partitions by cell_id, and the broadcast probe relation prunes the
+    scan to probed cells at run time (dynamic partition pruning), so
+    building the frame runs no job."""
     cells_u = ivf_train_cells_cached(spark, sf_dir)
     if not cells_u:
         return spark.createDataFrame([], _SERVE_SCHEMA)
     encoded = read_parquet(spark, rpq_index_path(spark, sf_dir))
-    return _rpq_serve(spark, sf_dir, encoded, static_prune=True)
+    return _rpq_serve(spark, sf_dir, encoded)
 
 
 @register(

@@ -5,7 +5,9 @@ including quantization half-boundaries, ties, zero vectors, and
 negative components; emits must agree across modes. The PQ codes it
 emits next to the cell must equal the SQL fold's (``_pq_codes``) on
 the fixture corpus, on vectors placed exactly at centroids and under a
-duplicated centroid (exact ties)."""
+duplicated centroid (exact ties); the residual codes and ADC tables
+must equal a pure-Python integer reference, duplicated residual
+centroid included."""
 
 from __future__ import annotations
 
@@ -69,6 +71,17 @@ def _py_assign(vecs, cells_u, top):
         )
         out[vid] = [cid for _, cid in ranked[:top]]
     return out
+
+
+def _py_residual_table(ru, rcb):
+    """T[m][k] = Σ_j (ru[m·_PQ_SUB + j] − rcb[m][k][j])², pure ints."""
+    return [
+        [
+            sum((ru[m * _PQ_SUB + j] - c[j]) ** 2 for j in range(_PQ_SUB))
+            for c in rcb[m]
+        ]
+        for m in range(_PQ_M)
+    ]
 
 
 def _adversarial_corpus():
@@ -138,6 +151,45 @@ def test_kernel_matches_integer_spec_all_emits(spark):
         xu = [_q(float(x)) for x in f32[r.vec_id]]
         cu = cells_u[r.cell_id]
         assert list(r.ru) == [xu[j] - cu[j] for j in range(_DIMS)]
+
+    # rcodes / radc: the residual codebook's centroid 0 is zero, 1–3
+    # are residual subvectors of corpus rows, and 4 duplicates 1, so
+    # row 1 ties exactly between 1 and 4 in every subspace: the first
+    # (lowest-cid) minimum must win, in the codes and in the reference
+    def ru_of(vid, cell):
+        xu = [_q(float(x)) for x in f32[vid]]
+        return [a - b for a, b in zip(xu, cells_u[cell])]
+
+    rrows = [[0] * _DIMS] + [ru_of(v, want1[v][0]) for v in (1, 2, 6, 1)]
+    rcb = [
+        [r[m * _PQ_SUB : (m + 1) * _PQ_SUB] for r in rrows]
+        for m in range(_PQ_M)
+    ]
+    got = {
+        r.vec_id: (r.cell_id, list(r.codes))
+        for r in ivf_assign_arrow(
+            df, cells_u, emit="rcodes", codebook=rcb
+        ).collect()
+    }
+    want = {}
+    for vid, (cell,) in want1.items():
+        t = _py_residual_table(ru_of(vid, cell), rcb)
+        want[vid] = (cell, [tm.index(min(tm)) for tm in t])
+    assert got == want
+    assert want[1][1] == [1] * _PQ_M
+    assert all(4 not in codes for _, codes in want.values())
+    for top in (1, 3):
+        got = {}
+        for r in ivf_assign_arrow(
+            df, cells_u, top=top, emit="radc", codebook=rcb
+        ).collect():
+            got.setdefault(r.vec_id, []).append(
+                (r.cell_id, [list(t) for t in r.adc])
+            )
+        assert got == {
+            vid: [(c, _py_residual_table(ru_of(vid, c), rcb)) for c in cells]
+            for vid, cells in _py_assign(vecs32, cells_u, top).items()
+        }, top
 
     # cell+xu: the quantized vector itself
     for r in ivf_assign_arrow(df, cells_u, emit="cell+xu").collect():
@@ -238,12 +290,26 @@ def test_non_finite_input_raises(spark):
     no engine-agreed argmin: the kernel raises instead of emitting."""
     cells_u = [[0] * _DIMS]
     cents = [[[0.0] * _PQ_SUB] for _ in range(_PQ_M)]
+    rcb = [[[0] * _PQ_SUB] for _ in range(_PQ_M)]
     for bad in (float("nan"), float("inf")):
         df = spark.createDataFrame(
             [(1, [bad] + [0.0] * (_DIMS - 1))],
             "vec_id long, embedding array<float>",
         )
-        with pytest.raises(Exception, match="non-finite"):
-            ivf_assign_arrow(
-                df, cells_u, emit="codes", codebook=cents
-            ).collect()
+        for emit, codebook in (
+            ("codes", cents),
+            ("rcodes", rcb),
+            ("radc", rcb),
+        ):
+            with pytest.raises(Exception, match="non-finite"):
+                ivf_assign_arrow(
+                    df, cells_u, emit=emit, codebook=codebook
+                ).collect()
+
+
+def test_single_cell_emits_reject_top(spark):
+    """Only "cell" and "radc" emit more than the best cell per row."""
+    df = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    for emit in ("codes", "cell+ru", "cell+xu", "rcodes"):
+        with pytest.raises(ValueError, match="single best cell"):
+            ivf_assign_arrow(df, [[0] * _DIMS], top=2, emit=emit)

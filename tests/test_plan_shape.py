@@ -484,11 +484,24 @@ def test_capped_cosine_materializes_baskets_once(spark, sf_dir):
 
 
 def test_residual_ivfpq_never_shuffles_corpus_joins(spark, sf_dir):
-    # D29 mirrors D28's serving shape: broadcast probe/ADC joins onto
-    # the encoded corpus, salted top-k — no sort-merge, no cartesian.
-    plan = plan_of(spark, sf_dir, "ivfpq_residual_ann")
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
+    """D29/D29c mirror D28's serving shape: ONE Arrow pass emits each
+    query's probed cells with their ADC tables, broadcast onto the
+    encoded corpus, then the salted top-k — no sort-merge, no
+    cartesian, no one-row codebook relation (a nested-loop join) and no
+    persisted probe relation. The served plan's only Python pass is
+    that probe kernel (its dynamic-pruning subquery prints the same
+    node); the inline plan adds the corpus encode."""
+    for name, kernels in (
+        ("ivfpq_residual_ann", 2),
+        ("ivfpq_residual_ann_served", 1),
+    ):
+        plan = plan_of(spark, sf_dir, name)
+        assert "SortMergeJoin" not in plan, name
+        assert "CartesianProduct" not in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
+        assert "InMemoryRelation" not in plan, name
+        nodes = set(re.findall(r"MapInPandas kernel\(.*?\)#(\d+)", plan))
+        assert len(nodes) == kernels, (name, nodes)
 
 
 def test_sq8_encoding_never_shuffles_corpus(spark, sf_dir):
@@ -562,59 +575,6 @@ def test_cell_partitioned_index_prunes_dynamically(spark, sf_dir):
     for name in ("ivfpq_ann_served", "ivfpq_residual_ann_served"):
         plan = plan_of(spark, sf_dir, name)
         assert "dynamicpruning" in plan.lower(), name
-    # D29c additionally pushes the probed cells as a STATIC planning-
-    # time partition filter (round 10: the probe-relation persist hid
-    # its selective filter inside the InMemoryRelation, so the cell
-    # restriction is collected — bounded by n_cells — and inlined;
-    # unprobed cell partitions are skipped before execution).
-    plan = plan_of(spark, sf_dir, "ivfpq_residual_ann_served")
-    assert re.search(r"PartitionFilters:.*cell_id#\d+ INSET", plan), (
-        "static probed-cell partition filter missing from the "
-        "residual serve scan"
-    )
-
-
-def test_static_inset_matches_executed_probe_cells(spark, sf_dir):
-    """Advice r10: the D29c static INSET is collected from the probe
-    relation at PLAN-BUILD time, while the join's probe_sel side is
-    re-executed — the two are only value-identical because
-    ivf_assign_arrow is deterministic. Pin that: the INSET cell list
-    in the executed plan must equal the cell set an independent,
-    uncached probe assignment produces, so the static filter and the
-    join input cannot silently diverge (a divergence would drop
-    newly-probed cells from the index scan)."""
-    from pyspark.sql import functions as F
-
-    from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
-        _IVFPQ_MOD,
-        _IVFPQ_NPROBE,
-        ivf_assign_arrow,
-        ivf_train_cells_cached,
-    )
-    from spotify_podcasts_airflow_batch_spark.sources.readers import table
-
-    plan = plan_of(spark, sf_dir, "ivfpq_residual_ann_served")
-    m = re.search(
-        r"PartitionFilters: \[cell_id#\d+ INSET ([0-9, ]+)[\],]", plan
-    )
-    assert m, "INSET literal list not found in the serve plan"
-    inset_cells = {int(c) for c in m.group(1).split(",")}
-
-    # independent recompute, no cache in the lineage (fresh kernel run)
-    spark.catalog.clearCache()
-    e_q = (
-        table(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") % _IVFPQ_MOD == 0)
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    )
-    cells_u = ivf_train_cells_cached(spark, sf_dir)
-    probe = ivf_assign_arrow(
-        e_q, cells_u, id_col="query_id", top=_IVFPQ_NPROBE, emit="cell+ru"
-    )
-    executed_cells = {
-        r.cell_id for r in probe.select("cell_id").distinct().collect()
-    }
-    assert inset_cells == executed_cells
 
 
 def test_dtw_cap_compiles_to_window_group_limit(spark, sf_dir):

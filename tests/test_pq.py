@@ -30,17 +30,18 @@ from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
     _pq_exact_topk,
     _pq_sample_distortion_u,
     _pq_trained_cbs,
-    _rpq_cb_row,
     _rpq_train,
     ivf_train_cells,
     ivfpq_ann_served,
     ivfpq_recall,
+    ivfpq_residual_ann_served,
     mips_brute,
     pq_adc_ann,
     pq_adc_recall,
     pq_train_codebook,
 )
 from spotify_podcasts_airflow_batch_spark.sources.readers import table
+from tests.conftest import jobs_run
 
 
 def test_lloyd_training_reduces_distortion(spark, sf_dir):
@@ -237,6 +238,22 @@ def test_residual_training_matches_independent_python_reference(
     )
 
 
+def test_residual_served_frame_job_count(spark, sf_dir):
+    """Once the D29c index and the residual codebook are memoized,
+    building the served frame runs no job: the probed cells reach the
+    index scan through the broadcast join's dynamic partition pruning,
+    not through a collect at plan-build time. Collecting it runs 4
+    jobs, and nothing is left in the cache."""
+    ivfpq_residual_ann_served(spark, sf_dir)  # first-call memo fills
+    spark.catalog.clearCache()
+    frame = []
+    assert jobs_run(
+        spark, lambda: frame.append(ivfpq_residual_ann_served(spark, sf_dir))
+    ) == 0
+    assert jobs_run(spark, frame[0].collect) == 4
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 # ------------------------------------------------------------------
 # The PQ constants and per-row PQ expressions are built as SQL text
 # (one Py4J round trip each). The Column-DSL builders below are the
@@ -268,24 +285,6 @@ def _dsl_cbs(cents):
         for k in range(len(cents[0]))
     ]
     return F.array(*full)
-
-
-def _dsl_rpq_cb_row(spark, cents_u):
-    return F.broadcast(
-        spark.range(1).select(
-            F.array(
-                *[
-                    F.array(
-                        *[
-                            F.array(*[F.lit(v) for v in cents_u[m][k]])
-                            for k in range(len(cents_u[m]))
-                        ]
-                    )
-                    for m in range(_PQ_M)
-                ]
-            ).alias("rcbs")
-        )
-    )
 
 
 def _dsl_codes():
@@ -340,11 +339,10 @@ def _assert_same_tree(got, want):
 
 @pytest.mark.fast
 def test_sql_text_builders_match_dsl_trees(spark):
-    """Codebook, residual codebook, codes, ADC table and ADC score
-    built from SQL text are semantically identical to the DSL form.
-    The centroids carry negatives, exponent-form reprs, -0.0 and
-    fewer than _PQ_K rows (the LIMIT-bounded small-corpus case); the
-    residual codebook mixes INT- and BIGINT-typed integers."""
+    """Codebook, codes, ADC table and ADC score built from SQL text
+    are semantically identical to the DSL form. The centroids carry
+    negatives, exponent-form reprs, -0.0 and fewer than _PQ_K rows
+    (the LIMIT-bounded small-corpus case)."""
     vals = [0.5, -0.25, 1e-06, -5e-07, -0.0, 0.0, 0.123456, -3.0, 1e22]
     n_k = 3  # fewer than _PQ_K centroids
     cents = [
@@ -368,18 +366,6 @@ def test_sql_text_builders_match_dsl_trees(spark):
     assert [[struct.pack(">d", x) for x in r] for r in got] == [
         [struct.pack(">d", x) for x in r] for r in want
     ]
-
-    ints = [0, -1, 7, -(2**31), 2**31 - 1, 2**31, -(2**31) - 1, 4_000_000]
-    cents_u = [
-        [
-            [ints[(m + k * 5 + j) % len(ints)] for j in range(_PQ_SUB)]
-            for k in range(n_k)
-        ]
-        for m in range(_PQ_M)
-    ]
-    _assert_same_tree(
-        _rpq_cb_row(spark, cents_u), _dsl_rpq_cb_row(spark, cents_u)
-    )
 
     emb = spark.range(3).select(
         F.col("id").alias("vec_id"),
