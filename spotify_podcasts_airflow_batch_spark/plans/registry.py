@@ -96,6 +96,8 @@ _CHANGED_SINCE_DRIVER_ROW = (
     "domain_quota_cap",
     "quantile_normalize_grid",
     "fold_balance_audit",
+    # the D26 training-path twin, rows-only until it took D25's oracle
+    "pq_trained_recall",
 )
 
 _DRIVER_HEAD = (
@@ -105,10 +107,10 @@ _DRIVER_HEAD = (
     # -- changed after their last driver row (see above)
     *_CHANGED_SINCE_DRIVER_ROW,
     # -- freshness rotation (VERDICT r10 follow-up #2): the A-family
-    #    representative whose last row is r9, then the 36 stalest
-    #    oracle-bearing keys (31 last verified in r3 — the set the
-    #    round-10 rotation deferred — plus 5 of the r4 wave), sorted
-    #    by last-driver-row round then registry order
+    #    representative whose last row is r9, then 34 of the stalest
+    #    oracle-bearing keys (last verified in r3 — the set the
+    #    round-10 rotation deferred — or in the r4 wave), sorted by
+    #    last-driver-row round then registry order
     "chart_rank_move",
     "scd2_lookup",
     "episode_enrich",
@@ -144,7 +146,6 @@ _DRIVER_HEAD = (
     "corr_matrix",
     "join_skew_report",
     "fk_integrity_audit",
-    "pk_uniqueness_audit",
 )
 
 

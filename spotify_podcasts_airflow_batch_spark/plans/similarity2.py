@@ -853,16 +853,16 @@ def pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     control (``pq_sampled_recall``).
 
     Training contracts to 8x16x8 values driver-side; the full-corpus
-    encode then sees the frozen centroids as ONE constant-folded
-    literal codebook column — at 100 TB the training sample is
-    fixed-size and the corpus only ever meets the constant. Encoding is
-    a PURE PROJECTION: every subspace argmin evaluates JVM-side over
-    expression-generated fold distances, and NOTHING shuffles until
-    the final top-k. ADC cells quantize to BIGINT micro-units so each
-    (query, vector) score is an exact integer sum — bit-equal to the
-    oracle regardless of aggregation order. Top-k per query runs the
-    two-stage salted window (per-salt top-k, then global top-k over
-    <= salts*k rows) so no single task ever sees the corpus.
+    encode then sees the frozen centroids as a constant of the Arrow
+    kernel (``_pq_encode``: an IVF-PQ encode with one zero cell) — at
+    100 TB the training sample is fixed-size and the corpus only ever
+    meets the constant. Encoding is a map over the corpus, and NOTHING
+    shuffles until the final top-k. ADC cells quantize to BIGINT
+    micro-units so each (query, vector) score is an exact integer sum
+    — bit-equal to the oracle regardless of aggregation order. Top-k
+    per query runs the two-stage salted window (per-salt top-k, then
+    global top-k over <= salts*k rows) so no single task ever sees the
+    corpus.
 
     At 100 TB: the code table is ~4 bytes/vector (10^4 x smaller than
     the float corpus), the ADC scan is embarrassingly parallel over
@@ -876,14 +876,13 @@ def pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not cents or not cents[0]:
         # empty embeddings table → no codebook, no probes
         return spark.createDataFrame([], _SERVE_SCHEMA)
-    cbs = _pq_trained_cbs(cents)
     emb = table(spark, sf_dir, "embeddings", fan_out="force").select(
         "vec_id", "embedding"
     )
     emb_1t = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    return _served_adc(_pq_adc_topk(emb, emb_1t, cbs))
+    return _served_adc(_pq_adc_topk(_pq_encode(emb, cents), emb_1t, cents))
 
 
 def pq_codes_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -892,7 +891,7 @@ def pq_codes_index_path(spark: SparkSession, sf_dir: str) -> str:
         emb = table(spark, sf_dir, "embeddings", fan_out="force").select(
             "vec_id", "embedding"
         )
-        return _pq_codes(emb, _pq_trained_cbs(cents))
+        return _pq_encode(emb, cents)
 
     return materialized_index_path(spark, sf_dir, "pqcodes", build)
 
@@ -910,12 +909,11 @@ def pq_adc_ann_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = pq_train_codebook_cached(spark, sf_dir)
     if not cents or not cents[0]:
         return spark.createDataFrame([], _SERVE_SCHEMA)
-    cbs = _pq_trained_cbs(cents)
     codes = read_parquet(spark, pq_codes_index_path(spark, sf_dir))
     emb_1t = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    return _served_adc(_pq_adc_topk_from_codes(codes, emb_1t, cbs))
+    return _served_adc(_pq_adc_topk(codes, emb_1t, cents))
 
 
 # PQ constants and per-row PQ expressions are Spark SQL text parsed by
@@ -930,17 +928,15 @@ def pq_adc_ann_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_literal(v) -> str:
     """``v`` as a Spark SQL literal typed as ``F.lit(v)`` types it over
     Py4J: a float is a DOUBLE (``repr`` round-trips exactly, and
-    ``-x.yD`` lexes as a negative literal, so -0.0 survives), an int
-    is INT when it fits in 32 bits, else BIGINT; lists nest as
-    ``array(...)``."""
+    ``-x.yD`` lexes as a negative literal, so -0.0 survives); lists
+    nest as ``array(...)``. Only float codebooks come through here, so
+    any other type (an int included) raises ``TypeError``."""
     if isinstance(v, list):
         return "array(" + ", ".join(_sql_literal(x) for x in v) + ")"
     if isinstance(v, float):
         if not math.isfinite(v):
             raise ValueError(f"no SQL literal for {v!r}")
         return f"{float(v)!r}D"
-    if isinstance(v, int):
-        return str(v) if -(2**31) <= v < 2**31 else f"{v}L"
     raise TypeError(f"no SQL literal for {type(v).__name__}")
 
 
@@ -956,16 +952,6 @@ def _pq_sub_dist_sql() -> str:
     return " + ".join(f"{d} * {d}" for d in diffs)
 
 
-# dists[m][c] = subspace m's distance to centroid c of the ``cbs`` codebook
-_PQ_DISTS_SQL = (
-    f"transform(sequence(0, {_PQ_M - 1}), pq_m -> "
-    f"transform(cbs, pq_c -> {_pq_sub_dist_sql()}))"
-)
-# codes[m] = first (lowest-id) argmin of dists[m], each array built once
-_PQ_CODES_SQL = (
-    f"transform({_PQ_DISTS_SQL}, "
-    "pq_d -> array_position(pq_d, array_min(pq_d)) - 1)"
-)
 # adc[m][c] = round(subspace distance * 1e6) in BIGINT micro-units
 _PQ_ADC_SQL = (
     f"transform(sequence(0, {_PQ_M - 1}), pq_m -> transform(cbs, pq_c -> "
@@ -1063,13 +1049,14 @@ def _pq_lloyd_u(
     return cents_u
 
 
-def _pq_codes(emb, cbs) -> DataFrame:
-    """Projection encode: every vector's 8 subspace argmin codes
-    against the codebook column ``cbs`` (full 64-dim centroids).
-    Shuffle-free."""
-    return emb.withColumn("cbs", cbs).select(
-        "vec_id", F.expr(_PQ_CODES_SQL).alias("codes")
-    )
+def _pq_encode(emb, cents) -> DataFrame:
+    """Flat PQ encode: (vec_id, codes) of every vector against the
+    trained centroids ``cents[m][k][j]``. A flat PQ is an IVF-PQ with
+    one cell, so this is ``ivf_assign_arrow``'s codes emit over a
+    single zero cell. Shuffle-free."""
+    return ivf_assign_arrow(
+        emb, [[0] * _EMBED_DIMS], emit="codes", codebook=cents
+    ).select("vec_id", "codes")
 
 
 def _pq_adc_table(qdf, cbs) -> DataFrame:
@@ -1146,15 +1133,16 @@ def _pq_probes(emb_1t: DataFrame, *cols) -> DataFrame:
     )
 
 
-def _pq_recall(
-    emb_1t: DataFrame, cand: DataFrame, exact: DataFrame | None = None
-) -> DataFrame:
+_PQ_RECALL_SCHEMA = "query_id long, n_hits long, recall_bp long"
+
+
+def _pq_recall(emb_1t: DataFrame, cand: DataFrame) -> DataFrame:
     """Recall@_PQ_TOPK of ``cand`` over the flat-PQ probes against the
-    exact L2 top-k (``_pq_exact_topk(emb_1t)`` unless given); the
-    query's own row stays in the corpus (see pq_adc_recall)."""
-    if exact is None:
-        exact = _pq_exact_topk(emb_1t)
-    return _recall_report(_pq_probes(emb_1t), exact, cand, _PQ_TOPK)
+    exact L2 top-k (``_pq_exact_topk(emb_1t)``); the query's own row
+    stays in the corpus (see pq_adc_recall)."""
+    return _recall_report(
+        _pq_probes(emb_1t), _pq_exact_topk(emb_1t), cand, _PQ_TOPK
+    )
 
 
 def _ivf_probes(emb_1t: DataFrame, *cols) -> DataFrame:
@@ -1187,22 +1175,17 @@ def _ivfpq_recall(
     return _recall_report(qdf.select("query_id"), exact, cand, _IVFPQ_K)
 
 
-def _pq_adc_topk(emb, emb_1t, cbs) -> DataFrame:
-    """Shared D24/D26 machinery: projection encode against the
-    ``cbs`` codebook column (sampled or trained), integer
-    ADC scoring, two-stage salted top-k. Returns (query_id, rank,
-    vec_id, score_u)."""
-    return _pq_adc_topk_from_codes(_pq_codes(emb, cbs), emb_1t, cbs)
-
-
-def _pq_adc_topk_from_codes(codes, emb_1t, cbs, qdf=None) -> DataFrame:
-    """The D24 serving tail over any (vec_id, codes) relation —
-    inline-encoded or materialized. ``qdf`` (query_id, embedding)
-    overrides the default probe set (the _PQ_NQ smallest vec_ids) —
-    the D37b dial passes its wide probe slice."""
+def _pq_adc_topk(codes, emb_1t, cents, qdf=None) -> DataFrame:
+    """The flat-PQ serving tail over any (vec_id, codes) relation —
+    inline-encoded (``_pq_encode``) or materialized — against the
+    centroids ``cents`` (sampled or trained): per-query integer ADC
+    tables, exact ADC scores, two-stage salted top-k. ``qdf``
+    (query_id, embedding) overrides the default probe set (the _PQ_NQ
+    smallest vec_ids) — the D37b dial passes its wide probe slice.
+    Returns (query_id, rank, vec_id, score_u)."""
     if qdf is None:
         qdf = _pq_probes(emb_1t, "embedding")
-    q = _pq_adc_table(qdf, cbs)
+    q = _pq_adc_table(qdf, _pq_trained_cbs(cents))
 
     scored = codes.crossJoin(q).select(
         "query_id",
@@ -1340,23 +1323,17 @@ def pq_sampled_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_1t = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    # codebook column: the 16 first embeddings in vec_id order, as a
-    # scalar subquery
-    cbs = (
-        emb_1t.orderBy("vec_id")
-        .limit(_PQ_K)
-        .agg(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(F.struct("vec_id", "embedding"))
-                ),
-                lambda s: s["embedding"],
-            )
-        )
-        .scalar()
-    )
-    cand = _pq_adc_topk(emb, emb_1t, cbs).select("query_id", "vec_id")
-    return _pq_recall(emb_1t, cand)
+    # codebook: the 16 first embeddings in vec_id order, collected
+    # once as cents[m][k][j] (float32 widens to double exactly)
+    seeds = emb_1t.orderBy("vec_id").limit(_PQ_K).collect()
+    if not seeds:
+        return spark.createDataFrame([], _PQ_RECALL_SCHEMA)
+    cents = [
+        [r.embedding[m * _PQ_SUB : (m + 1) * _PQ_SUB] for r in seeds]
+        for m in range(_PQ_M)
+    ]
+    cand = _pq_adc_topk(_pq_encode(emb, cents), emb_1t, cents)
+    return _pq_recall(emb_1t, cand.select("query_id", "vec_id"))
 
 
 # ---------------------------------------------------------------- D26
@@ -1419,9 +1396,10 @@ def pq_train_codebook(
 
 
 def _pq_trained_cbs(cents) -> Column:
-    """Codebook column for the D24 encode machinery: the 16 trained
-    centroids re-assembled to full 64-dim vectors (subspace m of
-    centroid k = cents[m][k]) as a constant-folded literal array.
+    """Codebook column for the query-side ADC table
+    (``_pq_adc_table``): the 16 trained centroids re-assembled to full
+    64-dim vectors (subspace m of centroid k = cents[m][k]) as a
+    constant-folded literal array.
     The array is ONE SQL literal (``_sql_literal``): one Py4J round
     trip, where a Column per value costs one each (~1,000). As a
     literal column it needs no join, so no job broadcasts it."""
@@ -1434,39 +1412,34 @@ def _pq_trained_cbs(cents) -> Column:
     return F.expr(_sql_literal(full))
 
 
-@register("pq_trained_recall", oracle=None)  # rows-only: training-path twin
+# training-path twin of D25: same value by construction, same oracle
+@register("pq_trained_recall", oracle=_pq_recall_oracle(_pq_trained_oracle()))
 def pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D26 — recall@5 under the trained PQ codebook via the
-    INDEPENDENT training path: exercises ``pq_train_codebook`` +
-    ``_pq_trained_cbs`` directly rather than going through the
-    registered D24 serving query, so a regression in either half
-    shows up as a D25/D26 split. Since round 5 the training loop is
-    pure BIGINT micro-units and D24 itself serves the trained
-    codebook with a full unrolled-Lloyd oracle — this entry stays
-    rows-only as the structural twin (its value equals D25's by
-    construction; equality is the cross-check). Lloyd's distortion
-    monotonicity (trained <= seed on the training sample) is asserted
-    in tests/test_pq.py (0.74 -> 0.49 at sf0.01; recall +1000 bp at
-    sf0.1), and the recall schema matches D25 so the dials
-    read side by side."""
+    INDEPENDENT training path: exercises ``pq_train_codebook`` and the
+    encode directly rather than going through the registered D24
+    serving query, so a regression in either half shows up as a
+    D25/D26 split. The training loop is pure BIGINT micro-units, so
+    the value equals D25's by construction and D25's oracle (the
+    unrolled-Lloyd candidates graded against exact L2) hash-checks it
+    too. Lloyd's distortion monotonicity (trained <= seed on the
+    training sample) is asserted in tests/test_pq.py (0.74 -> 0.49 at
+    sf0.01; recall +1000 bp at sf0.1), and the recall schema matches
+    D25 so the dials read side by side."""
     cents = pq_train_codebook_cached(spark, sf_dir)
     if not cents or not cents[0]:
         # empty embeddings table → no codebook, no probes: empty
         # result with the contract schema (same guard family as the
         # kNN/PCA contractions)
-        return spark.createDataFrame(
-            [], "query_id long, n_hits long, recall_bp long"
-        )
-    cbs = _pq_trained_cbs(cents)
+        return spark.createDataFrame([], _PQ_RECALL_SCHEMA)
     emb = table(spark, sf_dir, "embeddings", fan_out="force").select(
         "vec_id", "embedding"
     )
     emb_1t = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    cand = _pq_adc_topk(emb, emb_1t, cbs).select("query_id", "vec_id")
-    exact = _pq_exact_topk(emb_1t).select("query_id", "vec_id")
-    return _pq_recall(emb_1t, cand, exact)
+    cand = _pq_adc_topk(_pq_encode(emb, cents), emb_1t, cents)
+    return _pq_recall(emb_1t, cand.select("query_id", "vec_id"))
 
 
 # ---------------------------------------------------------------- D28
@@ -1751,7 +1724,9 @@ def ivf_assign_arrow(
       "codes"    → (id, codes array<bigint>, cell_id)  [top must be 1;
                     needs ``codebook``, the trained PQ centroids
                     cents[m][k][j]; codes[m] is the first argmin over
-                    subspace m's float distances — see pq_argmin]
+                    subspace m's float distances — see pq_argmin. Flat
+                    PQ and OPQ are a single zero cell (``_pq_encode``);
+                    this is the package's only PQ encode]
       "cell+ru"  → (id, cell_id, ru array<bigint>)     [top must be 1;
                     ru = xu − cu[cell], the exact integer residual]
       "cell+xu"  → (id, cell_id, xu array<bigint>)     [top must be 1;
@@ -1897,13 +1872,12 @@ def _ivfpq_encoded(
 
     The kernel that assigns the cell also takes each subspace's PQ
     code, so the vectors never return to the JVM. The codes equal the
-    SQL fold's (``_PQ_CODES_SQL``, which ``_pq_codes`` and the oracle's
-    CASE chain compute): the kernel builds every distance with the same
+    oracle's CASE chain: the kernel builds every distance with the same
     IEEE double operations in the same order (float32 widened to
     double, d·d, the 8 terms added left to right) and takes the FIRST
-    minimum, so exact ties resolve to the lowest centroid id as
-    ``array_position(d, array_min(d))`` does; non-finite input
-    raises."""
+    minimum, so exact ties resolve to the lowest centroid id; the Spark
+    fold in tests/pq_fold.py is the reference it is checked against.
+    Non-finite input raises."""
     if cents is None:
         cents = pq_train_codebook_cached(spark, sf_dir)
     if cells is None:
@@ -3351,8 +3325,7 @@ def opq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb_1t = table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
-    cbs = _pq_trained_cbs(cents)
-    return _served_adc(_pq_adc_topk(emb, emb_1t, cbs))
+    return _served_adc(_pq_adc_topk(_pq_encode(emb, cents), emb_1t, cents))
 
 
 def _opq_wide_cand_sql(suffix: str, corpus: str, cbn: str, qn: str) -> str:
@@ -3489,13 +3462,11 @@ def opq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id") % _OPQ_DIAL_MOD == 0
     ).select(F.col("vec_id").alias("query_id"), "embedding")
     exact = _pq_exact_topk(raw_1t, qdf=qdf_raw, k=_PQ_TOPK)
-    cbs_id = _pq_trained_cbs(cents_id)
-    cbs_rot = _pq_trained_cbs(cents_rot)
-    cand_id = _pq_adc_topk_from_codes(
-        _pq_codes(raw_full, cbs_id), raw_1t, cbs_id, qdf=qdf_raw
+    cand_id = _pq_adc_topk(
+        _pq_encode(raw_full, cents_id), raw_1t, cents_id, qdf=qdf_raw
     ).select("query_id", "vec_id")
-    cand_rot = _pq_adc_topk_from_codes(
-        _pq_codes(rot_full, cbs_rot), rot_1t, cbs_rot, qdf=qdf_rot
+    cand_rot = _pq_adc_topk(
+        _pq_encode(rot_full, cents_rot), rot_1t, cents_rot, qdf=qdf_rot
     ).select("query_id", "vec_id")
     np_df = qdf_raw.agg(F.count(F.lit(1)).alias("n_probes"))
 

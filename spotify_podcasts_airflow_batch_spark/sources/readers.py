@@ -81,12 +81,11 @@ def table(
     under-parallel-layout staging exchange then also triggers on byte
     volume, not just row count. ``fan_out="force"`` is the tier above
     it — for passes whose CPU dwarfs even the byte heuristic, stage
-    whenever the layout is under-parallel at all: the flat-PQ encode
-    (``_pq_codes``) evaluates its 8×16 subspace distances as
-    interpreted higher-order functions per row, and the IVF-PQ encode
-    runs its cell and PQ-code argmins in an Arrow kernel whose tasks
-    each pay a fixed Python-worker cost, so a fanned-out corpus spreads
-    both over the cores. Leave it unset
+    whenever the layout is under-parallel at all: every PQ encode (flat
+    PQ, OPQ, IVF-PQ and residual IVF-PQ) runs its per-row argmins in
+    the IVF Arrow kernel (``ivf_assign_arrow``), whose tasks each pay a
+    fixed Python-worker cost, so a fanned-out corpus spreads that work
+    over the cores. Leave it unset
     for one-pass projections and aggregates — measured at sf0.1, the
     extra exchange + stage costs such plans ~3× more than the serial
     scan it replaces.

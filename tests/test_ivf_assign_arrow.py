@@ -2,16 +2,20 @@
 behind the √n-cells IVF family: distances must equal the pure-integer
 spec (quantize → squared L2 → (d2u, cell_id) argmin) bit-for-bit,
 including quantization half-boundaries, ties, zero vectors, and
-negative components; emits must agree across modes. The PQ codes it
-emits next to the cell must equal the SQL fold's (``_pq_codes``) on
-the fixture corpus, on vectors placed exactly at centroids and under a
-duplicated centroid (exact ties); the residual codes and ADC tables
-must equal a pure-Python integer reference, duplicated residual
-centroid included."""
+negative components; emits must agree across modes. The kernel is the
+package's only PQ encode: the codes it emits next to the cell, and
+the flat-PQ encode (``_pq_encode``, the same emit over one zero cell),
+must equal the reference Spark fold (tests/pq_fold.py) on the fixture
+corpus, on vectors placed exactly at centroids and under a duplicated
+centroid (exact ties); the residual codes and ADC tables must equal a
+pure-Python integer reference, duplicated residual centroid
+included."""
 
 from __future__ import annotations
 
 import math
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,20 +23,17 @@ from pyspark.sql import functions as F
 from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
     _PQ_M,
     _PQ_SUB,
-    _pq_codes,
-    _pq_trained_cbs,
+    _pq_encode,
     ivf_assign_arrow,
 )
+from tests.pq_fold import fold_codes
 
 _DIMS = 64
 
 
-def _fold_codes(df, cents):
-    """vec_id → codes from the JVM SQL fold, the reference."""
-    return {
-        r.vec_id: list(r.codes)
-        for r in _pq_codes(df, _pq_trained_cbs(cents)).collect()
-    }
+def _flat_codes(df, cents):
+    """vec_id → codes from the flat-PQ encode (one zero cell)."""
+    return {r.vec_id: list(r.codes) for r in _pq_encode(df, cents).collect()}
 
 
 def _kernel_codes(df, cells_u, cents):
@@ -207,8 +208,9 @@ def test_kernel_matches_integer_spec_all_emits(spark):
         for m in range(_PQ_M)
     ]
     got = _kernel_codes(df, cells_u, cents)
-    want = _fold_codes(df, cents)
+    want = fold_codes(df, cents)
     assert {vid: codes for vid, (codes, _) in got.items()} == want
+    assert _flat_codes(df, cents) == want
     assert {vid: [cell] for vid, (_, cell) in got.items()} == want1
     # centroid-located rows code to their own centroid; the duplicate
     # (id 4) never wins over id 1
@@ -261,9 +263,10 @@ def test_kernel_matches_jvm_fold_on_fixture_corpus(spark, sf_dir):
 
 
 def test_codes_match_sql_fold_on_fixture_corpus(spark, sf_dir):
-    """The kernel's PQ codes under the trained codebook equal the SQL
-    fold's on the real fixture embeddings, and its cells equal the
-    cell emit's."""
+    """The kernel's PQ codes under the trained codebook, with the
+    trained cells and with the flat encode's one zero cell, equal the
+    reference fold's on the real fixture embeddings, and its cells
+    equal the cell emit's."""
     from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
         ivf_train_cells_cached,
         pq_train_codebook_cached,
@@ -275,9 +278,9 @@ def test_codes_match_sql_fold_on_fixture_corpus(spark, sf_dir):
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     got = _kernel_codes(e, cells_u, cents)
     assert got
-    assert {vid: codes for vid, (codes, _) in got.items()} == _fold_codes(
-        e, cents
-    )
+    want = fold_codes(e, cents)
+    assert {vid: codes for vid, (codes, _) in got.items()} == want
+    assert _flat_codes(e, cents) == want
     cell = {
         r.vec_id: r.cell_id
         for r in ivf_assign_arrow(e, cells_u, emit="cell").collect()
@@ -313,3 +316,30 @@ def test_single_cell_emits_reject_top(spark):
     for emit in ("codes", "cell+ru", "cell+xu", "rcodes"):
         with pytest.raises(ValueError, match="single best cell"):
             ivf_assign_arrow(df, [[0] * _DIMS], top=2, emit=emit)
+
+
+# a subspace argmin folded in Spark: array_position(d, array_min(...)),
+# as SQL text or through the Column DSL (F.array_position / F.array_min)
+_SPARK_ARGMIN = re.compile(
+    r"array_position\(\s*[^,()]+,\s*(?:F\.)?array_min\("
+)
+
+
+@pytest.mark.fast
+def test_pq_argmin_is_not_hand_written():
+    """Every PQ code in the package comes from ``ivf_assign_arrow``:
+    no package module builds a subspace argmin as a Spark fold again.
+    The fold lives only in tests/pq_fold.py, as the reference."""
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "spotify_podcasts_airflow_batch_spark",
+    )
+    found = []
+    for root, _, files in os.walk(pkg):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path) as fh:
+                    if _SPARK_ARGMIN.search(fh.read()):
+                        found.append(os.path.relpath(path, pkg))
+    assert not found, found

@@ -26,7 +26,7 @@ from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
     _ivf_probes,
     _pq_adc_score,
     _pq_adc_table,
-    _pq_codes,
+    _pq_encode,
     _pq_exact_topk,
     _pq_sample_distortion_u,
     _pq_trained_cbs,
@@ -42,6 +42,7 @@ from spotify_podcasts_airflow_batch_spark.plans.similarity2 import (
 )
 from spotify_podcasts_airflow_batch_spark.sources.readers import table
 from tests.conftest import jobs_run
+from tests.pq_fold import dsl_cbs, dsl_sub_dist
 
 
 def test_lloyd_training_reduces_distortion(spark, sf_dir):
@@ -254,49 +255,30 @@ def test_residual_served_frame_job_count(spark, sf_dir):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_flat_pq_job_counts(spark, sf_dir):
+    """With the codebooks memoized, collecting pq_adc_ann runs 5 jobs,
+    pq_sampled_recall 11 (its sampled codebook's collect included,
+    once) and opq_recall 18. A lost memo or a second collect shows up
+    as more."""
+    queries = all_queries()
+    want = {"pq_adc_ann": 5, "pq_sampled_recall": 11, "opq_recall": 18}
+    for key in want:
+        queries[key].spark_fn(spark, sf_dir).collect()  # memo fills
+    got = {
+        key: jobs_run(
+            spark, lambda: queries[key].spark_fn(spark, sf_dir).collect()
+        )
+        for key in want
+    }
+    assert got == want
+
+
 # ------------------------------------------------------------------
 # The PQ constants and per-row PQ expressions are built as SQL text
-# (one Py4J round trip each). The Column-DSL builders below are the
-# form they replaced, kept as the reference: the SQL text must parse
-# to the same analyzed tree, so every PQ/IVF/OPQ/ANN result is
-# unchanged by construction.
-
-
-def _dsl_sub_dist(v, c, m):
-    d = None
-    for j in range(_PQ_SUB):
-        idx = m * _PQ_SUB + F.lit(j + 1)
-        t = F.element_at(v, idx).cast("double") - F.element_at(
-            c, idx
-        ).cast("double")
-        d = t * t if d is None else d + t * t
-    return d
-
-
-def _dsl_cbs(cents):
-    full = [
-        F.array(
-            *[
-                F.lit(cents[m][k][j])
-                for m in range(_PQ_M)
-                for j in range(_PQ_SUB)
-            ]
-        )
-        for k in range(len(cents[0]))
-    ]
-    return F.array(*full)
-
-
-def _dsl_codes():
-    dists = F.transform(
-        F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-        lambda m: F.transform(
-            F.col("cbs"), lambda c: _dsl_sub_dist(F.col("embedding"), c, m)
-        ),
-    )
-    return F.transform(
-        dists, lambda d: F.array_position(d, F.array_min(d)) - 1
-    )
+# (one Py4J round trip each). The Column-DSL builders below and in
+# tests/pq_fold.py are the form they replaced, kept as the reference:
+# the SQL text must parse to the same analyzed tree, so every
+# PQ/IVF/OPQ/ANN result is unchanged by construction.
 
 
 def _dsl_adc():
@@ -305,7 +287,7 @@ def _dsl_adc():
         lambda m: F.transform(
             F.col("cbs"),
             lambda c: F.round(
-                _dsl_sub_dist(F.col("embedding"), c, m) * 1e6, 0
+                dsl_sub_dist(F.col("embedding"), c, m) * 1e6, 0
             ).cast("long"),
         ),
     )
@@ -339,8 +321,8 @@ def _assert_same_tree(got, want):
 
 @pytest.mark.fast
 def test_sql_text_builders_match_dsl_trees(spark):
-    """Codebook, codes, ADC table and ADC score built from SQL text
-    are semantically identical to the DSL form. The centroids carry
+    """Codebook, ADC table and ADC score built from SQL text are
+    semantically identical to the DSL form. The centroids carry
     negatives, exponent-form reprs, -0.0 and fewer than _PQ_K rows
     (the LIMIT-bounded small-corpus case)."""
     vals = [0.5, -0.25, 1e-06, -5e-07, -0.0, 0.0, 0.123456, -3.0, 1e22]
@@ -355,7 +337,7 @@ def test_sql_text_builders_match_dsl_trees(spark):
     cb = _pq_trained_cbs(cents)
     one = spark.range(1)
     _assert_same_tree(
-        one.select(cb.alias("cbs")), one.select(_dsl_cbs(cents).alias("cbs"))
+        one.select(cb.alias("cbs")), one.select(dsl_cbs(cents).alias("cbs"))
     )
     # Literal equality treats -0.0 == 0.0, so pin the bits separately
     want = [
@@ -374,11 +356,6 @@ def test_sql_text_builders_match_dsl_trees(spark):
             lambda i: (i / 97.0 - F.col("id")).cast("float"),
         ).alias("embedding"),
     )
-    codes = _pq_codes(emb, cb)
-    _assert_same_tree(
-        codes,
-        emb.withColumn("cbs", cb).select("vec_id", _dsl_codes().alias("codes")),
-    )
     qdf = emb.select(F.col("vec_id").alias("query_id"), "embedding")
     adc = _pq_adc_table(qdf, cb)
     _assert_same_tree(
@@ -387,7 +364,7 @@ def test_sql_text_builders_match_dsl_trees(spark):
             qdf.withColumn("cbs", cb).select("query_id", _dsl_adc().alias("adc"))
         ),
     )
-    scored = codes.crossJoin(adc)
+    scored = _pq_encode(emb, cents).crossJoin(adc)
     _assert_same_tree(
         scored.select(_pq_adc_score().alias("score_u")),
         scored.select(_dsl_adc_score().alias("score_u")),
@@ -404,7 +381,7 @@ def test_served_frame_matches_dsl_tree(spark, sf_dir, monkeypatch):
     )
 
     got = ivfpq_incremental_served(spark, sf_dir)
-    monkeypatch.setattr(similarity2, "_pq_trained_cbs", _dsl_cbs)
+    monkeypatch.setattr(similarity2, "_pq_trained_cbs", dsl_cbs)
     monkeypatch.setattr(
         similarity2,
         "_pq_adc_table",
